@@ -18,6 +18,24 @@ import org.apache.spark.sql.SparkSession
   * control window).
   */
 object Bench {
+  /** The (sf, per-query Spark seconds) of a dual-run reference file —
+    * the `BENCH_BOTH.json` layout, `{"sf": ..., "queries": {name:
+    * {"spark": s, ...}}}`, in any JSON formatting. Left is `missing`
+    * when no such file exists and `format_mismatch:<path>` when it
+    * holds no per-query Spark times. */
+  private[graft] def readRefTimes(path: String): Either[String, (String, Map[String, Double])] =
+    if (!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path))) Left("missing")
+    else try {
+      import scala.jdk.CollectionConverters._
+      val root = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(path))
+      val times = root.path("queries").properties().asScala.iterator
+        .map(e => e.getKey -> e.getValue.path("spark"))
+        .collect { case (q, t) if t.isNumber => q -> t.asDouble }.toMap
+      if (times.isEmpty) Left(s"format_mismatch:$path")
+      else Right((root.path("sf").asText(), times))
+    } catch { case scala.util.control.NonFatal(_) => Left(s"format_mismatch:$path") }
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // locale-free string ops (see Verify)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -253,21 +271,14 @@ object Bench {
     ).flatten
     var xchkRef: String = "missing"
     val refTimes: Map[String, Double] = refCandidates.iterator.flatMap { p =>
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8")
+      readRefTimes(p) match {
         // reference times are only comparable at the SAME scale factor:
         // a reference recorded against another sf would flag the whole
         // suite and re-run everything (the sf1 rehearsal case)
-        val refSf = """"sf":\s*"([^"]+)"""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        if (!refSf.contains(sfDir)) { xchkRef = s"sf_mismatch:$p"; None }
-        else {
-          val m = """"([A-Za-z0-9_]+)":\{"spark":([0-9.Ee+-]+)""".r
-            .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-          if (m.nonEmpty) { xchkRef = p; Some(m) } else None
-        }
-      } catch { case _: Throwable => None }
+        case Right((sf, m)) if sf == sfDir => xchkRef = p; Some(m)
+        case Right(_) => xchkRef = s"sf_mismatch:$p"; None
+        case Left(why) => if (why != "missing") xchkRef = why; None
+      }
     }.nextOption().getOrElse(Map.empty)
     val xchk = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
     if (refTimes.nonEmpty) selected.foreach { case (name, fn) =>

@@ -604,18 +604,19 @@ object RobustStats {
         val g = gDf
         val w = Window.orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, 0)
+        // multiply in DECIMAL(38,0), never LONG: v·cnt and (cumcnt−k)·v
+        // overflow a long for large values (the fold arm's BigInt)
+        val vMass = col("v").cast("decimal(38,0)") * col("cnt")
         val cum = g
           .withColumn("cumcnt", sum(col("cnt")).over(w))
-          .withColumn("cummass",
-            sum((col("v") * col("cnt")).cast("decimal(38,0)")).over(w))
-        val t = g.agg(sum(col("cnt")).as("n"),
-          sum((col("v") * col("cnt")).cast("decimal(38,0)")).as("total"))
+          .withColumn("cummass", sum(vMass).over(w))
+        val t = g.agg(sum(col("cnt")).as("n"), sum(vMass).as("total"))
         val spine = df.sparkSession.range(1, points + 1).toDF("p")
           .crossJoin(broadcast(t))
           .withColumn("k", call_function("div", col("p") * col("n"),
             lit(points.toLong)))
-        val mass = (col("cummass") -
-          ((col("cumcnt") - col("k")) * col("v")).cast("decimal(38,0)"))
+        val mass = col("cummass") -
+          (col("cumcnt") - col("k")).cast("decimal(38,0)") * col("v")
         cum.crossJoin(broadcast(spine))
           .filter(col("cumcnt") >= col("k"))
           .withColumn("rn", row_number().over(

@@ -762,23 +762,7 @@ object Graph {
           .cast("long"))
     // deg is |dst-nodes|-sized (NOT broadcast-bounded at lake scale);
     // the equi-join on w hash-co-locates with the set aggregation
-    // r17 A/B (r16 VERDICT item 6, guide §3.2): GRAFT_AA_BLOOM=1
-    // Bloom-prefilters the raw side on qualifying w before its SMJ
-    // exchange. MEASURED NON-OPTIMIZATION at sf0.1: the degree gate
-    // keeps 100% of rows (600k/600k — every part has 2..64 distinct
-    // buyers), so the filter drops nothing and the build costs an
-    // extra deg pass; kept env-gated OFF as the recorded A/B. At lake
-    // scale it pays only if hub/singleton parts carry a large row
-    // fraction — selectivity, not scale, is the criterion.
-    val rawIn =
-      if (!sys.env.get("GRAFT_AA_BLOOM").contains("1")) raw
-      else {
-        val bf = deg.stat.bloomFilter("w", 2000000L, 0.01)
-        val bfB = raw.sparkSession.sparkContext.broadcast(bf)
-        val might = udf((w: Long) => bfB.value.mightContainLong(w))
-        raw.filter(might(col("w")))
-      }
-    val sets = rawIn.join(deg, Seq("w"))
+    val sets = raw.join(deg, Seq("w"))
       .groupBy(col("w"))
       .agg(array_sort(collect_set(col("s"))).as("cs"), max(col("wq")).as("wq"))
     // same two-generator unroll as cooccurrenceTopK: posexplode picks

@@ -468,50 +468,80 @@ object Streaming {
     * merge); line TEXT never enters the ledger or any shuffle key. */
   def mergeLineLedger(ledger: DataFrame, batchDocs: DataFrame,
                       id: Column, text: Column): DataFrame =
-    ledger.select(col("h"), col("n_docs"))
-      .unionByName(graft.llm.Dedup.lineFrequencies(
-        graft.llm.Dedup.explodeLines(batchDocs, id, text)))
-      .groupBy(col("h")).agg(sum(col("n_docs")).cast("long").as("n_docs"))
+    sumInto(ledger, graft.llm.Dedup.lineFrequencies(graft.llm.Dedup
+      .explodeLines(batchDocs, id, text)), Seq("h"), Seq("n_docs"))
 
-  /** Read the `foreachBatch` batchId high-water mark carried in a
+  /** Read the `foreachBatch` batchId high-water mark (HWM) carried in a
     * ledger's null-keyed sentinel row; -1 when the ledger has never
-    * been merged through an idempotent merge. One bounded 1-row driver
-    * read — the price of replay safety for the count-additive ledgers. */
+    * been merged through a gated merge.
+    *
+    * This is the replay gate every count-additive `*Idempotent` ledger
+    * shares (line, KL, PSI, quarantine, vocab, duel, daily-count,
+    * user-value). A merge reads the mark — one bounded 1-row driver
+    * read, the price of replay safety — and is a no-op when
+    * `batchId <= hwm`: a batch redelivered by at-least-once failure
+    * recovery cannot double-count. Otherwise it merges the non-sentinel
+    * rows and unions a fresh sentinel: first key NULL, the ledger's
+    * mark column = batchId, every other numeric column 0, every other
+    * column NULL. Real keys are non-null by construction and `groupBy`
+    * keeps the null key in its own group, so the sentinel never
+    * collides with data; it rides in the ledger itself, so the caller's
+    * single atomic table swap commits data and mark together.
+    * foreachBatch batchIds are monotonically increasing and stable
+    * across retries, which is exactly what makes `batchId <= hwm` the
+    * correct skip test. Ledgers idempotent by construction (set union,
+    * `bit_or`, bottom-k) need no mark. */
   def ledgerHighWaterMark(ledger: DataFrame, key: Column,
                           value: Column): Long =
     ledger.filter(key.isNull).select(value.cast("long").as("v"))
       .collect().headOption.map(_.getLong(0)).getOrElse(-1L)
 
-  /** One-row (null-key, batchId) sentinel frame carrying the ledger's
-    * high-water mark. Null keys cannot collide with real rows: line
-    * hashes and KL groups are non-null by construction, and `groupBy`
-    * keeps the null key in its own group. */
-  private def hwmSentinel(spark: SparkSession, keyName: String,
-                          keyType: String, valName: String,
-                          batchId: Long): DataFrame =
-    spark.range(1).select(lit(null).cast(keyType).as(keyName),
-      lit(batchId).cast("long").as(valName))
+  /** The [[ledgerHighWaterMark]] gate around `merge`, which sees the
+    * ledger without its sentinel; `mark` names the column carrying the
+    * HWM. The sentinel follows the merged frame's own schema. */
+  private def gated(ledger: DataFrame, batchId: Long, key: String,
+                    mark: String)(merge: DataFrame => DataFrame): DataFrame = {
+    val merged = merge(ledger.filter(col(key).isNotNull))
+    if (batchId <= ledgerHighWaterMark(ledger, col(key), col(mark)))
+      ledger.select(merged.columns.toSeq.map(col): _*)
+    else merged.unionByName(merged.sparkSession.range(1).select(
+      merged.schema.fields.toSeq.map { f =>
+        (if (f.name == mark) lit(batchId)
+         else if (f.name != key && f.dataType
+           .isInstanceOf[org.apache.spark.sql.types.NumericType]) lit(0)
+         else lit(null)).cast(f.dataType).as(f.name)
+      }: _*))
+  }
 
-  /** Replay-proof [[mergeLineLedger]]: gate the count-additive merge on
-    * the `foreachBatch` batchId high-water mark, so a redelivered batch
-    * (at-least-once failure recovery) is a no-op instead of
-    * double-counting — the same guarantee [[mergeBloomLedger]] gets for
-    * free from bit_or idempotence, bought here with one 1-row state
-    * read. The HWM rides in the ledger itself as a null-keyed sentinel
-    * row, so the caller's single atomic table swap commits data and
-    * mark together; [[lineVerdictsAgainstLedger]] ignores the sentinel
-    * (a null hash matches nothing). foreachBatch batchIds are
-    * monotonically increasing and stable across retries, which is
-    * exactly what makes `batchId <= hwm` the correct skip test. */
+  /** Count-additive merge: union `delta` into the ledger's
+    * (keys, measures) rows and re-sum every measure per key as LONG. */
+  private def sumInto(ledger: DataFrame, delta: DataFrame, keys: Seq[String],
+                      measures: Seq[String]): DataFrame = {
+    val sums = measures.map(m => sum(col(m)).cast("long").as(m))
+    ledger.select((keys ++ measures).map(col): _*).unionByName(delta)
+      .groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
+
+  /** Bottom-k merge: the distinct rows, cut to the first `k` per
+    * `group` in `order`. A redelivered row is bit-identical and
+    * collapses in the distinct, so the merge needs no mark. */
+  private def bottomK(rows: DataFrame, group: String, order: Seq[String],
+                      k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(group)).orderBy(order.map(col): _*)
+    rows.distinct().withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= k).drop("__rn")
+  }
+
+  /** Replay-proof [[mergeLineLedger]] under the [[ledgerHighWaterMark]]
+    * gate (sentinel h=null, n_docs=batchId) — the guarantee
+    * [[mergeBloomLedger]] gets for free from bit_or idempotence.
+    * [[lineVerdictsAgainstLedger]] ignores the sentinel (a null hash
+    * matches nothing). */
   def mergeLineLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
                                 id: Column, text: Column,
-                                batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("h"), col("n_docs"))
-    if (batchId <= hwm) ledger.select(col("h"), col("n_docs"))
-    else mergeLineLedger(ledger.filter(col("h").isNotNull), batchDocs, id, text)
-      .unionByName(hwmSentinel(batchDocs.sparkSession, "h", "long",
-        "n_docs", batchId))
-  }
+                                batchId: Long): DataFrame =
+    gated(ledger, batchId, "h", "n_docs")(mergeLineLedger(_, batchDocs, id, text))
 
   /** Scrub docs against a line ledger: lines whose cumulative distinct
     * doc count exceeds `maxDocs` are boilerplate. Run per micro-batch
@@ -537,29 +567,20 @@ object Streaming {
     * batch window at constant cost. */
   def mergeKlLedger(ledger: DataFrame, batchDocs: DataFrame,
                     text: Column, group: Column): DataFrame =
-    ledger.select(col("g"), col("b"), col("n_gb"))
-      .unionByName(graft.llm.TextAnalysis.klBucketCounts(batchDocs, text, group))
-      .groupBy(col("g"), col("b")).agg(sum(col("n_gb")).cast("long").as("n_gb"))
+    sumInto(ledger, graft.llm.TextAnalysis.klBucketCounts(batchDocs, text,
+      group), Seq("g", "b"), Seq("n_gb"))
 
-  /** Replay-proof [[mergeKlLedger]] — the [[mergeLineLedgerIdempotent]]
-    * discipline for the (g, b, n_gb) bucket ledger: a redelivered
-    * `foreachBatch` batch is a no-op instead of double-counting token
-    * occurrences. Sentinel is (g=null, b=0, n_gb=batchId); real groups
-    * are non-null by construction ([[graft.llm.TextAnalysis
+  /** Replay-proof [[mergeKlLedger]] under the [[ledgerHighWaterMark]]
+    * gate (sentinel g=null, b=0, n_gb=batchId). Real groups are
+    * non-null by construction ([[graft.llm.TextAnalysis
     * .klBucketCounts]] filters them) and
     * [[graft.llm.TextAnalysis.klFromBucketCounts]] drops null groups,
     * so drift over the gated ledger equals the one-shot batch monitor
     * bit for bit even under replay (StreamingSpec pins it). */
   def mergeKlLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
                               text: Column, group: Column,
-                              batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("g"), col("n_gb"))
-    if (batchId <= hwm) ledger.select(col("g"), col("b"), col("n_gb"))
-    else mergeKlLedger(ledger.filter(col("g").isNotNull), batchDocs, text, group)
-      .unionByName(hwmSentinel(batchDocs.sparkSession, "g", "string",
-        "n_gb", batchId).withColumn("b", lit(0L))
-        .select(col("g"), col("b"), col("n_gb")))
-  }
+                              batchId: Long): DataFrame =
+    gated(ledger, batchId, "g", "n_gb")(mergeKlLedger(_, batchDocs, text, group))
 
   /** Merge one micro-batch's docs into a persistent PSI value-count
     * ledger — the ingest half of [[graft.agg.RobustStats.psi]]. Each
@@ -572,32 +593,20 @@ object Streaming {
     * lengths; pre-quantize a continuous metric before ingest. */
   def mergePsiLedger(ledger: DataFrame, batchRows: DataFrame,
                      x: Column, inRef: Column): DataFrame =
-    ledger.select(col("x"), col("a"), col("b"))
-      .unionByName(graft.agg.RobustStats.psiValueCounts(batchRows, x, inRef))
-      .groupBy(col("x"))
-      .agg(sum(col("a")).cast("long").as("a"),
-        sum(col("b")).cast("long").as("b"))
+    sumInto(ledger, graft.agg.RobustStats.psiValueCounts(batchRows, x, inRef),
+      Seq("x"), Seq("a", "b"))
 
-  /** Replay-proof [[mergePsiLedger]] — the
-    * [[mergeLineLedgerIdempotent]] discipline for the (x, a, b)
-    * value-count ledger: a redelivered `foreachBatch` batch is a
-    * no-op instead of double-counting. Sentinel is (x=null,
-    * a=batchId, b=0); real metric values are non-null by construction
-    * ([[graft.agg.RobustStats.psiValueCounts]] filters them) and
-    * [[graft.agg.RobustStats.psiFromValueCounts]] drops null x, so
-    * the index over the gated ledger equals the one-shot batch
-    * monitor bit for bit even under replay (StreamingSpec pins it). */
+  /** Replay-proof [[mergePsiLedger]] under the [[ledgerHighWaterMark]]
+    * gate (sentinel x=null, a=batchId, b=0). Real metric values are
+    * non-null by construction ([[graft.agg.RobustStats.psiValueCounts]]
+    * filters them) and [[graft.agg.RobustStats.psiFromValueCounts]]
+    * drops null x, so the index over the gated ledger equals the
+    * one-shot batch monitor bit for bit even under replay
+    * (StreamingSpec pins it). */
   def mergePsiLedgerIdempotent(ledger: DataFrame, batchRows: DataFrame,
                                x: Column, inRef: Column,
-                               batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("x"), col("a"))
-    if (batchId <= hwm) ledger.select(col("x"), col("a"), col("b"))
-    else mergePsiLedger(ledger.filter(col("x").isNotNull), batchRows,
-      x, inRef)
-      .unionByName(hwmSentinel(batchRows.sparkSession, "x", "long",
-        "a", batchId).withColumn("b", lit(0L))
-        .select(col("x"), col("a"), col("b")))
-  }
+                               batchId: Long): DataFrame =
+    gated(ledger, batchId, "x", "a")(mergePsiLedger(_, batchRows, x, inRef))
 
   /** Per-batch counts for the embedding ingest guard
     * ([[graft.sources.Tables.embeddings]] / FiniteVector): how many
@@ -618,39 +627,28 @@ object Streaming {
     * class); state is 3 rows. */
   def mergeQuarantineLedger(ledger: DataFrame, batch: DataFrame,
                             vec: Column): DataFrame =
-    ledger.select(col("cat"), col("n"))
-      .unionByName(quarantineCounts(batch, vec))
-      .groupBy(col("cat")).agg(sum(col("n")).as("n"))
+    sumInto(ledger, quarantineCounts(batch, vec), Seq("cat"), Seq("n"))
 
-  /** Replay-proof [[mergeQuarantineLedger]] — the
-    * [[mergePsiLedgerIdempotent]] batchId high-water-mark discipline:
-    * a redelivered `foreachBatch` batch is a no-op instead of
-    * double-counting (which would fabricate a quarantine-rate spike on
-    * every failure recovery). Sentinel is (cat=null, n=batchId); real
-    * categories are the non-null literals above, so the gated ledger
-    * equals the one-shot batch counts bit for bit under replay
-    * (StreamingSpec pins it). */
+  /** Replay-proof [[mergeQuarantineLedger]] under the
+    * [[ledgerHighWaterMark]] gate (sentinel cat=null, n=batchId): a
+    * redelivered batch would otherwise fabricate a quarantine-rate
+    * spike on every failure recovery. Real categories are the non-null
+    * literals above, so the gated ledger equals the one-shot batch
+    * counts bit for bit under replay (StreamingSpec pins it). */
   def mergeQuarantineLedgerIdempotent(ledger: DataFrame, batch: DataFrame,
                                       vec: Column,
-                                      batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("cat"), col("n"))
-    if (batchId <= hwm) ledger.select(col("cat"), col("n"))
-    else mergeQuarantineLedger(ledger.filter(col("cat").isNotNull),
-      batch, vec)
-      .unionByName(hwmSentinel(batch.sparkSession, "cat", "string",
-        "n", batchId))
-  }
+                                      batchId: Long): DataFrame =
+    gated(ledger, batchId, "cat", "n")(mergeQuarantineLedger(_, batch, vec))
 
   /** Merge one micro-batch's events into the persistent (k, day, c)
     * daily-count ledger behind a streaming
     * [[graft.agg.TimeSeries.rollingAnomaly]]: counts are additive
     * across micro-batches (the line/KL ledger class), so the merge is
-    * a union + re-sum. Replay safety comes from the batchId
-    * high-water-mark sentinel (the [[mergePsiLedgerIdempotent]]
-    * pattern): a redelivered `foreachBatch` batch is a no-op instead
-    * of double-counting a day's volume — which would both fabricate
-    * anomalies on the replayed day AND poison the trailing baselines
-    * of the week after it. State is O(keys × days) — calendar-bounded.
+    * a union + re-sum, replay-gated by the [[ledgerHighWaterMark]]
+    * gate (sentinel k=null, day=batchId, c=0). Double-counting a
+    * replayed day's volume would both fabricate anomalies on that day
+    * AND poison the trailing baselines of the week after it. State is
+    * O(keys × days) — calendar-bounded.
     * [[graft.agg.TimeSeries.rollingAnomalyFromDaily]] over the ledger
     * (sentinel filtered) equals the one-shot batch result bit for bit
     * (StreamingSpec pins it, replay included). Bucket by k at lake
@@ -658,46 +656,31 @@ object Streaming {
   def mergeDailyCountLedgerIdempotent(ledger: DataFrame,
                                       batchEvents: DataFrame, key: Column,
                                       ts: Column,
-                                      batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("k"), col("day"))
-    if (batchId <= hwm) ledger.select(col("k"), col("day"), col("c"))
-    else ledger.filter(col("k").isNotNull)
-      .select(col("k"), col("day"), col("c"))
-      .unionByName(graft.agg.TimeSeries.dailyCounts(batchEvents, key, ts))
-      .groupBy(col("k"), col("day")).agg(sum(col("c")).as("c"))
-      .unionByName(hwmSentinel(batchEvents.sparkSession, "k", "string",
-        "day", batchId).withColumn("c", lit(0L))
-        .select(col("k"), col("day"), col("c")))
-  }
+                                      batchId: Long): DataFrame =
+    gated(ledger, batchId, "k", "day")(sumInto(_, graft.agg.TimeSeries
+      .dailyCounts(batchEvents, key, ts), Seq("k", "day"), Seq("c")))
 
   /** Merge one micro-batch's events into the persistent (u, wk, cw)
     * per-user-period value ledger behind a streaming
     * [[graft.agg.Funnel.cohortValue]]: cent masses are additive across
     * micro-batches (the daily-count ledger class), replay-gated by the
-    * batchId high-water sentinel (null-u row) so at-least-once
-    * redelivery cannot double a user's spend — which would inflate
-    * every LTV cell the user touches. State is O(users × periods) —
-    * calendar-bounded. [[graft.agg.Funnel.cohortValueFromPeriods]]
-    * over the ledger (sentinel filtered) equals the one-shot batch
-    * matrix bit for bit (StreamingSpec pins it, replay included).
-    * Bucket by u at lake scale for a co-located merge. */
+    * [[ledgerHighWaterMark]] gate (sentinel u=null, wk=batchId, cw=0)
+    * so at-least-once redelivery cannot double a user's spend — which
+    * would inflate every LTV cell the user touches. State is
+    * O(users × periods) — calendar-bounded.
+    * [[graft.agg.Funnel.cohortValueFromPeriods]] over the ledger
+    * (sentinel filtered) equals the one-shot batch matrix bit for bit
+    * (StreamingSpec pins it, replay included). Bucket by u at lake
+    * scale for a co-located merge. */
   def mergeUserValueLedgerIdempotent(ledger: DataFrame,
                                      batchEvents: DataFrame, user: Column,
                                      ts: Column, value: Column,
                                      batchId: Long,
                                      periodMicros: Long = 604800000000L)
-      : DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("u"), col("wk"))
-    if (batchId <= hwm) ledger.select(col("u"), col("wk"), col("cw"))
-    else ledger.filter(col("u").isNotNull)
-      .select(col("u"), col("wk"), col("cw"))
-      .unionByName(graft.agg.Funnel.userValuePeriods(batchEvents, user,
-        ts, value, periodMicros))
-      .groupBy(col("u"), col("wk")).agg(sum(col("cw")).as("cw"))
-      .unionByName(hwmSentinel(batchEvents.sparkSession, "u", "long",
-        "wk", batchId).withColumn("cw", lit(0L))
-        .select(col("u"), col("wk"), col("cw")))
-  }
+      : DataFrame =
+    gated(ledger, batchId, "u", "wk")(sumInto(_, graft.agg.Funnel
+      .userValuePeriods(batchEvents, user, ts, value, periodMicros),
+      Seq("u", "wk"), Seq("cw")))
 
   /** Merge one micro-batch's (user, period) activity rows into a
     * persistent retention ledger — the streaming half of
@@ -758,26 +741,17 @@ object Streaming {
     * tok at lake scale for a co-located merge. */
   def mergeVocabLedger(ledger: DataFrame, batchDocs: DataFrame,
                        text: Column): DataFrame =
-    ledger.select(col("tok"), col("n"))
-      .unionByName(batchDocs
-        .select(explode(graft.functions.GraftFunctions.tokens(text)).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("n")))
-      .groupBy(col("tok")).agg(sum(col("n")).cast("long").as("n"))
+    sumInto(ledger, batchDocs
+      .select(explode(graft.functions.GraftFunctions.tokens(text)).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("n")), Seq("tok"), Seq("n"))
 
-  /** Replay-proof [[mergeVocabLedger]] — the
-    * [[mergeLineLedgerIdempotent]] batchId high-water-mark gate for the
-    * token-count ledger (sentinel: tok=null, n=batchId; real tokens are
-    * non-empty strings, and the null-keyed row joins nothing in
-    * [[oovAgainstVocabLedger]]). A redelivered `foreachBatch` batch is
-    * a no-op instead of double-counting occurrences. */
+  /** Replay-proof [[mergeVocabLedger]] under the [[ledgerHighWaterMark]]
+    * gate (sentinel tok=null, n=batchId; real tokens are non-empty
+    * strings, and the null-keyed row joins nothing in
+    * [[oovAgainstVocabLedger]]). */
   def mergeVocabLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
-                                 text: Column, batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("tok"), col("n"))
-    if (batchId <= hwm) ledger.select(col("tok"), col("n"))
-    else mergeVocabLedger(ledger.filter(col("tok").isNotNull), batchDocs, text)
-      .unionByName(hwmSentinel(batchDocs.sparkSession, "tok", "string",
-        "n", batchId))
-  }
+                                 text: Column, batchId: Long): DataFrame =
+    gated(ledger, batchId, "tok", "n")(mergeVocabLedger(_, batchDocs, text))
 
   /** OOV audit of incoming docs against the ledger's top-`vocabSize`
     * vocabulary — the gate half of the streaming coverage audit: score
@@ -808,16 +782,10 @@ object Streaming {
     * included). State: k·|groups| rows, weight-stream independent. */
   def mergePrioritySampleLedger(ledger: DataFrame, batchDocs: DataFrame,
                                 group: Column, id: Column, weight: Column,
-                                k: Int, salt: Int = 0): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("grp")).orderBy(col("priority"), col("doc_id"))
-    ledger.select(col("grp"), col("doc_id"), col("weight"), col("priority"))
-      .unionByName(graft.llm.Selection.prioritySamplePerGroup(
-        batchDocs, group, id, weight, k, salt))
-      .distinct() // replayed batch rows are bit-identical — collapse them
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
-  }
+                                k: Int, salt: Int = 0): DataFrame =
+    bottomK(ledger.select(col("grp"), col("doc_id"), col("weight"),
+      col("priority")).unionByName(graft.llm.Selection.prioritySamplePerGroup(
+        batchDocs, group, id, weight, k, salt)), "grp", Seq("priority", "doc_id"), k)
 
   /** Merge one micro-batch's keys into a persistent Bloom word ledger —
     * the ingest-time build half of [[graft.llm.Bloom.gate]] (the
@@ -849,18 +817,11 @@ object Streaming {
     * ≤ k longs per source — constant per source at any corpus
     * scale. */
   def mergeKmvLedger(ledger: DataFrame, batchDocs: DataFrame,
-                     source: Column, content: Column, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("h"))
-    ledger.select(col("src"), col("h"))
-      .unionByName(batchDocs
-        .filter(content.isNotNull && source.isNotNull)
-        .select(source.as("src"),
-          graft.functions.GraftFunctions.md5Long(content).as("h")))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).select(col("src"), col("h"))
-  }
+                     source: Column, content: Column, k: Int): DataFrame =
+    bottomK(ledger.select(col("src"), col("h")).unionByName(batchDocs
+      .filter(content.isNotNull && source.isNotNull)
+      .select(source.as("src"),
+        graft.functions.GraftFunctions.md5Long(content).as("h"))), "src", Seq("h"), k)
 
   /** Merge one micro-batch's preference duels into a persistent
     * (win, lose, n) count ledger — the streaming half of
@@ -873,27 +834,15 @@ object Streaming {
     * at-least-once delivery). State is the |items|²-bounded ordered
     * pair table. */
   def mergeDuelLedger(ledger: DataFrame, batchDuels: DataFrame): DataFrame =
-    ledger.select(col("win"), col("lose"), col("n"))
-      .unionByName(batchDuels.groupBy(col("win"), col("lose"))
-        .agg(count(lit(1)).as("n")))
-      .groupBy(col("win"), col("lose"))
-      .agg(sum(col("n")).cast("long").as("n"))
+    sumInto(ledger, batchDuels.groupBy(col("win"), col("lose"))
+      .agg(count(lit(1)).as("n")), Seq("win", "lose"), Seq("n"))
 
-  /** Replay-proof [[mergeDuelLedger]] — the [[mergeLineLedgerIdempotent]]
-    * batchId high-water-mark discipline for the duel counts: the HWM
-    * rides as a null-keyed sentinel row (win/lose are non-null by
-    * construction), so one atomic table swap commits counts and mark
-    * together and a redelivered batch is a no-op. */
+  /** Replay-proof [[mergeDuelLedger]] under the [[ledgerHighWaterMark]]
+    * gate (sentinel win=null, lose=null, n=batchId; win/lose are
+    * non-null by construction). */
   def mergeDuelLedgerIdempotent(ledger: DataFrame, batchDuels: DataFrame,
-                                batchId: Long): DataFrame = {
-    val hwm = ledgerHighWaterMark(ledger, col("win"), col("n"))
-    if (batchId <= hwm) ledger.select(col("win"), col("lose"), col("n"))
-    else mergeDuelLedger(ledger.filter(col("win").isNotNull), batchDuels)
-      .unionByName(batchDuels.sparkSession.range(1)
-        .select(lit(null).cast("string").as("win"),
-          lit(null).cast("string").as("lose"),
-          lit(batchId).cast("long").as("n")))
-  }
+                                batchId: Long): DataFrame =
+    gated(ledger, batchId, "win", "n")(mergeDuelLedger(_, batchDuels))
 
   /** Win matrix off the duel ledger — against the final ledger it
     * equals the one-shot batch [[graft.llm.Preference.winMatrix]] bit

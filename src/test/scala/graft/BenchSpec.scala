@@ -1,0 +1,27 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The bench's reference cross-check (`xchk`) loads per-query Spark
+  * times from the committed dual-run file; an empty load silently
+  * disables the cross-check, so the loader is pinned against the file
+  * itself and against the two ways it can be unusable. */
+class BenchSpec extends AnyFunSuite {
+  test("readRefTimes parses every query of the committed BENCH_BOTH.json") {
+    val Right((sf, times)) = Bench.readRefTimes("BENCH_BOTH.json")
+    assert(sf.nonEmpty)
+    assert(times.size == 294, s"parsed ${times.size} reference entries")
+    assert(times.values.forall(t => t.isFinite && t >= 0))
+  }
+
+  test("readRefTimes reports a missing file apart from a format mismatch") {
+    val f = java.nio.file.Files.createTempFile("bench-ref", ".json")
+    try {
+      java.nio.file.Files.write(f, """{"sf":"x","total":1.0}""".getBytes("UTF-8"))
+      assert(Bench.readRefTimes(f.toString) == Left(s"format_mismatch:$f"))
+      java.nio.file.Files.write(f, "not json".getBytes("UTF-8"))
+      assert(Bench.readRefTimes(f.toString) == Left(s"format_mismatch:$f"))
+    } finally java.nio.file.Files.delete(f)
+    assert(Bench.readRefTimes(f.toString) == Left("missing"))
+  }
+}

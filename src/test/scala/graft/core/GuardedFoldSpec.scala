@@ -80,6 +80,15 @@ class GuardedFoldSpec extends SparkSpec {
     assert(fold == dist && fold.size == 10)
   }
 
+  test("lorenz: fold and distributed arms are bit-identical (masses beyond Long.MaxValue)") {
+    // v·cnt and (cumcnt − k)·v exceed a long: both arms must stay exact
+    val big = Long.MaxValue / 2
+    val df = (Seq.fill(3)(big) ++ Seq(1L, 5L)).toDF("x")
+    val (fold, dist) = bothArms(
+      graft.agg.RobustStats.lorenz(df, col("x"), points = 10))
+    assert(fold == dist && fold.size == 10)
+  }
+
   test("conformalInterval: fold and distributed arms are bit-identical") {
     // the InferenceSpec fixture: exact fit, planted residual offsets
     val train = (1L to 30L).map(i => (i * 5 + 2, 10 * i + (i % 4), i, i % 4))

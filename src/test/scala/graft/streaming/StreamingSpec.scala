@@ -1211,4 +1211,67 @@ class StreamingSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(got == batchCounts)
   }
+
+  test("HWM gate over the eight gated ledgers: fixed sentinel layout; an older redelivered batch is a no-op") {
+    // one table row per count-additive ledger: merge batchIds 0, 1, 2,
+    // then replay batch 0 the way a restart from an old checkpoint would
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types.{DataType, LongType, StringType}
+    case class Gated(name: String, empty: DataFrame, batch: Int => DataFrame,
+                     merge: (DataFrame, DataFrame, Long) => DataFrame,
+                     sentinel: Seq[(String, DataType, Any)])
+    def at(unit: Long)(c: org.apache.spark.sql.Column) = timestamp_micros(c * unit)
+    val cases = Seq(
+      Gated("line", Seq.empty[(Long, Long)].toDF("h", "n_docs"),
+        i => Seq((i.toLong, s"home | about\nbody $i")).toDF("doc_id", "text"),
+        (l, b, id) => Streaming.mergeLineLedgerIdempotent(l, b, col("doc_id"), col("text"), id),
+        Seq(("h", LongType, null), ("n_docs", LongType, 2L))),
+      Gated("kl", Seq.empty[(String, Long, Long)].toDF("g", "b", "n_gb"),
+        i => Seq((i.toLong, s"alpha beta w$i", s"s${i % 2}")).toDF("doc_id", "text", "source"),
+        (l, b, id) => Streaming.mergeKlLedgerIdempotent(l, b, col("text"), col("source"), id),
+        Seq(("g", StringType, null), ("b", LongType, 0L), ("n_gb", LongType, 2L))),
+      Gated("psi", Seq.empty[(Long, Long, Long)].toDF("x", "a", "b"),
+        i => Seq((i.toLong, 100L * (i + 1), "en"), (10L + i, 100L, "de"))
+          .toDF("doc_id", "n_chars", "lang"),
+        (l, b, id) => Streaming.mergePsiLedgerIdempotent(l, b, col("n_chars"), col("lang") === "en", id),
+        Seq(("x", LongType, null), ("a", LongType, 2L), ("b", LongType, 0L))),
+      Gated("quarantine", Seq.empty[(String, Long)].toDF("cat", "n"),
+        i => Seq((i.toLong, Option(Seq(1f, i.toFloat))), (10L + i, Option.empty[Seq[Float]]))
+          .toDF("vec_id", "embedding"),
+        (l, b, id) => Streaming.mergeQuarantineLedgerIdempotent(l, b, col("embedding"), id),
+        Seq(("cat", StringType, null), ("n", LongType, 2L))),
+      Gated("vocab", Seq.empty[(String, Long)].toDF("tok", "n"),
+        i => Seq((i.toLong, s"the cat w$i")).toDF("doc_id", "text"),
+        (l, b, id) => Streaming.mergeVocabLedgerIdempotent(l, b, col("text"), id),
+        Seq(("tok", StringType, null), ("n", LongType, 2L))),
+      Gated("duel", Seq.empty[(String, String, Long)].toDF("win", "lose", "n"),
+        i => Seq(("en", "de"), (s"m$i", "fr")).toDF("win", "lose"),
+        (l, b, id) => Streaming.mergeDuelLedgerIdempotent(l, b, id),
+        Seq(("win", StringType, null), ("lose", StringType, null), ("n", LongType, 2L))),
+      Gated("daily-count", Seq.empty[(String, Long, Long)].toDF("k", "day", "c"),
+        i => Seq(("k", i.toLong), ("k", 1L)).toDF("k", "d")
+          .select(col("k"), at(86400000000L)(col("d")).as("ts")),
+        (l, b, id) => Streaming.mergeDailyCountLedgerIdempotent(l, b, col("k"), col("ts"), id),
+        Seq(("k", StringType, null), ("day", LongType, 2L), ("c", LongType, 0L))),
+      Gated("user-value", Seq.empty[(Long, Long, Long)].toDF("u", "wk", "cw"),
+        i => Seq((1L + i, i.toLong, 2.5), (1L, 0L, 1.0)).toDF("u", "w", "v")
+          .select(col("u"), at(604800000000L)(col("w")).as("ts"), col("v")),
+        (l, b, id) => Streaming.mergeUserValueLedgerIdempotent(l, b, col("u"), col("ts"), col("v"), id),
+        Seq(("u", LongType, null), ("wk", LongType, 2L), ("cw", LongType, 0L))))
+
+    cases.foreach { c =>
+      val ledger = (0 until 3).foldLeft(c.empty)((l, i) => c.merge(l, c.batch(i), i.toLong))
+      val key = c.sentinel.head._1
+      val sentinel = ledger.filter(col(key).isNull)
+      assert(sentinel.schema.map(f => f.name -> f.dataType) == c.sentinel.map(s => s._1 -> s._2),
+        s"${c.name}: sentinel columns")
+      assert(sentinel.collect().toSeq == Seq(Row(c.sentinel.map(_._3): _*)),
+        s"${c.name}: sentinel row")
+      assert(ledger.filter(col(key).isNotNull).count() > 0, s"${c.name}: no data rows")
+      val before = ledger.collect().toSet
+      assert(c.merge(ledger, c.batch(0), 0L).collect().toSet == before,
+        s"${c.name}: replaying batch 0 after batch 2 must be a no-op")
+    }
+  }
 }
