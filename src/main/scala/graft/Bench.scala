@@ -37,31 +37,8 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => Left(s"format_mismatch:$path") }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // locale-free string ops (see Verify)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, must precede session creation: the default Janino
-      // class cache holds 100 generated classes, but a 160+-query suite
-      // compiles SEVERAL codegen units per query — pass 2 found nothing
-      // cached and re-paid every Janino compile (~50-150 ms each),
-      // exactly the samples best-of-2 keeps. Sized to hold both passes.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val maxRows = graft.core.Scale.maxInputRows(spark, sfDir)
-    // AQE on above the row threshold; below it, shuffle partitions are
-    // derived from the input size instead of the core count (r17, guide
-    // §2.6 — the r16 scaling block's anti-scaling cluster paid 32-way
-    // partition overhead on sub-MB shuffles AQE was too small to
-    // coalesce). Policy + rationale: graft.core.Scale.
-    graft.core.Scale.configure(spark, maxRows, cpus.toInt)
+    val spark = graft.core.Scale.session(sfDir, graft.core.Scale.cores)
     // JIT/codegen warmup: run one throwaway query exercising the hot code
     // paths (hash agg, join, window, sort) so the first TIMED query isn't
     // charged for HotSpot + Janino compilation of the shared operators.

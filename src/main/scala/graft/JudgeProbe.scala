@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object JudgeProbe {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // mirror Bench's scale-adaptive policy so probe timings are
-    // comparable to the contract surface (graft.core.Scale)
-    graft.core.Scale.configure(spark,
-      graft.core.Scale.maxInputRows(spark, sfDir), 32)
+    val spark = graft.core.Scale.session(sfDir, graft.core.Scale.cores)
     // job/stage accounting per probe: fixed per-job scheduling overhead
     // (~0.2-0.5 s against sub-MB inputs) dominates multi-action queries
     // at bench scale, so the job count is the first thing to audit

@@ -1,31 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (not shipped surface): writes `.explain("formatted")` output
   * for the named queries to plans/<tag>/<name>_<suffix>.txt — the plan
   * evidence files the optimization rounds commit alongside before/after
-  * bench numbers. Usage:
+  * bench numbers, under the same [[graft.core.Scale.session]] policy
+  * the bench times. Usage:
   *   java ... graft.PlanDump <suffix> <query> [<query> ...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   *      GRAFT_PLAN_DIR (default plans/r16).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("GRAFT_PLAN_DIR", "plans/r16")
     val suffix = args.head
     val names = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false") // Bench policy at sf0.1
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.core.Scale.session(sfDir, graft.core.Scale.cores)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

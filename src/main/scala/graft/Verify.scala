@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // locale-independent string ops: Spark's non-ASCII lower() slow path
-    // goes through String.toLowerCase(default locale) — a tr_TR JVM maps
-    // I→ı and breaks oracle parity with DuckDB's locale-free utf8proc
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     // --sql-only <out.json>: dump oracle_sql.json without a Spark session
     // (tools/bench_both.sh feeds it to duckdb_baseline.py — running every
     // query just to get the SQL would double the ritual's wall-clock)
@@ -22,14 +17,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val prefixes =
       (if (args.length > 2) args(2) else "").split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Scale.session(sfDir, graft.core.Scale.cores)
     new java.io.File(outDir).mkdirs()
     // Record every throwing query by name → error so missing coverage can
     // never masquerade as a pass: a query that crashes leaves no parquet

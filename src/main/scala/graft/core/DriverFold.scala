@@ -23,15 +23,13 @@ import org.apache.spark.sql.{DataFrame, Row}
   * driver-safe by construction (it scans reduce partitions
   * incrementally and stops scheduling more once the limit is reached,
   * so driver memory is O(cap · scaleUpFactor) even on a 1e8-row
-  * domain). To keep it ONE job in the bounded case — executeTake's
-  * default initialNumPartitions=1 would scan 1, 4, 16… partitions as
-  * separate reduce-only jobs when the limit is never reached — the
-  * probe raises spark.sql.limit.initialNumPartitions to the session's
-  * shuffle-partition count for its duration, so a bounded domain is
-  * collected by a single job over all reduce partitions, exactly like
-  * the collect() it replaces. Row order from executeTake may differ
-  * from collect(); every guarded fold either sorts its rows or is
-  * order-free, and the oracle compare canonicalizes row order.
+  * domain). It stays ONE job in the bounded case because
+  * [[Scale.configure]] sets spark.sql.limit.initialNumPartitions to the
+  * session's shuffle-partition count once, for the whole session; the
+  * probe itself writes no conf, so concurrent queries never see it
+  * change. Row order from executeTake may differ from collect(); every
+  * guarded fold either sorts its rows or is order-free, and the oracle
+  * compare canonicalizes row order.
   */
 object DriverFold {
   /** Fold/distribute boundary in rows. 100k rows of the ≤3-LONG-column
@@ -47,23 +45,7 @@ object DriverFold {
   /** Collect `df` iff it has at most [[cap]] rows; None means the
     * caller must use its distributed tail form. */
   def collectBounded(df: DataFrame): Option[Array[Row]] = {
-    val spark = df.sparkSession
-    val key = "spark.sql.limit.initialNumPartitions"
-    val prev = try spark.conf.getOption(key) catch { case _: Throwable => None }
-    val head =
-      try {
-        // one job over all reduce partitions in the bounded case (see
-        // class doc); per-partition LocalLimit still bounds what each
-        // task returns, and executeTake stops early when over cap.
-        spark.conf.set(key,
-          spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        df.limit(cap + 1).collect()
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => try spark.conf.unset(key) catch { case _: Throwable => () }
-        }
-      }
+    val head = df.limit(cap + 1).collect()
     if (head.length <= cap) Some(head) else None
   }
 }

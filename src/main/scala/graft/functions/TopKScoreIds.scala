@@ -30,11 +30,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * are therefore IDENTICAL to the window form's rank ≤ k rows; no
   * arithmetic is performed on the scores at all.
   *
+  * Duplicates: a (score, id) pair seen twice takes two slots and is
+  * emitted twice, exactly as row_number ranks both copies.
+  *
   * NULL handling: rows with a NULL score or id are skipped — callers
   * in the engine evaluate both from non-null guarded inputs, so the
   * branch is unreachable there (asserted by the oracle hash match);
   * skipping mirrors a rank filter under DESC NULLS LAST ordering for
-  * any k smaller than the group's non-null row count. */
+  * any k up to the group's non-null row count, while the window form
+  * would keep NULL rows last in a shorter group (TopKScoreIdsSpec pins
+  * both cases). */
 case class TopKScoreIds(
     score: Expression,
     id: Expression,

@@ -70,12 +70,18 @@ object Joins {
     * bounded per key — instead of a broadcast-nested-loop over the cross
     * product. At extreme per-key fan-out the next step is interval
     * bucketing (join on (key, floor(ord/width)) ± 1); the equi-shuffle
-    * shape here is the same one that variant produces. */
+    * shape here is the same one that variant produces. The right keys
+    * are renamed for the join and dropped after it, so a self-join never
+    * leans on Spark rescuing a trivially true `k = k`; the output keeps
+    * the left side's keys only. */
   def rangeJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                 rightOrd: Column, low: Column, high: Column,
                 joinType: String = "inner"): DataFrame = {
-    val equi = keys.map(k => left(k) === right(k)).reduce(_ && _)
-    left.join(right, equi && rightOrd.between(low, high), joinType)
+    val rk = keys.map(k => k -> s"__right_$k").toMap
+    val r = right.withColumnsRenamed(rk)
+    val equi = keys.map(k => left(k) === r(rk(k))).reduce(_ && _)
+    left.join(r, equi && rightOrd.between(low, high), joinType)
+      .drop(rk.values.toSeq: _*)
   }
 
   /** As-of join: for each left row, the single latest right row with

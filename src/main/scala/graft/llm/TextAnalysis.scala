@@ -250,7 +250,7 @@ object TextAnalysis {
       col("n_g").as("ng1"), col("c").as("c1"))
     val r = grid.select(col("g").as("g2"), col("b"),
       col("n_g").as("ng2"), col("c").as("c2"))
-    l.join(r, l("b") === r("b") && col("g1") < col("g2"))
+    l.join(r, Seq("b")).where(col("g1") < col("g2"))
       .select(col("g1"), col("g2"),
         ((col("c1") + lit(1L)).cast("double") /
           (col("ng1") + lit(B)).cast("double")).as("p"),

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session, local[4],
-  * tiny shuffle fan-out — these are semantics tests, not perf tests).
+/** Shared local session for all specs (one JVM-wide session, local[4]
+  * with 4 shuffle partitions — these are semantics tests, not perf tests).
   * Every test drains the tracked-persist registry afterwards, so
   * library calls that persist (band tables, posting lists, pageRank
   * working sets) can't leak cached frames across tests or couple one
@@ -18,14 +18,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with BeforeAndAfterEa
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // locale-free string ops (see Verify)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the runners' static policy at 4 cores; no Scale.configure, so AQE
+    // keeps Spark's default (on) — the posture PlanSpec asserts under
+    val s = graft.core.Scale.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

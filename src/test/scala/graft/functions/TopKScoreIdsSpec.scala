@@ -1,29 +1,31 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TopKScoreIds must select exactly the rows
   * `row_number() OVER (ORDER BY score DESC, id) <= k` selects — same
   * total order (NaN greatest, ±0.0 equal, id tiebreak), same
-  * membership, ids emitted in rank order. */
+  * membership with multiplicity (a duplicated (score, id) row takes
+  * one slot per copy), ids emitted in rank order. Rows with a NULL
+  * score or id are skipped, where the window keeps them last. */
 class TopKScoreIdsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def windowTopK(rows: Seq[(Long, Double, Long)], k: Int) = {
+  // sorted (g, id) pairs: a duplicate row counts once per copy
+  private def windowTopK(df: DataFrame, k: Int) = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("g")).orderBy(col("s").desc, col("id"))
-    rows.toDF("g", "s", "id")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("g"), col("id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
   }
 
-  private def aggTopK(rows: Seq[(Long, Double, Long)], k: Int) =
-    rows.toDF("g", "s", "id")
-      .groupBy(col("g")).agg(TopKScoreIds(col("s"), col("id"), k).as("ids"))
+  private def aggTopK(df: DataFrame, k: Int) =
+    df.groupBy(col("g")).agg(TopKScoreIds(col("s"), col("id"), k).as("ids"))
       .select(col("g"), explode(col("ids")).as("id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   test("matches the window form on ties, NaN, ±0.0 and short groups") {
     val rows = Seq(
@@ -35,9 +37,17 @@ class TopKScoreIdsSpec extends SparkSpec {
       // group 2: -0.0 and 0.0 are equal; tie falls to id
       (2L, -0.0, 9L), (2L, 0.0, 2L), (2L, -0.5, 1L),
       // group 3: fewer rows than k
-      (3L, 1.0, 4L))
+      (3L, 1.0, 4L),
+      // group 4: a duplicated (score, id) row takes two slots, as in
+      // row_number
+      (4L, 0.7, 1L), (4L, 0.7, 1L), (4L, 0.3, 2L)).toDF("g", "s", "id")
+    // group 5: rows with a NULL score or id are skipped, where the
+    // window would rank them last in a short group
+    val nulls = Seq((5L, None, Some(3L)), (5L, Some(0.2), None),
+      (5L, Some(0.1), Some(4L))).toDF("g", "s", "id")
     for (k <- Seq(1, 2, 3)) {
-      assert(aggTopK(rows, k) == windowTopK(rows, k), s"k=$k")
+      assert(aggTopK(rows.union(nulls), k) ==
+        windowTopK(rows.union(nulls.na.drop()), k), s"k=$k")
     }
   }
 
@@ -52,6 +62,7 @@ class TopKScoreIdsSpec extends SparkSpec {
 
   test("many groups force map-side partials and merges; result still exact") {
     val rows = (0L until 50000L).map(i => (i % 500, (i % 97).toDouble, i))
+      .toDF("g", "s", "id")
     assert(aggTopK(rows, 5) == windowTopK(rows, 5))
   }
 }

@@ -18,8 +18,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-JAVA="java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+JAVA="java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp /root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
 
 $JAVA graft.Verify --sql-only /tmp/oracle_sql_bench.json

@@ -11,7 +11,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 rm -rf "$OUT"
-java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+java $ADD_OPENS -Xmx8g \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT" ${3:+"$3"}
 python3 /root/repo/tools/check.py "$SF_DIR" "$OUT"
