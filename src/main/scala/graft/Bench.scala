@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * its epoch start for post-hoc spike diagnosis, plus the contention
   * sentinel's control-query trace (median, all samples, which queries
   * were resampled because their best sample ran in a >1.5x-drifted
-  * control window).
+  * control window). Each sample is also appended to
+  * ./BENCH_SAMPLES.jsonl the moment it finishes (control runs as
+  * `__ctrl`), so a killed run still leaves its data.
   */
 object Bench {
   /** The (sf, per-query Spark seconds) of a dual-run reference file —
@@ -35,6 +37,17 @@ object Bench {
       if (times.isEmpty) Left(s"format_mismatch:$path")
       else Right((root.path("sf").asText(), times))
     } catch { case scala.util.control.NonFatal(_) => Left(s"format_mismatch:$path") }
+
+  /** Append one finished sample — query name, seconds (-1 when the run
+    * failed) and epoch start — as a JSON line, flushed at once, so a
+    * run cut short still leaves every sample it finished. */
+  private[graft] def appendSample(out: java.io.Writer, name: String, secs: Double,
+                                  epoch: Long): Unit = {
+    out.write(new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+      .put("query", name).put("s", if (secs.isInfinity) -1.0 else secs)
+      .put("epoch", epoch).toString + "\n")
+    out.flush()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -104,14 +117,18 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    // every sample as it finishes (truncated per run, filtered runs
+    // too): the tail JSON lines only print once the whole suite is done
+    val samplesOut = java.nio.file.Files.newBufferedWriter(
+      java.nio.file.Paths.get("BENCH_SAMPLES.jsonl"), java.nio.charset.StandardCharsets.UTF_8)
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Long) = {
       val epoch = System.currentTimeMillis() / 1000L
       val t0 = System.nanoTime()
       // toRdd.count() executes the query's OWN physical plan — a
       // df.count() would let Catalyst prune every unused projection and
       // time only the scan for map-shaped queries.
-      try {
+      val s = try {
         fn(spark, sfDir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, epoch)
       }
@@ -119,6 +136,8 @@ object Bench {
       // fast transient failure and fabricate a phantom speedup
       catch { case _: Throwable => (Double.PositiveInfinity, epoch) }
       finally graft.llm.Dedup.releaseCaches()
+      appendSample(samplesOut, name, s._1, s._2)
+      s
     }
     // Inter-pass hygiene: 128 queries of accumulated cached relations +
     // promoted-heap garbage inflate in-suite timings up to ~2x over
@@ -164,7 +183,7 @@ object Bench {
     val ctrlFn = SparkEntry.queries("q1_agg")
     val ctrlSamples = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     def runControl(): Unit = {
-      val s = once(ctrlFn)
+      val s = once("__ctrl", ctrlFn)
       if (s._1.isFinite) ctrlSamples += ((s._2, s._1))
     }
     def runPass(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
@@ -172,7 +191,7 @@ object Bench {
       qs.zipWithIndex.map { case ((name, fn), i) =>
         if (i > 0 && i % 16 == 0) System.gc()
         if (i % 8 == 0) runControl()
-        name -> once(fn)
+        name -> once(name, fn)
       }
     interPass()
     val pass1 = runPass(selected)
@@ -199,7 +218,7 @@ object Bench {
     selected.foreach { case (name, fn) =>
       val ss = samples(name).map(_._1).filter(_.isFinite)
       if (ss.size == 2 && (ss.max / math.max(ss.min, 1e-9) > 3.0 || ss.min > 1.5))
-        samples(name) = samples(name) :+ once(fn)
+        samples(name) = samples(name) :+ once(name, fn)
     }
     // Sentinel resample: a query whose BEST sample started inside a
     // contended control window (nearest control >1.5x the control
@@ -217,7 +236,7 @@ object Bench {
       val finite = samples(name).filter(_._1.isFinite)
       if (finite.nonEmpty && contendedAt(finite.minBy(_._1)._2)) {
         runControl() // refresh the window picture before re-measuring
-        samples(name) = samples(name) :+ once(fn)
+        samples(name) = samples(name) :+ once(name, fn)
         resampled += name
       }
     }
@@ -262,7 +281,7 @@ object Bench {
       val best = samples(name).map(_._1).min
       refTimes.get(name).foreach { ref =>
         if (best.isFinite && ref > 0 && best > 1.5 * ref && best - ref > 0.25) {
-          val re = once(fn)
+          val re = once(name, fn)
           samples(name) = samples(name) :+ re
           xchk(name) = (best, ref, if (re._1.isInfinity) -1.0 else re._1)
         }
@@ -277,7 +296,7 @@ object Bench {
         val s = ctrlSamples.map(_._2).sorted; s(s.size / 2)
       }
       if (ref > 0 && med0 > 1.5 * ref) {
-        val re = once(ctrlFn)
+        val re = once("__ctrl", ctrlFn)
         xchk("__ctrl") = (med0, ref, if (re._1.isInfinity) -1.0 else re._1)
       }
     }
@@ -351,6 +370,7 @@ object Bench {
       if (len + e.length + 1 <= 1800) { kept += e; len += e.length + 1 }
     }
     println(jsonLine(kept.mkString("{", ",", "}"), results.size - kept.size))
+    samplesOut.close()
     spark.stop()
   }
 }

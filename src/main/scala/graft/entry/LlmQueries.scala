@@ -3046,7 +3046,8 @@ object LlmQueries {
     // CDC chunking on the hex rendering: polynomial window-hash
     // boundaries ((fold (a*K + b) % P over the 8-byte window) % 32 = 0,
     // the qualityRules GramP discipline), cuts -> chunk slices,
-    // (hash, len) share counts — mirrors Multimodal.cdcChunkStats.
+    // (hash, len) share counts — the hex-string form of the native
+    // functions.CdcChunks scan behind Multimodal.cdcChunkStats.
     // list_reduce seeds with the first element = Spark's aggregate
     // from 0 here, since (0*K + b0) % P = b0.
     "q_cdc_chunks" ->

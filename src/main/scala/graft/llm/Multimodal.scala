@@ -200,19 +200,22 @@ object Multimodal {
 
   /** Content-defined chunking dedup over binary payloads — the
     * storage-dedup primitive (LBFS/Rabin lineage; FastCDC is the
-    * production variant): a chunk boundary falls after byte i wherever
-    * the hash of the `window`-byte window ending at i is ≡ 0 mod
-    * `divisor`, so boundaries are ALIGNMENT-ROBUST — inserting one byte
-    * near the front of a payload shifts every fixed-size block but
-    * leaves all content-defined chunks after the edit identical, which
-    * is exactly why shared-chunk mass detects duplicated media content
-    * that offset-based blocking misses. Average chunk ≈ `divisor`
-    * bytes; a payload shorter than `window` is one chunk.
+    * production variant): a chunk boundary falls before byte i wherever
+    * the hash of the `window` bytes preceding i is ≡ 0 mod `divisor`,
+    * so boundaries are ALIGNMENT-ROBUST — inserting one byte near the
+    * front of a payload shifts every fixed-size block but leaves all
+    * content-defined chunks after the edit identical, which is exactly
+    * why shared-chunk mass detects duplicated media content that
+    * offset-based blocking misses. Average chunk ≈ `divisor` bytes; a
+    * payload shorter than `window` + 1 bytes is one chunk.
     *
-    * Byte semantics ride the LOWERCASE HEX rendering of the payload on
-    * both engines (DuckDB cannot md5/substring a BLOB — the
-    * q_media_frames discipline), so window and chunk hashes are
-    * hex-string md5s, bit-identical across engines for ANY bytes.
+    * The byte semantics (window hash, cuts, chunk hashes) live in the
+    * native [[graft.functions.CdcChunks]] scan: one pass over the raw
+    * bytes per payload. The lowercase hex rendering survives only as
+    * the md5 input of each chunk hash and in the DuckDB oracle (which
+    * cannot md5 a BLOB — the q_media_frames discipline), so chunk
+    * hashes are hex-string md5s, bit-identical across engines for ANY
+    * bytes.
     *
     * Emits per media: (media_id, n_bytes, n_chunks, n_shared,
     * shared_bytes) where a chunk is SHARED when its (hash, length)
@@ -220,88 +223,26 @@ object Multimodal {
     * storage-dedup yield estimate, and Σ shared_bytes/Σ n_bytes the
     * corpus figure.
     *
-    * Plan shape: boundary detection and chunk slicing are per-payload
-    * projections (posexplode over byte positions feeding one
-    * collect_list back on the SAME media key — one media-keyed
-    * exchange); chunk sharing is one (hash, len) aggregate plus a
-    * broadcast-size join back. SEAM note: the per-position explode
-    * materializes n rows per payload, fine for the KB-scale payloads
-    * here; MB-scale media wants the boundary scan fused into one
-    * native Expression pass (the MediaDims pattern) — the plumbing
-    * (hex semantics, chunk table, share join) stays identical. */
-  /** Boundary-hash fold constants: the qualityRules bounded-polynomial
-    * discipline (TextAnalysis GramP) — per-step mod keeps the
-    * accumulator < 2⁴², so acc·K + byte < 2⁶³, no Java wraparound; K
-    * is small enough that every byte still perturbs all divisor
-    * residues. */
-  private val ChunkK = 1000003L
-  private val ChunkP = 4398042316799L // prime < 2^42
-
+    * Plan shape: the chunk table is one projection + explode over the
+    * payload scan, persisted because it feeds both the share aggregate
+    * and the join back. "≥ 2 distinct non-NULL media" is
+    * min(media_id) < max(media_id) — a plain partial aggregate, no
+    * distinct-aggregate shuffle; both forms ignore NULL ids alike. */
   def cdcChunkStats(media: DataFrame, window: Int = 8,
                     divisor: Int = 32): DataFrame = {
-    // spread first: documents.parquet is a single split at bench scale
-    // and the per-byte fold below is the expensive projection (the
-    // qualityRules spreadToCores lesson; no-op at lake scale)
-    val ph = graft.core.Xform.spreadToCores(media
+    val chunks = graft.core.Caches.track(media
       .filter(col("payload").isNotNull && octet_length(col("payload")) > 0)
-      .select(col("media_id"), lower(hex(col("payload"))).as("ph"),
-        octet_length(col("payload")).cast("long").as("n_bytes")))
-    // Window hash = 8-step integer polynomial fold reading the hex
-    // DIRECTLY per position. Two rejected forms: md5-per-window paid a
-    // 32-char digest + parse per position (~1.6M windows at sf0.1:
-    // 6.1 s); a pre-decoded bytes-array column gets INLINED into the
-    // position lambda by CollapseProject (the transform is
-    // single-referenced, so the rule collapses it into the consuming
-    // projection), re-decoding the whole payload once per position —
-    // O(bytes²) per payload, minutes at sf0.1. Reading `ph` (a plain
-    // scan attribute, nothing to inline) keeps the fold linear.
-    // DuckDB's list_reduce has no explicit zero but seeds with the
-    // first element — identical to Spark's aggregate from 0 here,
-    // since (0·K + b₀) % P = b₀.
-    def winHash(i: Column): Column = aggregate(
-      sequence(lit(0L), lit(window - 1L)),
-      lit(0L),
-      (a, j) => (a * ChunkK +
-        conv(col("ph").substr(((i - window + 1L + j) * 2L - 1L).cast("int"),
-          lit(2)), 16, 10).cast("long")) % ChunkP)
-    // Boundary positions: i in [window, n_bytes-1], window = bytes
-    // (i-window, i]. Everything stays INSIDE one projection as
-    // higher-order lambdas over the position array — an explode would
-    // carry the payload once per position (O(bytes²) row volume). The
-    // candidate array is guarded empty when n_bytes-1 < window:
-    // Spark's sequence(a, b) auto-steps DOWNWARD for b < a and would
-    // mint phantom positions past the payload end.
-    val cuts = concat(
-      array(lit(0L)),
-      filter(
-        when(col("n_bytes") - 1L >= window,
-          sequence(lit(window.toLong), col("n_bytes") - 1L))
-          .otherwise(array().cast("array<long>")),
-        i => winHash(i) % divisor === 0L),
-      array(col("n_bytes")))
-    // persisted: the chunk table feeds both the share aggregate and the
-    // join back (untracked, the hex chunk chain would run twice)
-    val chunks = graft.core.Caches.track(ph
-      .select(col("media_id"), col("ph"), cuts.as("cuts"))
       .select(col("media_id"),
-        // chunks hash inside the transform so the hex string never
-        // rides the explode — only (hash, len) pairs leave the row
-        explode(expr(
-          "transform(sequence(0, size(cuts) - 2), " +
-            "k -> named_struct(" +
-            "'ch', md5(substring(ph, CAST(2*cuts[k] + 1 AS INT), " +
-            "CAST(2*(cuts[k+1] - cuts[k]) AS INT))), " +
-            "'l', cuts[k+1] - cuts[k]))")).as("c"))
-      .filter(col("c.l") > 0L)
+        explode(graft.functions.CdcChunks(col("payload"), window, divisor)).as("c"))
       .select(col("media_id"), col("c.ch").as("ch"), col("c.l").as("clen")))
     val share = chunks.groupBy(col("ch"), col("clen"))
-      .agg(countDistinct(col("media_id")).as("n_media"))
+      .agg((min(col("media_id")) < max(col("media_id"))).as("shared"))
     chunks.join(share, Seq("ch", "clen"))
       .groupBy(col("media_id"))
       .agg(sum(col("clen")).as("n_bytes"),
         count(lit(1)).as("n_chunks"),
-        sum(when(col("n_media") >= 2L, 1L).otherwise(0L)).as("n_shared"),
-        sum(when(col("n_media") >= 2L, col("clen")).otherwise(0L)).as("shared_bytes"))
+        sum(when(col("shared"), 1L).otherwise(0L)).as("n_shared"),
+        sum(when(col("shared"), col("clen")).otherwise(0L)).as("shared_bytes"))
   }
 
   /** 64-bit perceptual difference hash (dHash, the aHash/pHash family's

@@ -24,4 +24,14 @@ class BenchSpec extends AnyFunSuite {
     } finally java.nio.file.Files.delete(f)
     assert(Bench.readRefTimes(f.toString) == Left("missing"))
   }
+
+  test("appendSample writes one Jackson-readable line per sample; a failure reads -1") {
+    val out = new java.io.StringWriter()
+    Bench.appendSample(out, "q1_agg", 0.25, 1700000000L)
+    Bench.appendSample(out, "q_broken", Double.PositiveInfinity, 1700000001L)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = out.toString.split("\n").toSeq.map(mapper.readTree)
+    assert(lines.map(l => (l.get("query").asText, l.get("s").asDouble, l.get("epoch").asLong)) ==
+      Seq(("q1_agg", 0.25, 1700000000L), ("q_broken", -1.0, 1700000001L)))
+  }
 }

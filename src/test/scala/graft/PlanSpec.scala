@@ -728,6 +728,13 @@ class PlanSpec extends SparkSpec {
       s"chunk table must persist across its two consumers:\n$p")
   }
 
+  test("cdc chunks: one native byte scan — no lambda, no hex rendering, no round-robin spread") {
+    val p = plan(SparkEntry.queries("q_cdc_chunks")(spark, sf))
+    assert(p.contains("cdc_chunks("), s"boundary scan must be the native expression:\n$p")
+    Seq("lambdafunction", "conv(", "lower(hex(", "RoundRobinPartitioning", "count(distinct")
+      .foreach(t => assert(!p.contains(t), s"plan must not contain '$t':\n$p"))
+  }
+
   test("cluster quality: literal-centroid projection — no join, one cid reduce") {
     val p = plan(SparkEntry.queries("q_cluster_quality")(spark, sf))
     assert(!p.contains("Join"), s"centroids must embed as a literal array, not a join:\n$p")
