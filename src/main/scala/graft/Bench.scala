@@ -311,6 +311,9 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     def fmt(v: Double): String = f"$v%.3f"
+    // the policy the samples ran under, so BENCH_*.json files from
+    // before and after a policy change can be told apart
+    val policy = graft.core.Scale.policyJson(spark)
     // n_failed emitted unconditionally (including 0): rounds 1-9 summed
     // -1 sentinels into the total, so consumers need an always-present
     // marker to know which accounting a given BENCH file uses
@@ -332,7 +335,7 @@ object Bench {
         s""","ctrl":{"median":${fmt(ctrlMed)},"n":${ctrlSamples.size}""" +
         s""","resampled_n":${resampled.size}}""" +
         s""","xchk":$xchkJson,"xchk_ref":"$xchkRef"""" +
-        s""","n_queries":${results.size},"sf":"$sfDir"}"""
+        s""","n_queries":${results.size},"sf":"$sfDir","policy":$policy}"""
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val fullLine = jsonLine(fullQs, 0)

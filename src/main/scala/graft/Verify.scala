@@ -61,7 +61,7 @@ object Verify {
         .mkString("{", ",", "}"))
     // Coverage self-check on stdout: entry count must equal query count.
     println(s"[verify] ${selected.size - errors.size}/${selected.size} " +
-      s"queries succeeded" +
+      s"queries succeeded; policy=${graft.core.Scale.policyJson(spark)}" +
       (if (errors.nonEmpty) s"; FAILED: ${errors.keys.mkString(", ")}" else ""))
     // Deliberately exit 0 even on per-query failures: the driver compares
     // whatever parquet dirs exist, and a nonzero exit could discard the

@@ -13,16 +13,28 @@ import org.apache.spark.sql.SparkSession
   *   enough data to dwarf that. Enabled when the largest input table
   *   crosses [[AqeRowThreshold]]; plan SHAPES are identical either way
   *   (PlanSpec asserts them with AQE on).
-  * - Below that threshold AQE cannot coalesce, so a fixed
-  *   shuffle-partition count equal to the core count over-partitions
-  *   tiny shuffles: the r16 driver scaling block showed 11 queries
-  *   FASTER at 8 cores than 32 (worst q_item_cf 0.21x) purely from
-  *   32-way task/partition overhead on sub-MB shuffles. Derive the
-  *   partition count from the input size instead — rows/[[
-  *   RowsPerPartition]] clamped to [[MinPartitions]]..cores — so the
-  *   setting scales with the data rather than the machine. At lake
-  *   scale the AQE branch governs and this one never fires; on a real
-  *   cluster the starting partition count stays the core count and
+  * - Below that threshold AQE cannot coalesce, so the partition count
+  *   is sized from the input: ceil(rows / [[RowsPerPartition]]) clamped
+  *   to 1..cores. The count reaches every stage the session plans —
+  *   batch shuffles, each stateful operator's state partitions (one
+  *   state-store commit per partition per trigger; fixed when a
+  *   streaming query first starts, so a checkpoint keeps its count) and
+  *   the ledger merges in `foreachBatch`. A floor above the data size
+  *   only adds tasks and commits. On 4 cores both benchmark workloads
+  *   (`stream` ~64k offered rows, `batch` heavy corpus 60k rows) size
+  *   to 2 partitions; medians, `perfbench/run.py --seconds 6`:
+  *
+  *   | floor | parts | stream event latency p50 | state commit p50 | tasks stream / batch |
+  *   |---|---|---|---|---|
+  *   | 8 | 8 | 1432 ms | 1647 ms | 1234 / 399 |
+  *   | min(8, cores) | 4 | 999 ms | | |
+  *   | none (data-sized) | 2 | 761 ms | 201 ms | 620 / 184 |
+  *
+  *   Two CPU-bound pair-unroll kernels pay for it at 2 tasks (q_item_cf
+  *   1.13 -> 1.40 s, q_adamic_adar 0.83 -> 1.02 s per pass) while the
+  *   heavy set's total stays flat and the light set gets faster. At
+  *   lake scale the AQE branch governs and this one never fires; on a
+  *   real cluster the starting partition count stays the core count and
   *   AQE's advisory size does the coalescing.
   */
 object Scale {
@@ -31,7 +43,6 @@ object Scale {
     * small enough that a skew-free aggregate stays parallel, large
     * enough that per-task scheduling overhead stops dominating. */
   val RowsPerPartition = 50000L
-  val MinPartitions = 8
 
   /** Task slots for a runner: `SPARK_GRAFT_CPUS`, else this host's cores. */
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -71,12 +82,22 @@ object Scale {
        else Tables.table(spark, sfDir, n)).count()).getOrElse(0L))).max
   }
 
+  /** The policy a live session runs under, read back from its conf as a
+    * JSON object — `{"cores":…,"aqe":…,"shuffle_partitions":…}` — so a
+    * report line says which policy produced its numbers. */
+  def policyJson(spark: SparkSession): String = {
+    val c = spark.conf
+    s"""{"cores":${spark.sparkContext.defaultParallelism}""" +
+      s""","aqe":${c.get("spark.sql.adaptive.enabled").trim.toBoolean}""" +
+      s""","shuffle_partitions":${c.get("spark.sql.shuffle.partitions").trim.toInt}}"""
+  }
+
   /** Apply the scale-adaptive settings for an input of `maxRows`. */
   def configure(spark: SparkSession, maxRows: Long, cores: Int): Unit = {
     val aqe = maxRows > AqeRowThreshold
     spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     if (!aqe) {
-      val parts = math.max(MinPartitions.toLong,
+      val parts = math.max(1L,
         math.min(cores.toLong, (maxRows + RowsPerPartition - 1) / RowsPerPartition))
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     }

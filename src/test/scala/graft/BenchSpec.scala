@@ -1,12 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench's reference cross-check (`xchk`) loads per-query Spark
   * times from the committed dual-run file; an empty load silently
   * disables the cross-check, so the loader is pinned against the file
-  * itself and against the two ways it can be unusable. */
-class BenchSpec extends AnyFunSuite {
+  * itself and against the two ways it can be unusable. The report
+  * line's `policy` field is read back from the live session. */
+class BenchSpec extends SparkSpec {
   test("readRefTimes parses every query of the committed BENCH_BOTH.json") {
     val Right((sf, times)) = Bench.readRefTimes("BENCH_BOTH.json")
     assert(sf.nonEmpty)
@@ -33,5 +32,17 @@ class BenchSpec extends AnyFunSuite {
     val lines = out.toString.split("\n").toSeq.map(mapper.readTree)
     assert(lines.map(l => (l.get("query").asText, l.get("s").asDouble, l.get("epoch").asLong)) ==
       Seq(("q1_agg", 0.25, 1700000000L), ("q_broken", -1.0, 1700000001L)))
+  }
+
+  test("policy field reads cores, AQE and shuffle partitions back from the live session") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def policy(maxRows: Long) = {
+      val s = spark.newSession()
+      graft.core.Scale.configure(s, maxRows, 4)
+      val p = mapper.readTree(graft.core.Scale.policyJson(s))
+      (p.get("cores").asInt, p.get("aqe").asBoolean, p.get("shuffle_partitions").asInt)
+    }
+    assert(policy(64000L) == ((4, false, 2)))
+    assert(policy(graft.core.Scale.AqeRowThreshold + 1) == ((4, true, 4))) // AQE: as built
   }
 }

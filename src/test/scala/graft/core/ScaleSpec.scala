@@ -10,16 +10,21 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
   test("configure sets AQE, partitions, the object-agg threshold and the probe's start") {
     val built = spark.newSession().conf.get("spark.sql.shuffle.partitions")
-    for ((maxRows, aqe, parts) <- Seq(
-        (1000L, "false", "8"),                     // below the floor
-        (600000L, "false", "12"),                  // rows / RowsPerPartition
-        (Scale.AqeRowThreshold, "false", "16"),    // capped at cores
-        (Scale.AqeRowThreshold + 1, "true", built))) { // AQE: left as built
+    for ((maxRows, cores, aqe, parts) <- Seq(
+        (1000L, 16, "false", "1"),                     // data-sized: no floor
+        (600000L, 16, "false", "12"),                  // rows / RowsPerPartition
+        (Scale.AqeRowThreshold, 16, "false", "16"),    // capped at cores
+        (0L, 4, "false", "1"),
+        (1000L, 4, "false", "1"),
+        (64000L, 4, "false", "2"),                     // the stream benchmark's size
+        (600000L, 4, "false", "4"),                    // capped at cores
+        (Scale.AqeRowThreshold + 1, 16, "true", built))) { // AQE: left as built
       val s = spark.newSession()
-      Scale.configure(s, maxRows, 16)
+      Scale.configure(s, maxRows, cores)
       val c = s.conf.getAll
       assert(c("spark.sql.adaptive.enabled") == aqe, s"maxRows=$maxRows")
-      assert(c("spark.sql.shuffle.partitions") == parts, s"maxRows=$maxRows")
+      assert(c("spark.sql.shuffle.partitions") == parts, s"maxRows=$maxRows cores=$cores")
+      assert((1 to cores).contains(parts.toInt), s"maxRows=$maxRows cores=$cores")
       assert(c("spark.sql.limit.initialNumPartitions") == parts, s"maxRows=$maxRows")
       assert(c("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
     }

@@ -372,6 +372,68 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Map("a" -> 3L, "b" -> 5L))
   }
 
+  test("a checkpoint written under 8 shuffle partitions restores at 8 under a 2-partition session") {
+    // Scale.configure sizes a query's state partitions from its input;
+    // a checkpoint keeps the count it started with, so one written under
+    // the old fixed floor of 8 must restore and run on under a session
+    // that now plans 2.
+    import spark.implicits._
+    val s = spark.newSession()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val batches = Seq(
+      Seq((ts(1), "e1", "a"), (ts(2), "e2", "a"), (ts(3), "e3", "b"), (ts(3), "e1", "a")),
+      Seq((ts(6), "e4", "a"), (ts(7), "e2", "a"), (ts(12), "e5", "b")),
+      // e3 repeats across the restart: only the restored dedup state drops it
+      Seq((ts(14), "e3", "b"), (ts(16), "e6", "a"), (ts(40), "e7", "b")))
+    def counts(ms: MemoryStream[(Timestamp, String, String)]) =
+      Streaming.tumblingChained(
+        Streaming.distinctWithinWatermark(ms.toDF().toDF("ts", "id", "k"), "ts", "10 minutes",
+          Seq("id")),
+        "ts", "5 minutes", Seq(col("k")), Seq(count(lit(1)).as("n")))
+    def start(ms: MemoryStream[(Timestamp, String, String)], ckpt: String, out: String) =
+      counts(ms).writeStream.format("parquet").option("checkpointLocation", ckpt)
+        .option("path", out).outputMode("append").start()
+    def feed(q: org.apache.spark.sql.streaming.StreamingQuery,
+             ms: MemoryStream[(Timestamp, String, String)], bs: Seq[Seq[(Timestamp, String, String)]]) =
+      bs.foreach { b => ms.addData(b); q.processAllAvailable() }
+    def sink(out: String) = s.read.parquet(out)
+      .select(col("window_start").cast("string"), col("k"), col("n"))
+      .as[(String, String, Long)].collect().toSet
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val (ckpt, out) = (tmp("graft_restart_ckpt"), tmp("graft_restart_out"))
+    val ms = MemoryStream[(Timestamp, String, String)]
+    val first = start(ms, ckpt, out)
+    feed(first, ms, batches.take(2)); first.stop()
+
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val restored = start(ms, ckpt, out)
+    feed(restored, ms, batches.drop(2)); restored.stop()
+    val ops = restored.lastProgress.stateOperators
+    assert(ops.length == 2 && ops.forall(_.numShufflePartitions == 8),
+      ops.map(o => s"${o.operatorName}=${o.numShufflePartitions}").mkString(","))
+    // every offset-log entry, the restored run's included, records the 8
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val logged = new java.io.File(ckpt, "offsets").listFiles().filter(_.getName.forall(_.isDigit))
+      .map { f =>
+        val meta = java.nio.file.Files.readAllLines(f.toPath).get(1)
+        f.getName.toInt -> mapper.readTree(meta).path("conf").path("spark.sql.shuffle.partitions").asText
+      }.toMap
+    assert(logged.keySet.max >= 2 && logged.values.toSet == Set("8"), logged)
+
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val (ckpt2, out2) = (tmp("graft_straight_ckpt"), tmp("graft_straight_out"))
+    val ms2 = MemoryStream[(Timestamp, String, String)]
+    val straight = start(ms2, ckpt2, out2)
+    feed(straight, ms2, batches); straight.stop()
+    val expected = Set(("2024-01-01 00:00:00", "a", 2L), ("2024-01-01 00:00:00", "b", 1L),
+      ("2024-01-01 00:05:00", "a", 1L), ("2024-01-01 00:10:00", "b", 1L),
+      ("2024-01-01 00:15:00", "a", 1L))
+    assert(sink(out2) == expected)
+    assert(sink(out) == sink(out2))
+  }
+
   test("streaming minhash dedup: first arrival claims the bands, later near-dups are flagged") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
