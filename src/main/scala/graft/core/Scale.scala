@@ -36,6 +36,22 @@ import org.apache.spark.sql.SparkSession
   *   lake scale the AQE branch governs and this one never fires; on a
   *   real cluster the starting partition count stays the core count and
   *   AQE's advisory size does the coalescing.
+  * - `file:` is [[LocalFs]]'s fork-free filesystem: [[builder]] sets it,
+  *   [[configure]] installs it on a session built elsewhere. Without
+  *   `libhadoop.so`, the stock one forks `readlink` on every checkpoint
+  *   rename and `chmod` on every file and directory it creates, on the
+  *   stream-execution thread and inside state-store commits. 4 cores,
+  *   `perfbench/run.py --seconds 6`, `stream`:
+  *
+  *   | `file:` | forks per run | readlink / chmod | wal commit | state commit p50 | trigger | event latency p50 |
+  *   |---|---|---|---|---|---|---|
+  *   | stock | 2730 | 1904 / 820 | 32 ms | 203-227 ms | 512-533 ms | 786 ms |
+  *   | fork-free | 6 | 0 / 0 | 2-3 ms | 16-20 ms | 318-362 ms | 485 ms |
+  *
+  *   (forks: one JFR recording, seed 101; the 6 left are Spark's
+  *   start-up `setsid`/`getconf` and shutdown `rm`. Layer times: traced
+  *   seeds 101-103; latency: medians of 10 pairs.) Per call: a
+  *   `readlink` or `chmod` fork ~3.2 ms, the nio chmod ~0.006 ms.
   */
 object Scale {
   val AqeRowThreshold = 5000000L
@@ -62,6 +78,7 @@ object Scale {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+      .config(LocalFs.Impl.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
   }
 
   /** [[builder]], WARN logging, [[configure]] for `sfDir`'s inputs. */
@@ -83,13 +100,15 @@ object Scale {
   }
 
   /** The policy a live session runs under, read back from its conf as a
-    * JSON object — `{"cores":…,"aqe":…,"shuffle_partitions":…}` — so a
+    * JSON object — `{"cores":…,"aqe":…,"shuffle_partitions":…,"local_fs":…}`
+    * (`local_fs`: the class behind `file:` in its Hadoop conf) — so a
     * report line says which policy produced its numbers. */
   def policyJson(spark: SparkSession): String = {
     val c = spark.conf
     s"""{"cores":${spark.sparkContext.defaultParallelism}""" +
       s""","aqe":${c.get("spark.sql.adaptive.enabled").trim.toBoolean}""" +
-      s""","shuffle_partitions":${c.get("spark.sql.shuffle.partitions").trim.toInt}}"""
+      s""","shuffle_partitions":${c.get("spark.sql.shuffle.partitions").trim.toInt}""" +
+      s""","local_fs":"${LocalFs.className(spark.sessionState.newHadoopConf())}"}"""
   }
 
   /** Apply the scale-adaptive settings for an input of `maxRows`. */
@@ -116,5 +135,8 @@ object Scale {
     // is a few MB per task — far under executor memory at any scale.
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       "65536")
+    // a session not built by `builder` (the benchmark's) still gets the
+    // fork-free `file:` filesystem before its first checkpoint commit
+    LocalFs.install(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -4,7 +4,8 @@ package graft
   * times from the committed dual-run file; an empty load silently
   * disables the cross-check, so the loader is pinned against the file
   * itself and against the two ways it can be unusable. The report
-  * line's `policy` field is read back from the live session. */
+  * line's `policy` field is read back from the live session, the
+  * filesystem behind `file:` included. */
 class BenchSpec extends SparkSpec {
   test("readRefTimes parses every query of the committed BENCH_BOTH.json") {
     val Right((sf, times)) = Bench.readRefTimes("BENCH_BOTH.json")
@@ -44,5 +45,13 @@ class BenchSpec extends SparkSpec {
     }
     assert(policy(64000L) == ((4, false, 2)))
     assert(policy(graft.core.Scale.AqeRowThreshold + 1) == ((4, true, 4))) // AQE: as built
+  }
+
+  test("policy field names the class behind file: in the live session's Hadoop conf") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val s = spark.newSession()
+    graft.core.Scale.configure(s, 64000L, 4)
+    assert(mapper.readTree(graft.core.Scale.policyJson(s)).get("local_fs").asText ==
+      classOf[graft.core.ForkFreeLocalFileSystem].getName)
   }
 }
