@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BigramEntropyStats, BpeMerge, ClfStats, CosineSimilarity, DHashBands, LangId, MediaDims, MediaEnergyStats, MinHashSignature, NfcNormalize, RollingHash, ShingleHashes, Shingles, SimHash32, TextCounts, TokenHashBuckets, TokenSetFingerprint, WordpieceStats}
+import graft.functions.{BigramEntropyStats, BpeMerge, ClfStats, CosineSimilarity, DHashBands, LangId, MediaDims, MediaEnergyStats, MinHashSignature, NfcNormalize, RollingHash, ShingleHashes, Shingles, SimHashN, TextCounts, TokenHashBuckets, TokenSetFingerprint, WordpieceStats}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -55,8 +55,8 @@ object GraftExtensions {
       new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
       (args: Seq[Expression]) => MinHashSignature(args(0), intLit(args(1), "minhash_signature k"))),
     (FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (args: Seq[Expression]) => SimHash32(args(0))),
+      new ExpressionInfo(classOf[SimHashN].getName, "simhash32"),
+      (args: Seq[Expression]) => SimHashN(args(0), 32)),
     (FunctionIdentifier("shingles"),
       new ExpressionInfo(classOf[Shingles].getName, "shingles"),
       (args: Seq[Expression]) => Shingles(args(0), intLit(args(1), "shingles w"))),

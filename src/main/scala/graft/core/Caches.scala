@@ -14,14 +14,14 @@ import org.apache.spark.sql.DataFrame
   *    [[release]]) keeps the strictly sequential
   *    build→action→release contract the harness uses;
   *  - [[scope]] gives a concurrent harness a PRIVATE registry: every
-  *    frame tracked during the body (operators call [[track]]
-  *    statically, so redirection is thread-local to the constructing
-  *    thread) lands in the returned [[Scope]], and closing that scope
-  *    releases exactly those handles — interleaved queries can no
-  *    longer release each other's caches. Close AFTER the consuming
-  *    action (the frames are lazy); [[Scope]] is an `AutoCloseable`,
-  *    and closing from a different thread than the one that built the
-  *    queries is safe.
+  *    frame tracked during the body lands in the returned [[Scope]],
+  *    and closing that scope releases exactly those handles —
+  *    interleaved queries can no longer release each other's caches.
+  *    Operators call [[track]] statically, so the redirection is
+  *    thread-local: a harness that builds on several threads opens one
+  *    scope per thread. Close AFTER the consuming action (the frames
+  *    are lazy); [[Scope]] is an `AutoCloseable`, and closing from a
+  *    different thread than the one that built the queries is safe.
   */
 object Caches {
 
@@ -73,24 +73,4 @@ object Caches {
     catch { case t: Throwable => s.close(); throw t }
     finally active.set(prev)
   }
-
-  /** Run `body` with tracking redirected to an EXISTING scope. Scope
-    * redirection is thread-local to the constructing thread, so a
-    * harness that fans ONE query's construction across worker threads
-    * (or builds artifacts under another thread's memo) wraps each
-    * worker's construction in `rebind(s) {...}` — otherwise those
-    * workers' [[track]] calls land in the GLOBAL queue, where a
-    * concurrent harness's [[release]] can unpersist them mid-query.
-    * Exceptions propagate unchanged; the scope stays open (its owner
-    * closes it). */
-  def rebind[T](s: Scope)(body: => T): T = {
-    val prev = active.get()
-    active.set(s)
-    try body
-    finally active.set(prev)
-  }
-
-  /** The scope active on THIS thread, if any — capture it inside a
-    * [[scope]] body to hand to worker threads via [[rebind]]. */
-  def current: Option[Scope] = Option(active.get())
 }

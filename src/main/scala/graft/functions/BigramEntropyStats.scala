@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -32,18 +32,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Documents with fewer than 2 tokens return n_bigrams = 0 (callers
   * filter them, matching the relational form's size ≥ 2 gate).
   */
-case class BigramEntropyStats(child: Expression) extends UnaryExpression {
+case class BigramEntropyStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BigramEntropyStats.Schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bigram_entropy_stats expects array<string>, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     BigramEntropyStats.build(input.asInstanceOf[ArrayData])

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
@@ -34,18 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Same static-call codegen discipline as [[MediaDims]]: the generated
   * projection invokes the identical [[CdcChunks.build]] the interpreted
   * path runs. */
-case class CdcChunks(child: Expression, window: Int, divisor: Int) extends UnaryExpression {
+case class CdcChunks(child: Expression, window: Int, divisor: Int)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = CdcChunks.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cdc_chunks expects binary, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     CdcChunks.build(input.asInstanceOf[Array[Byte]], window, divisor)

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,18 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * src/kafka_streams_clojure/api.clj:157-159's "any fn in the
   * pipeline", with this scorer as the curation-classifier instance).
   */
-case class ClfStats(child: Expression) extends UnaryExpression {
+case class ClfStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ClfStats.Schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"clf_stats expects string, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     ClfStats.build(input.asInstanceOf[UTF8String])

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
@@ -21,20 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * cell(r·9+c) > cell(r·9+c+1); band j packs rows 2j, 2j+1 at bit
   * (r%2)·8+c. Returns array<long> [b0, b1, b2, b3], each < 2¹⁶.
   * Empty payloads return null (the caller filters n_bytes > 0). */
-case class DHashBands(child: Expression) extends UnaryExpression {
+case class DHashBands(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dhash_bands expects binary, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     DHashBands.build(input.asInstanceOf[Array[Byte]])

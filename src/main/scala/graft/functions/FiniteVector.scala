@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType}
@@ -29,18 +29,11 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType}
   * while DuckDB's list_sum SKIPS the NULL term — a cross-engine parity
   * trap this contract never has to enter).
   */
-case class FiniteVector(child: Expression) extends UnaryExpression {
+case class FiniteVector(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BooleanType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"is_finite_vec expects array<float>, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]

@@ -86,7 +86,7 @@ object GraftFunctions {
 
   /** 32-bit SimHash over the tokens of `text`: bit b is set iff the sum of
     * (+1 / -1) over tokens' hash-bit-b values is positive. Returns BIGINT.
-    * Native single-pass expression — see [[SimHash32]]. */
+    * Native single-pass expression — see [[SimHashN]]. */
   def simhash32(text: Column): Column = SimHash32(tokens(text))
 
   /** Width-bit SimHash (width ≤ 60) over the tokens of `text` — see

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,18 +32,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[TextCounts]]: the generated projection invokes the identical
   * [[MediaDims.build]] the interpreted path runs.
   */
-case class MediaDims(child: Expression) extends UnaryExpression {
+case class MediaDims(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = MediaDims.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"media_dims expects binary, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     MediaDims.build(input.asInstanceOf[Array[Byte]])

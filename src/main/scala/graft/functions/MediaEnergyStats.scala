@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
@@ -27,18 +27,11 @@ import org.apache.spark.sql.types._
   * mirrored by the oracle's hex-accessor list fold. Empty payloads
   * return (0, 0, 0). */
 case class MediaEnergyStats(child: Expression, frameBytes: Int,
-                            threshold: Long) extends UnaryExpression {
+                            threshold: Long) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = MediaEnergyStats.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"media_energy_stats expects binary, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     MediaEnergyStats.build(input.asInstanceOf[Array[Byte]], frameBytes,

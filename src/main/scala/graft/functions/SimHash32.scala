@@ -2,74 +2,37 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** 32-bit SimHash over a token array as a single native expression.
+/** Width-bit SimHash (width ≤ 60) over a token array as a single native
+  * expression.
   *
   * Bit b of the result is set iff the sum over tokens of ±1 (by bit b of
-  * the token's md5-derived 60-bit hash) is positive — identical values to
-  * the HOF composition in [[GraftFunctions.simhash32]]'s oracle SQL, but
-  * one md5 + one 32-counter update per token instead of a 32-element
-  * array-zip lambda chain per token (measured ~6× at sf0.1).
+  * the token's md5-derived 60-bit hash, the base hash of
+  * [[GraftFunctions.md5Long]]) is positive — identical values to the HOF
+  * composition in [[GraftFunctions.simhash32]]'s oracle SQL, which
+  * derives bit b with `(md5long(t) >> b) & 1`, but one md5 + one
+  * width-counter update per token instead of a width-element array-zip
+  * lambda chain per token (measured ~6× at sf0.1, width 32).
+  *
+  * A wider fingerprint is what banded dedup needs at scale: it lets band
+  * width (= buckets per band, 2^(width/bands)) and band count (= the
+  * hamming-distance recall guarantee, maxDist < bands) be chosen
+  * independently.
   *
   * Empty array → 0L (all bit-sums are 0, no bit set) — same as the
   * aggregate-with-init-0 form. Null elements are skipped (they hash to
   * null in the HOF form and contribute no vote).
   */
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash32 expects array<string>, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashN.build(input.asInstanceOf[ArrayData], 32)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SimHashN.build($a, 32);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash32"
-}
-
-object SimHash32 {
-  def apply(toks: Column): Column = bridge.toColumn(SimHash32(bridge.toExpression(toks)))
-}
-
-/** Width-parameterized SimHash (width ≤ 60) — the generalization of
-  * [[SimHash32]] banded dedup needs at scale: a wider fingerprint is what
-  * lets band width (= buckets per band, 2^(width/bands)) and band count
-  * (= the hamming-distance recall guarantee, maxDist < bands) be chosen
-  * independently. Bits come from the same md5-derived 60-bit token hash
-  * as [[GraftFunctions.md5Long]], so the SQL oracle derives identical
-  * values with `(md5long(t) >> b) & 1`.
-  */
-case class SimHashN(child: Expression, width: Int) extends UnaryExpression {
+case class SimHashN(child: Expression, width: Int) extends UnaryExpression with ExpectsInputTypes {
   require(width > 0 && width <= 60, s"simhash width must be in (0, 60], got $width")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash expects array<string>, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     SimHashN.build(input.asInstanceOf[ArrayData], width)
@@ -88,7 +51,7 @@ object SimHashN {
   def apply(toks: Column, width: Int): Column =
     bridge.toColumn(SimHashN(bridge.toExpression(toks), width))
 
-  /** Shared eval body ([[SimHash32]] is the width = 32 instance). */
+  /** Shared eval body for interpreted and generated paths. */
   def build(arr: ArrayData, width: Int): Long = {
     val n = arr.numElements()
     val counts = new Array[Int](width)
@@ -111,4 +74,9 @@ object SimHashN {
     while (b < width) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
+}
+
+/** Column factory of the 32-bit SimHash, `SimHashN(toks, 32)`. */
+object SimHash32 {
+  def apply(toks: Column): Column = SimHashN(toks, 32)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -15,18 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Exists because the HOF form ([[GraftFunctions.l2norm]]) never enters
   * whole-stage codegen and this sits on corpus-profile scans.
   */
-case class SumSquares(child: Expression) extends UnaryExpression {
+case class SumSquares(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sum_squares expects array<float>, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]

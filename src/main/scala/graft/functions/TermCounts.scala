@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
@@ -23,18 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * first-occurrence, which no consumer depends on (everything
   * downstream aggregates or re-sorts).
   */
-case class TermCounts(child: Expression) extends UnaryExpression {
+case class TermCounts(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = TermCounts.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"term_counts expects array<string>, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any = TermCounts.build(input)
 
@@ -65,8 +58,10 @@ object TermCounts {
       val t = toks.getUTF8String(i)
       val c = counts.get(t)
       // clone on first sight: getUTF8String may return a view into a
-      // reusable buffer; a retained key/output must own its bytes
-      if (c == null) counts.put(t.clone(), Array(1L)) else c(0) += 1L
+      // reusable buffer; a retained key/output must own its bytes. A
+      // NULL token is a term of its own, as in the groupBy form
+      if (c == null) counts.put(if (t == null) null else t.clone(), Array(1L))
+      else c(0) += 1L
       i += 1
     }
     val out = new Array[Any](counts.size())

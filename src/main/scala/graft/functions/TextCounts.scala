@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
@@ -23,18 +23,11 @@ import org.apache.spark.sql.types._
   *  - n_alnum / n_bpe: maximal [A-Za-z0-9] runs; Σ ceil(len/4)
   *  - n_punct: characters in the ASCII punctuation class (\p{Punct})
   */
-case class TextCounts(child: Expression) extends UnaryExpression {
+case class TextCounts(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = TextCounts.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_counts expects string, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any = TextCounts.build(input)
 

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.bridge
@@ -46,7 +46,7 @@ case class TopKScoreIds(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKScoreIds.Buf] {
+  extends TypedImperativeAggregate[TopKScoreIds.Buf] with ExpectsInputTypes {
 
   require(k > 0, "top_k_score_ids: k must be positive")
 
@@ -54,14 +54,7 @@ case class TopKScoreIds(
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (score.dataType, id.dataType) match {
-      case (DoubleType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_k_score_ids expects (double, bigint), got $other")
-    }
+  override def inputTypes = Seq(DoubleType, LongType)
 
   override def createAggregationBuffer(): TopKScoreIds.Buf =
     new TopKScoreIds.Buf(k)

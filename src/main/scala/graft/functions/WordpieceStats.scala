@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
@@ -28,18 +28,11 @@ import org.apache.spark.sql.types._
   * Returns struct(n_words, n_tokens, n_unk): space-split non-empty
   * words, matched-piece count, UNK count — total emitted tokens is
   * n_tokens + n_unk; ratios derive afterward in Column arithmetic. */
-case class WordpieceStats(child: Expression) extends UnaryExpression {
+case class WordpieceStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = WordpieceStats.schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"wordpiece_stats expects string, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any = WordpieceStats.build(input)
 

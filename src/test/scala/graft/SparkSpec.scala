@@ -14,6 +14,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with BeforeAndAfterEa
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = {} // session shared across suites
   override def afterEach(): Unit = graft.core.Caches.release()
+
+  /** Run `body` under one expression-evaluation path: `NO_CODEGEN`
+    * (interpreted, whole-stage codegen off) or `CODEGEN_ONLY`; the
+    * session's settings are restored afterwards. */
+  def withFactoryMode[T](mode: String)(body: => T): T = {
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), mode)
+    spark.conf.set(keys(1), (mode != "NO_CODEGEN").toString)
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -376,34 +376,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("rebind routes worker-thread tracking into the owning scope") {
-    import graft.core.Caches
-    import org.apache.spark.storage.StorageLevel
-    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.storageLevel != StorageLevel.NONE
-    // query construction fanned out across threads: without rebind the
-    // worker's track() lands in the GLOBAL queue (thread-local scope
-    // doesn't follow threads) — the residual hazard round-7 ADVICE
-    // flagged; with rebind it lands in the owner's scope
-    val (workerFrame, s) = Caches.scope {
-      val owner = Caches.current.get
-      val holder = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
-      val t = new Thread(() => {
-        holder.set(Caches.rebind(owner) { Caches.track(spark.range(60).toDF("w")) })
-        ()
-      })
-      t.start(); t.join()
-      holder.get()
-    }
-    workerFrame.count()
-    assert(cached(workerFrame))
-    // a global release must NOT touch it — it belongs to the scope
-    Caches.release()
-    assert(cached(workerFrame), "rebound handle must not sit in the global queue")
-    s.close()
-    assert(!cached(workerFrame))
-  }
-
   test("wilson bound laws on random contingencies: in [0,1), below p-hat, monotone in evidence") {
     val nGen = Gen.choose(1L, 2000L)
     for (i <- 0 until Cases) {

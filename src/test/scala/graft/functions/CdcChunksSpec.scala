@@ -71,18 +71,6 @@ class CdcChunksSpec extends SparkSpec {
       r.getLong(0) -> Option(r.getSeq[Row](1)).map(_.map(x => (x.getString(0), x.getLong(1))))
     }.toMap
 
-  private def withFactoryMode[T](mode: String)(body: => T): T = {
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), mode)
-    spark.conf.set(keys(1), (mode != "NO_CODEGEN").toString)
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   for ((window, divisor) <- Seq((8, 32), (4, 4))) {
     test(s"window $window, divisor $divisor: native scan equals the built-in form, " +
         "interpreted and generated") {
