@@ -71,9 +71,9 @@ object Bench {
       // pageRank/components run on throwaway data (measured: q_pagerank
       // best-of-2 1.95 s unwarmed vs ~1.5 s warmed at sf0.1). NOTE: this
       // 100k-row range (~800 KB of leaf stats) sits far below
-      // smallGraphThreshold, so it warms the SMALL-regime imperative
-      // mapPartitions path (LongIndex loops) — the same regime the sf0.1
-      // bench queries take. The cluster-branch operators (collect_set,
+      // graft.graph.SmallGraph.MaxInputBytes, so it warms the
+      // SMALL-regime single-task path (SmallGraph.load, LongIndex loops)
+      // — the same regime the sf0.1 bench queries take. The cluster-branch operators (collect_set,
       // per-round shuffle_hash joins) are exercised only by PlanSpec's
       // threshold=0 tests, not timed here, so they need no JIT warmup.
       val gw = spark.range(100000).select(

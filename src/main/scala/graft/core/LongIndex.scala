@@ -1,51 +1,56 @@
 package graft.core
 
 /** Open-addressed primitive long → dense-int intern table (power-of-2
-  * capacity, linear probing, load factor ½) — the node-id index for the
-  * small-graph imperative regimes ([[graft.graph.Graph.pageRank]],
-  * [[graft.llm.Dedup.nearDupComponents]]): no boxing, ~16 bytes per
-  * distinct key. Single-threaded by design (one task owns it). */
+  * capacity, linear probing, load factor ½) — the node-id index and the
+  * edge-dedup set of the small-graph imperative regime
+  * ([[graft.graph.SmallGraph]]), shared by [[graft.graph.Graph.pageRank]],
+  * [[graft.graph.Graph.kCore]], [[graft.graph.Graph.lpaCommunities]] and
+  * [[graft.llm.Dedup.nearDupComponents]]: no boxing, 32-64 bytes per
+  * distinct key (2-4 slots of key + index, plus the id array).
+  * Single-threaded by design (one task owns it). */
 final class LongIndex(initialCapacity: Int = 1 << 14) {
   private var cap = java.lang.Integer.highestOneBit(
     math.max(initialCapacity - 1, 8)) << 1
   private var keys = new Array[Long](cap)
-  private var used = new Array[Boolean](cap)
-  private var vals = new Array[Int](cap)
-  private val idArr = new scala.collection.mutable.ArrayBuffer[Long](cap / 2)
+  // dense index + 1 per slot; 0 marks an empty slot
+  private var slots = new Array[Int](cap)
+  private var idArr = new Array[Long](cap / 2)
+  private var n = 0
 
   /** Distinct keys interned so far. */
-  def size: Int = idArr.length
+  def size: Int = n
 
   /** The key whose dense index is `i` (0 ≤ i < size). */
   def id(i: Int): Long = idArr(i)
 
   private def rehash(): Unit = {
-    val ok = keys; val ou = used; val ov = vals
+    val ok = keys; val os = slots
     cap <<= 1
-    keys = new Array[Long](cap); used = new Array[Boolean](cap)
-    vals = new Array[Int](cap)
+    keys = new Array[Long](cap); slots = new Array[Int](cap)
     var i = 0
     while (i < ok.length) {
-      if (ou(i)) {
+      if (os(i) != 0) {
         var h = LongIndex.mix(ok(i)) & (cap - 1)
-        while (used(h)) h = (h + 1) & (cap - 1)
-        keys(h) = ok(i); used(h) = true; vals(h) = ov(i)
+        while (slots(h) != 0) h = (h + 1) & (cap - 1)
+        keys(h) = ok(i); slots(h) = os(i)
       }
       i += 1
     }
   }
 
-  /** Dense index of `v`, interning it on first sight. */
+  /** Dense index of `v`, interning it on first sight (a new key gets
+    * index `size`). */
   def intern(v: Long): Int = {
-    if (idArr.length * 2 >= cap) rehash()
+    if (n * 2 >= cap) rehash()
     var h = LongIndex.mix(v) & (cap - 1)
-    while (used(h)) {
-      if (keys(h) == v) return vals(h)
+    while (slots(h) != 0) {
+      if (keys(h) == v) return slots(h) - 1
       h = (h + 1) & (cap - 1)
     }
-    keys(h) = v; used(h) = true; vals(h) = idArr.length
-    idArr += v
-    idArr.length - 1
+    if (n == idArr.length) idArr = java.util.Arrays.copyOf(idArr, n << 1)
+    keys(h) = v; slots(h) = n + 1; idArr(n) = v
+    n += 1
+    n - 1
   }
 }
 

@@ -39,27 +39,13 @@ object Graph {
     *    distribution: the edges never re-shuffle inside the loop. At
     *    lake scale paying the edge shuffle once instead of per-iteration
     *    is the difference between O(E) and O(iters·E) network;
-    *  - the execution REGIME is size-adaptive: when the input is small
-    *    (summed input-leaf bytes ≤ `smallGraphThreshold`) the whole
-    *    recurrence runs IMPERATIVELY inside one `mapPartitions` task
-    *    over the raw single-partition pair stream — ONE lazy plan, ONE
-    *    shuffle (the repartition(1) of ~16-byte pairs), ONE action,
-    *    and plan depth CONSTANT in `iters`. Per-job scheduling, not
-    *    data, dominates a small graph: the declarative per-layer form
-    *    paid ~0.25 s of driver overhead per internal action (6+
-    *    actions ≈ 1.5 s at sf0.1 against ~0.5 s of actual compute;
-    *    stage-level listener numbers in-code below). This is the
-    *    documented last-resort `mapPartitions` case — per-partition
-    *    imperative logic that Catalyst operators cannot schedule
-    *    efficiently at this size. Above the threshold both joins keep
-    *    cluster partitioning with a `shuffle_hash` hint: a |V|-row rank vector
-    *    must NOT broadcast at 1e9 nodes (each broadcast is also a
-    *    blocking driver job per round), and both sides arrive
-    *    hash-clustered on the join key, so the SHJ plans with zero
-    *    exchanges. The threshold is a parameter so tests pin BOTH
-    *    branches; the default (64 MB of input leaves) bounds the
-    *    single task's in-memory adjacency to a few hundred MB
-    *    uncompressed;
+    *  - the execution REGIME is size-adaptive: a small input runs the
+    *    whole recurrence in one task ([[SmallGraph]]). Above the
+    *    threshold both joins keep cluster partitioning with a
+    *    `shuffle_hash` hint: a |V|-row rank vector must NOT broadcast
+    *    at 1e9 nodes (each broadcast is also a blocking driver job per
+    *    round), and both sides arrive hash-clustered on the join key,
+    *    so the SHJ plans with zero exchanges;
     *  - |V| is collected ONCE driver-side (one count job) — it is
     *    broadcast-scalar state like the k-means centroids, and folding
     *    `1/N` into plan literals deletes a per-iteration broadcast of a
@@ -84,49 +70,15 @@ object Graph {
     * Returns (node, pr) for every node in the edge list. */
   def pageRank(edges: DataFrame, src: Column, dst: Column, iters: Int,
                damping: Double = 0.85,
-               smallGraphThreshold: Long = 67108864L,
+               smallGraphThreshold: Long = SmallGraph.MaxInputBytes,
                checkpointEvery: Int = 0): DataFrame = {
     import graft.core.Caches
     val Scale = 1000000000000.0 // 10^12 fixed-point
     val e0 = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    // the regime decision reads the summed INPUT LEAF sizes of the
-    // edge expression at PLAN TIME — zero jobs: file sources report
-    // exact on-disk bytes, LocalRelations exact row bytes. Leaf sums
-    // are deliberately used instead of the edge plan's own estimate,
-    // which a join inflates to size(L)·size(R). A small input can in
-    // principle join-explode into a large edge set (then the small
-    // path is slow-but-correct single-task); a large input never
-    // misclassifies as small.
-    val inputBytes = edges.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    val small = inputBytes <= BigInt(smallGraphThreshold)
-    if (small) {
-      // SMALL-GRAPH REGIME: the whole recurrence runs imperatively in
-      // ONE task — the RAW (src, dst) pairs (~16 bytes/edge) shuffle
-      // once to a single partition and dedup + out-degree + the rank
-      // loop all happen in primitive in-task structures. One lazy
-      // plan, one exchange, one action, plan depth CONSTANT in iters
-      // (checkpointEvery is moot here). Why not declarative layers:
-      // the per-layer form spent ~0.25 s of driver overhead per
-      // internal action across 6+ actions at sf0.1 against ~0.5 s of
-      // compute, and a lazy layered plan re-plans with cascading
-      // exchanges (the outer-join layer defeats co-partitioning
-      // analysis; measured 7 exchanges at iters=3). Why not
-      // collect_set prep feeding the task: the ObjectHashAggregate's
-      // boxed set-building was the single largest stage (378 ms of a
-      // 1.09 s query); the in-task open-addressed dedup replaces it at
-      // memcpy speed. repartition(1) — not coalesce(1) — keeps the
-      // upstream scan/join parallel and moves only the 16-byte pairs.
-      // Values are identical to the cluster branch: same dedup, same
-      // fixed-point quantization, same IEEE double op order, and the
-      // integer contribution sums are accumulation-order-independent.
-      val session = edges.sparkSession
-      import session.implicits._
-      e0.as[(Long, Long)]
-        .repartition(1)
-        .mapPartitions(it => smallPageRank(it, iters, damping, Scale))
-        .toDF("node", "pr")
+    if (SmallGraph.isSmall(edges, smallGraphThreshold)) {
+      SmallGraph.run(e0, SmallGraph.Directed, "node", "pr")(
+        g => smallPageRank(g, iters, damping, Scale))
     } else {
       val vHint = "shuffle_hash"
       // (src, dst, od) in ONE map-combined shuffle: groupBy(src) with a
@@ -170,69 +122,20 @@ object Graph {
     }
   }
 
-  /** The small-regime recurrence body: PageRank over the complete raw
-    * edge stream held by one task — dedup, out-degree, and the rank
-    * loop in primitive open-addressed structures (no boxing anywhere).
-    *
-    * Mirrors the cluster branch's math EXACTLY so both regimes (and the
-    * SQL oracle) agree bit-for-bit: per-edge contributions are
-    * `floor((pr / od) · 10^12)` quantized to LONG and summed as
-    * integers (order-independent), and the damping update interpolates
-    * the same driver-computed doubles `(1−d)/n` and `d` in the same op
-    * order as the Column expression.
-    *
-    * Memory: ~16 bytes per distinct node (intern table) + ~16 per
-    * distinct edge (dedup set + edge list); the 64 MB input-leaf
-    * threshold bounds this to a few hundred MB in the worst case. */
-  private def smallPageRank(pairs: Iterator[(Long, Long)],
-                            iters: Int, damping: Double,
+  /** The small-regime recurrence body: out-degree and the rank loop
+    * over the distinct directed edges, in primitive arrays. Mirrors the
+    * cluster branch's math EXACTLY so both regimes (and the SQL oracle)
+    * agree bit-for-bit: per-edge contributions are `floor((pr / od) ·
+    * 10^12)` quantized to LONG and summed as integers (order-
+    * independent), and the damping update interpolates the same
+    * driver-computed doubles `(1−d)/n` and `d` in the same op order as
+    * the Column expression. */
+  private def smallPageRank(g: SmallGraph.Edges, iters: Int, damping: Double,
                             Scale: Double): Iterator[(Long, Double)] = {
-    import graft.core.LongIndex
-    val ids = new LongIndex()
-    // edge-dedup set over the packed (srcIdx << 32 | dstIdx) key —
-    // intern indices are non-negative ints, so -1 never collides;
-    // LongIndex.mix scrambling is load-bearing here (see its doc)
-    var pcap = 1 << 16
-    var pkeys = new Array[Long](pcap)
-    java.util.Arrays.fill(pkeys, -1L)
-    var psize = 0
-    var edgeKeys = new Array[Long](1 << 16)
-    var m = 0
-    def pRehash(): Unit = {
-      val ok = pkeys
-      pcap <<= 1; pkeys = new Array[Long](pcap)
-      java.util.Arrays.fill(pkeys, -1L)
-      var i = 0
-      while (i < ok.length) {
-        if (ok(i) != -1L) {
-          var h = LongIndex.mix(ok(i)) & (pcap - 1)
-          while (pkeys(h) != -1L) h = (h + 1) & (pcap - 1)
-          pkeys(h) = ok(i)
-        }
-        i += 1
-      }
-    }
-    def addEdge(k: Long): Unit = {
-      if (psize * 2 >= pcap) pRehash()
-      var h = LongIndex.mix(k) & (pcap - 1)
-      while (pkeys(h) != -1L) {
-        if (pkeys(h) == k) return
-        h = (h + 1) & (pcap - 1)
-      }
-      pkeys(h) = k; psize += 1
-      if (m == edgeKeys.length)
-        edgeKeys = java.util.Arrays.copyOf(edgeKeys, m << 1)
-      edgeKeys(m) = k; m += 1
-    }
-    pairs.foreach { case (s, d) =>
-      val si = ids.intern(s); val di = ids.intern(d)
-      addEdge((si.toLong << 32) | (di.toLong & 0xffffffffL))
-    }
-    val n = ids.size
-    if (n == 0) return Iterator.empty
+    val n = g.n; val m = g.m; val src = g.src; val dst = g.dst
     val od = new Array[Int](n)
     var r = 0
-    while (r < m) { od((edgeKeys(r) >>> 32).toInt) += 1; r += 1 }
+    while (r < m) { od(src(r)) += 1; r += 1 }
     val nD = n.toDouble
     var pr = Array.fill(n)(1.0 / nD)
     var it = 0
@@ -240,17 +143,15 @@ object Graph {
       val acc = new Array[Long](n)
       r = 0
       while (r < m) {
-        val k = edgeKeys(r)
-        val s = (k >>> 32).toInt
-        val q = math.floor((pr(s) / od(s).toDouble) * Scale).toLong
-        acc(k.toInt) += q
+        val s = src(r)
+        acc(dst(r)) += math.floor((pr(s) / od(s).toDouble) * Scale).toLong
         r += 1
       }
       val base = (1.0 - damping) / nD
       pr = Array.tabulate(n)(i => base + damping * (acc(i).toDouble / Scale))
       it += 1
     }
-    Iterator.tabulate(n)(i => (ids.id(i), pr(i)))
+    Iterator.tabulate(n)(i => (g.id(i), pr(i)))
   }
 
   /** Shared SQL text of the global clustering coefficient 3T/W —
@@ -347,42 +248,30 @@ object Graph {
     * mirror rings (dense mutual-similarity clusters); chains and
     * stars — borderline pairs — peel away.
     *
-    * Execution regime is size-adaptive, exactly the [[pageRank]]
-    * dispatch: summed input-leaf bytes ≤ `smallGraphThreshold` runs
-    * the whole peel imperatively in ONE task over the raw pair stream
-    * (one exchange of ~16-byte pairs, one action, plan depth constant
-    * in `rounds` — per-job scheduling dominates a small graph; the
-    * declarative form paid ~10 shuffle stages at sf0.1 for ~0.5 s of
-    * actual compute). Above the threshold, per round: one degree agg
-    * (explode both endpoints, map-combined count) + two LEFT SEMI
-    * joins on the survivor set — each round's edge set is persisted
-    * (it feeds the round's degree agg AND the next round's semi
-    * joins; releaseCaches frees them). The semi joins carry the
-    * [[pageRank]] `shuffle_hash` hint: a |V|-row survivor set must
-    * not broadcast at 10⁹ nodes, and without the hint the planner
-    * falls back to SortMergeJoin (cached frames have no stats
+    * Execution regime is size-adaptive ([[SmallGraph]]): a small input
+    * runs the whole peel in one task. Above the threshold, per round:
+    * one degree agg (explode both endpoints, map-combined count) + two
+    * LEFT SEMI joins on the survivor set — each round's edge set is
+    * persisted (it feeds the round's degree agg AND the next round's
+    * semi joins; releaseCaches frees them). The semi joins carry the
+    * [[pageRank]] `shuffle_hash` hint: a |V|-row survivor set must not
+    * broadcast at 10⁹ nodes, and without the hint the planner falls
+    * back to SortMergeJoin (cached frames have no stats
     * pre-materialization). Synchronous peeling is monotone (edge sets
     * only shrink), so at lake scale each round is cheaper than the
-    * last. Both regimes compute identical results (same dedup, same
-    * integer degree math); tests pin both via the threshold knob.
+    * last.
     *
     * Returns (node, deg): every surviving node with its
     * residual-subgraph degree after `rounds` peels. */
   def kCore(edges: DataFrame, src: Column, dst: Column,
             k: Int, rounds: Int,
-            smallGraphThreshold: Long = 67108864L): DataFrame = {
+            smallGraphThreshold: Long = SmallGraph.MaxInputBytes): DataFrame = {
     val e0 = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-    val inputBytes = edges.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (inputBytes <= BigInt(smallGraphThreshold)) {
-      val session = edges.sparkSession
-      import session.implicits._
-      e0.as[(Long, Long)]
-        .repartition(1)
-        .mapPartitions(it => smallKCore(it, k, rounds))
-        .toDF("node", "deg")
+    if (SmallGraph.isSmall(edges, smallGraphThreshold)) {
+      SmallGraph.run(e0, SmallGraph.Undirected, "node", "deg")(
+        g => smallKCore(g, k, rounds))
     } else {
       def degrees(es: DataFrame): DataFrame =
         es.select(explode(array(col("a"), col("b"))).as("n"))
@@ -403,34 +292,14 @@ object Graph {
     }
   }
 
-  /** The small-regime peel body: canonical-edge dedup + `rounds`
-    * synchronous peels in primitive arrays, one task. Mirrors the
-    * declarative branch exactly — distinct unordered edges, integer
-    * degrees, kill-below-k then drop incident edges per round —
-    * so both regimes and the SQL oracle agree bit-for-bit. Memory:
-    * ~16 bytes per distinct node + ~24 per distinct edge, bounded by
-    * the input-leaf threshold. */
-  private def smallKCore(pairsIt: Iterator[(Long, Long)], k: Int,
+  /** The small-regime peel body: `rounds` synchronous peels over the
+    * distinct undirected edges, in primitive arrays. Mirrors the
+    * declarative branch exactly — integer degrees, kill-below-k then
+    * drop incident edges per round — so both regimes and the SQL oracle
+    * agree bit-for-bit. */
+  private def smallKCore(g: SmallGraph.Edges, k: Int,
                          rounds: Int): Iterator[(Long, Long)] = {
-    import graft.core.LongIndex
-    val ids = new LongIndex()
-    val eset = new java.util.HashSet[java.lang.Long]()
-    var xs = new Array[Int](1 << 16)
-    var ys = new Array[Int](1 << 16)
-    var m = 0
-    pairsIt.foreach { case (u, v) =>
-      val ui = ids.intern(u); val vi = ids.intern(v)
-      val lo = math.min(ui, vi); val hi = math.max(ui, vi)
-      if (eset.add((lo.toLong << 32) | hi)) {
-        if (m == xs.length) {
-          xs = java.util.Arrays.copyOf(xs, m << 1)
-          ys = java.util.Arrays.copyOf(ys, m << 1)
-        }
-        xs(m) = lo; ys(m) = hi; m += 1
-      }
-    }
-    val n = ids.size
-    if (n == 0) return Iterator.empty
+    val n = g.n; val m = g.m; val xs = g.src; val ys = g.dst
     val alive = Array.fill(n)(true)
     val edgeAlive = Array.fill(m)(true)
     val deg = new Array[Int](n)
@@ -457,7 +326,7 @@ object Graph {
     }
     recount()
     Iterator.tabulate(n)(identity).filter(deg(_) > 0)
-      .map(i => (ids.id(i), deg(i).toLong))
+      .map(i => (g.id(i), deg(i).toLong))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for `rounds`
@@ -482,32 +351,18 @@ object Graph {
     * and one node-partitioned top-1 window; edge and label relations
     * are persisted via the tracked-cache discipline. Plan depth is
     * linear in `rounds` (small fixed constants here; checkpoint the
-    * label vector for long horizons). */
+    * label vector for long horizons). A small input runs all rounds in
+    * one task ([[SmallGraph]]). */
   def lpaCommunities(edges: DataFrame, src: Column, dst: Column,
                      rounds: Int,
-                     smallGraphThreshold: Long = 67108864L): DataFrame = {
+                     smallGraphThreshold: Long = SmallGraph.MaxInputBytes): DataFrame = {
     import graft.core.Caches
     val eRaw = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-    // regime decision by summed input-leaf bytes at plan time — the
-    // pageRank/kCore discipline (see pageRank for the rationale)
-    val inputBytes = edges.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (inputBytes <= BigInt(smallGraphThreshold)) {
-      // SMALL-GRAPH REGIME: raw pairs shuffle once to one task; dedup,
-      // CSR adjacency and all `rounds` synchronous updates run in
-      // primitive open-addressed structures. Identical values to the
-      // cluster branch: same canonical dedup, same
-      // most-frequent-then-min-label vote over the PREVIOUS round's
-      // labels, own label abstains.
-      val session = edges.sparkSession
-      import session.implicits._
-      return eRaw.as[(Long, Long)]
-        .repartition(1)
-        .mapPartitions(it => smallLpa(it, rounds))
-        .toDF("node", "community", "community_size")
-    }
+    if (SmallGraph.isSmall(edges, smallGraphThreshold))
+      return SmallGraph.run(eRaw, SmallGraph.Undirected,
+        "node", "community", "community_size")(g => smallLpa(g, rounds))
     val e0 = eRaw
       .select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b"))
@@ -537,37 +392,18 @@ object Graph {
         col("community_size"))
   }
 
-  /** The small-regime LPA body: canonical-edge dedup + CSR adjacency +
-    * `rounds` synchronous votes in one task, mirroring the declarative
-    * branch exactly — labels are the ORIGINAL node ids (the min-label
-    * tie-break compares id values, never dense indices), every node
-    * updates from the previous round's labels, own label abstains.
-    * The per-node label-frequency table is one open-addressed array
-    * pair reused across nodes via stamping (capacity 2·maxDegree —
-    * a node sees at most degree distinct labels). Memory: ~16 bytes
-    * per node + ~24 per distinct edge, bounded by the input-leaf
-    * threshold. */
-  private def smallLpa(pairsIt: Iterator[(Long, Long)],
+  /** The small-regime LPA body: CSR adjacency over the distinct
+    * undirected edges + `rounds` synchronous votes, mirroring the
+    * declarative branch exactly — labels are the ORIGINAL node ids (the
+    * min-label tie-break compares id values, never dense indices),
+    * every node updates from the previous round's labels, own label
+    * abstains. The per-node label-frequency table is one open-addressed
+    * array pair reused across nodes via stamping (capacity
+    * 2·maxDegree — a node sees at most degree distinct labels). */
+  private def smallLpa(g: SmallGraph.Edges,
                        rounds: Int): Iterator[(Long, Long, Long)] = {
     import graft.core.LongIndex
-    val ids = new LongIndex()
-    val eset = new java.util.HashSet[java.lang.Long]()
-    var xs = new Array[Int](1 << 16)
-    var ys = new Array[Int](1 << 16)
-    var m = 0
-    pairsIt.foreach { case (u, v) =>
-      val ui = ids.intern(u); val vi = ids.intern(v)
-      val lo = math.min(ui, vi); val hi = math.max(ui, vi)
-      if (eset.add((lo.toLong << 32) | hi)) {
-        if (m == xs.length) {
-          xs = java.util.Arrays.copyOf(xs, m << 1)
-          ys = java.util.Arrays.copyOf(ys, m << 1)
-        }
-        xs(m) = lo; ys(m) = hi; m += 1
-      }
-    }
-    val n = ids.size
-    if (n == 0) return Iterator.empty
+    val n = g.n; val m = g.m; val xs = g.src; val ys = g.dst
     val deg = new Array[Int](n)
     var r = 0
     while (r < m) { deg(xs(r)) += 1; deg(ys(r)) += 1; r += 1 }
@@ -582,7 +418,7 @@ object Graph {
       adj(cur(ys(r))) = xs(r); cur(ys(r)) += 1
       r += 1
     }
-    var labels = Array.tabulate(n)(j => ids.id(j))
+    var labels = Array.tabulate(n)(g.id)
     var maxDeg = 0
     i = 0
     while (i < n) { if (deg(i) > maxDeg) maxDeg = deg(i); i += 1 }
@@ -624,7 +460,7 @@ object Graph {
     val sizes = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     i = 0
     while (i < n) { sizes.merge(labels(i), 1L, (a, b) => a + b); i += 1 }
-    Iterator.tabulate(n)(j => (ids.id(j), labels(j),
+    Iterator.tabulate(n)(j => (g.id(j), labels(j),
       sizes.get(labels(j)).longValue()))
   }
 
@@ -642,33 +478,21 @@ object Graph {
     * self-join — and item supports n_i count only KEPT contexts, so
     * the cosine is exactly the candidate generator's universe.
     *
-    * The support attach point is the regime knob
-    * (`broadcastSupports`):
-    *  - `true` (default — the CF norm, where the item CATALOG is
-    *    bounded even when baskets are not): the pair stream stays
-    *    BARE (two longs + a counter through the one candidate-sized
-    *    exchange) and the |items|-row support table broadcast-joins
-    *    the aggregated pairs map-side — no extra shuffle, the joins
-    *    fuse into the same codegen stage (measured 2.85 → 2.67 s at
-    *    sf0.1 over the widest pre-unroll shape, with far lower
-    *    variance).
-    *  - `false` (unbounded item domains — doc-as-item, where
-    *    |items| ≈ corpus and nothing may broadcast): supports attach
-    *    to the basket elements BEFORE the unroll and ride the pair
-    *    aggregation's GROUP KEY ((i, n_i) is functionally determined
-    *    by i, so grouping on the structs is the same grouping) — the
-    *    candidate-sized relation never joins, at the cost of a 2×
-    *    wider shuffle row. Two post-agg SHUFFLE joins of the pair
-    *    table (the naive form both regimes avoid) measured 2.5×
-    *    slower.
+    * The item catalog is broadcast (the CF norm: it stays bounded even
+    * when baskets do not): the pair stream stays BARE (two longs + a
+    * counter through the one candidate-sized exchange) and the
+    * |items|-row support table broadcast-joins the aggregated pairs
+    * map-side — no extra shuffle, the joins fuse into the same codegen
+    * stage (measured 2.85 → 2.67 s at sf0.1 over the widest pre-unroll
+    * shape, with far lower variance). Two post-agg SHUFFLE joins of the
+    * pair table measured 2.5× slower.
     *
     * Exactness: all counts are exact integers (set semantics via
     * collect_set); the cosine is ONE final double shared between
     * engines; top-K orders by (cosine desc, i, j) — identical doubles
     * from identical integer triples, deterministic tie-break. */
   def cooccurrenceTopK(edges: DataFrame, ctx: Column, item: Column,
-                       topK: Int, maxCtx: Long,
-                       broadcastSupports: Boolean = true): DataFrame = {
+                       topK: Int, maxCtx: Long): DataFrame = {
     val raw = edges.filter(ctx.isNotNull && item.isNotNull)
       .select(ctx.as("c"), item.as("i"))
     val deg = raw.groupBy(col("c"))
@@ -679,37 +503,15 @@ object Graph {
       raw.join(deg.select(col("c")), Seq("c")))
     val support = kept.groupBy(col("i"))
       .agg(count_distinct(col("c")).as("n_i"))
-    // pair unroll as TWO chained codegen generators (posexplode picks
-    // the left element, explode-of-slice the strictly-later rights)
-    // instead of one interpreted nested-transform lambda: higher-order
-    // functions never enter whole-stage codegen, and on an 8M-pair
-    // stream the interpreted eval dominated the query (6.4 s → 3.2 s
-    // isolated at sf0.1 from this rewrite alone)
-    def unroll(sets: DataFrame): DataFrame =
-      sets.select(col("cs"), posexplode(col("cs")))
-        .select(col("col").as("a"),
-          explode(slice(col("cs"), col("pos") + lit(2), size(col("cs"))))
-            .as("b"))
-    val pairs =
-      if (broadcastSupports) {
-        val sets = kept.groupBy(col("c"))
-          .agg(array_sort(collect_set(col("i"))).as("cs"))
-        unroll(sets)
-          .groupBy(col("a").as("item_a"), col("b").as("item_b"))
-          .agg(count(lit(1)).as("n_both"))
-          .join(broadcast(support.select(col("i").as("item_a"),
-            col("n_i").as("n_a"))), Seq("item_a"))
-          .join(broadcast(support.select(col("i").as("item_b"),
-            col("n_i").as("n_b"))), Seq("item_b"))
-      } else {
-        val sets = kept.join(support, Seq("i"))
-          .groupBy(col("c"))
-          .agg(array_sort(collect_set(struct(col("i"), col("n_i")))).as("cs"))
-        unroll(sets)
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_both"))
-          .select(col("a.i").as("item_a"), col("a.n_i").as("n_a"),
-            col("b.i").as("item_b"), col("b.n_i").as("n_b"), col("n_both"))
-      }
+    val sets = kept.groupBy(col("c"))
+      .agg(array_sort(collect_set(col("i"))).as("cs"))
+    val pairs = unrollPairs(sets, "a", "b")
+      .groupBy(col("a").as("item_a"), col("b").as("item_b"))
+      .agg(count(lit(1)).as("n_both"))
+      .join(broadcast(support.select(col("i").as("item_a"),
+        col("n_i").as("n_a"))), Seq("item_a"))
+      .join(broadcast(support.select(col("i").as("item_b"),
+        col("n_i").as("n_b"))), Seq("item_b"))
     val scored = pairs
       .withColumn("cosine", col("n_both").cast("double") /
         sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
@@ -765,16 +567,8 @@ object Graph {
     val sets = raw.join(deg, Seq("w"))
       .groupBy(col("w"))
       .agg(array_sort(collect_set(col("s"))).as("cs"), max(col("wq")).as("wq"))
-    // same two-generator unroll as cooccurrenceTopK: posexplode picks
-    // u, explode-of-slice the strictly-later v's — both generators run
-    // inside whole-stage codegen where the nested-transform lambda ran
-    // interpreted
-    val pairs = sets.select(col("wq"), col("cs"), posexplode(col("cs")))
-      .select(col("col").as("u"),
-        explode(slice(col("cs"), col("pos") + lit(2), size(col("cs"))))
-          .as("v"),
-        col("wq"))
-    pairs.groupBy(col("u"), col("v"))
+    unrollPairs(sets, "u", "v", "wq")
+      .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("n_common"), sum(col("wq")).as("sq"))
       .orderBy(col("sq").desc, col("u"), col("v")).limit(topK)
       .select(col("u"), col("v"), col("n_common"),
@@ -783,4 +577,19 @@ object Graph {
           .orderBy(col("sq").desc, col("u"), col("v"))).cast("long")
           .as("rank"))
   }
+
+  /** Every unordered pair of a sorted set column `cs`, as columns
+    * (`left`, `right`) with left before right in the set, plus the
+    * `carry` columns of its row. Two chained codegen generators
+    * (posexplode picks the left element, explode-of-slice the strictly
+    * later rights) instead of one interpreted nested-transform lambda:
+    * higher-order functions never enter whole-stage codegen, and on an
+    * 8M-pair stream the interpreted eval dominated the query (6.4 s →
+    * 3.2 s isolated at sf0.1, [[cooccurrenceTopK]]). */
+  private def unrollPairs(sets: DataFrame, left: String, right: String,
+                          carry: String*): DataFrame =
+    sets.select(carry.map(col) ++ Seq(col("cs"), posexplode(col("cs"))): _*)
+      .select(Seq(col("col").as(left),
+        explode(slice(col("cs"), col("pos") + lit(2), size(col("cs"))))
+          .as(right)) ++ carry.map(col): _*)
 }

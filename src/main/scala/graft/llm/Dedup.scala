@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.functions.GraftFunctions._
+import graft.graph.SmallGraph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -601,31 +602,18 @@ object Dedup {
     * high-diameter graph) otherwise pays superlinear analysis/optimizer
     * time on the unbounded plan chain. Labels are unchanged (the min
     * recurrence is deterministic); 0 disables (right for the usual ≤5
-    * rounds). Returns (doc_id, component) for every node in `pairs`. */
+    * rounds). A small input runs all rounds in one task
+    * ([[graft.graph.SmallGraph]]). Returns (doc_id, component) for every
+    * node in `pairs`. */
   def nearDupComponents(pairs: DataFrame, a: Column, b: Column,
-                        iters: Int, smallGraphThreshold: Long = 67108864L,
+                        iters: Int,
+                        smallGraphThreshold: Long = SmallGraph.MaxInputBytes,
                         checkpointEvery: Int = 0): DataFrame = {
-    // size-adaptive regime, decided from the summed INPUT LEAF sizes at
-    // plan time (zero jobs) — the [[graft.graph.Graph.pageRank]]
-    // pattern: below the threshold the whole k-round min-label
-    // recurrence runs imperatively in ONE task over the raw pair
-    // stream (one lazy plan, one exchange, plan depth constant in
-    // iters; per-job scheduling dominates a small graph). Labels are
-    // identical: the min recurrence over longs is deterministic and
-    // the imperative body replays the exact round structure. Above the
-    // threshold, the distributed shuffle_hash recurrence below.
-    val inputBytes = pairs.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (inputBytes <= BigInt(smallGraphThreshold)) {
-      val session = pairs.sparkSession
-      import session.implicits._
-      return pairs.select(a.cast("long").as("x"), b.cast("long").as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .as[(Long, Long)]
-        .repartition(1)
-        .mapPartitions(it => smallComponents(it, iters))
-        .toDF("doc_id", "component")
-    }
+    if (SmallGraph.isSmall(pairs, smallGraphThreshold))
+      return SmallGraph.run(
+        pairs.select(a.cast("long").as("x"), b.cast("long").as("y"))
+          .filter(col("x").isNotNull && col("y").isNotNull),
+        SmallGraph.AsGiven, "doc_id", "component")(g => smallComponents(g, iters))
     // symmetrize in ONE pass (explode of the two orientations — a union
     // of two references would re-run the whole pair-generation subtree,
     // banding + self-join + verify, once per branch), then cluster the
@@ -674,30 +662,16 @@ object Dedup {
   }
 
   /** The small-regime recurrence body: `iters` rounds of min-label
-    * propagation over the complete symmetrized pair list held by one
-    * task. Replays the distributed recurrence's exact round structure —
-    * each round reads the PREVIOUS label vector and takes
-    * least(own, min over neighbors) — so labels are bit-identical to
-    * the cluster branch and the SQL oracle's chained CTEs. Duplicate
-    * pairs are harmless (min is idempotent), matching the distributed
-    * form, which never dedups edges either. */
-  private def smallComponents(pairsIt: Iterator[(Long, Long)],
+    * propagation over the pair list as given. Replays the distributed
+    * recurrence's exact round structure — each round reads the PREVIOUS
+    * label vector and takes least(own, min over neighbors) — so labels
+    * are bit-identical to the cluster branch and the SQL oracle's
+    * chained CTEs. Duplicate pairs are harmless (min is idempotent),
+    * matching the distributed form, which never dedups edges either. */
+  private def smallComponents(g: SmallGraph.Edges,
                               iters: Int): Iterator[(Long, Long)] = {
-    import graft.core.LongIndex
-    val ids = new LongIndex()
-    var xs = new Array[Int](1 << 16)
-    var ys = new Array[Int](1 << 16)
-    var m = 0
-    pairsIt.foreach { case (x, y) =>
-      if (m == xs.length) {
-        xs = java.util.Arrays.copyOf(xs, m << 1)
-        ys = java.util.Arrays.copyOf(ys, m << 1)
-      }
-      xs(m) = ids.intern(x); ys(m) = ids.intern(y); m += 1
-    }
-    val n = ids.size
-    if (n == 0) return Iterator.empty
-    var labels = Array.tabulate(n)(i => ids.id(i))
+    val n = g.n; val m = g.m; val xs = g.src; val ys = g.dst
+    var labels = Array.tabulate(n)(g.id)
     var round = 0
     while (round < iters) {
       val nl = labels.clone()
@@ -711,7 +685,7 @@ object Dedup {
       labels = nl
       round += 1
     }
-    Iterator.tabulate(n)(i => (ids.id(i), labels(i)))
+    Iterator.tabulate(n)(i => (g.id(i), labels(i)))
   }
 
   /** One representative per near-dup component — the step that turns

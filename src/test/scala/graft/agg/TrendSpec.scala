@@ -103,13 +103,6 @@ class TrendSpec extends SparkSpec {
     assert(math.abs(ab.getAs[Double]("cosine") - 2.0 / math.sqrt(6.0)) < 1e-12)
     assert(ab.getAs[Long]("rank") == 1L)
     assert(!m.contains(("a", "d"))) // only co-occurs in the excluded hub
-    // the unbounded-item-domain regime (supports pre-attached, no
-    // broadcast) must produce the identical ranking row-for-row
-    val m2 = Graph.cooccurrenceTopK(e, col("c"), col("i"), 10, 3L,
-      broadcastSupports = false).collect().map(_.toString).sorted
-    val m1 = Graph.cooccurrenceTopK(e, col("c"), col("i"), 10, 3L)
-      .collect().map(_.toString).sorted
-    assert(m1.sameElements(m2), "support-attach regimes disagree")
     graft.core.Caches.release()
   }
 }

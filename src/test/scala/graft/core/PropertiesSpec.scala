@@ -228,7 +228,9 @@ class PropertiesSpec extends SparkSpec {
       (0L until 3000L),
       (0L until 3000L).map(_ * 2L),
       for (a <- 0L until 60L; b <- 0L until 50L) yield (a << 32) | b,
-      (0 until 3000).map(i => sample(Gen.long, 7000 + i)))
+      (0 until 3000).map(i => sample(Gen.long, 7000 + i)),
+      // past 2^16 ids: the id array grows well beyond its first sizes
+      (0L until 70000L).map(i => (i << 32) | (i % 977L)))
     families.zipWithIndex.foreach { case (keys, f) =>
       val idx = new LongIndex(16) // force many rehashes
       val firsts = keys.map(idx.intern)
@@ -259,6 +261,35 @@ class PropertiesSpec extends SparkSpec {
         iters = 4, smallGraphThreshold = 0L)
       .as[(Long, Long)].collect().toMap
     assert(ccSmall == ccCluster, "component regimes must agree bit-for-bit")
+    Caches.release()
+  }
+
+  test("small-regime kCore and lpaCommunities match the cluster branch on a random graph") {
+    // the pageRank/components graph above: hubs, multi-edges, reversed
+    // duplicates and self-loops all reach the undirected edge dedup
+    val edgeGen = Gen.listOfN(2000,
+      Gen.zip(Gen.choose(0L, 300L), Gen.choose(0L, 300L)))
+    val edges = sample(edgeGen, 31).toDF("a", "b")
+    val nodes = edges.filter(col("a") =!= col("b"))
+      .select(explode(array(col("a"), col("b")))).distinct().count()
+    for ((k, rounds) <- Seq((3, 2), (10, 2), (13, 1))) {
+      val kcSmall = graft.graph.Graph.kCore(edges, col("a"), col("b"), k, rounds)
+        .as[(Long, Long)].collect().toMap
+      val kcCluster = graft.graph.Graph.kCore(edges, col("a"), col("b"), k, rounds,
+          smallGraphThreshold = 0L)
+        .as[(Long, Long)].collect().toMap
+      assert(kcSmall.nonEmpty, s"k=$k")
+      assert(kcSmall == kcCluster, s"kCore regimes must agree (k=$k, rounds=$rounds)")
+    }
+    val kcPeeled = graft.graph.Graph.kCore(edges, col("a"), col("b"), 13, 1).count()
+    assert(kcPeeled < nodes, "k=13 must peel some nodes, or the test pins nothing")
+    val lpaSmall = graft.graph.Graph.lpaCommunities(edges, col("a"), col("b"), 3)
+      .as[(Long, Long, Long)].collect().toSet
+    val lpaCluster = graft.graph.Graph.lpaCommunities(edges, col("a"), col("b"), 3,
+        smallGraphThreshold = 0L)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(lpaSmall.size == nodes)
+    assert(lpaSmall == lpaCluster, "lpaCommunities regimes must agree")
     Caches.release()
   }
 

@@ -309,14 +309,21 @@ class FunctionsSpec extends SparkSpec {
   test("every native expression compiles under codegen — no interpreted fallback permitted") {
     // spark.sql.codegen.fallback=false turns a Janino failure in any
     // doGenCode into a hard error instead of a silent interpreted
-    // fallback, so this test pins that the static-call codegen of all
-    // nine expressions actually COMPILES (values are pinned elsewhere)
+    // fallback, so this test pins that the static-call codegen of every
+    // expression below actually COMPILES (values are pinned elsewhere).
+    // The frame comes from an RDD: a Seq-backed frame is a LocalRelation
+    // that the optimizer folds the projection into, evaluated on the
+    // driver by an interpreted projection with no doGenCode compiled.
     import graft.functions.GraftFunctions._
+    import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val df = Seq((1L, "the quick brown fox the lazy dog"),
-                   (2L, "der hund und die katze ist da")).toDF("id", "text")
-      val rows = df.select(
+      val df = spark.sparkContext.parallelize(Seq(
+          (1L, "the quick brown fox the lazy dog"),
+          (2L, "der hund und die katze ist da"))).toDF("id", "text")
+      val q = df.select(
         shingles(col("text"), 3).as("sg"),
         minhashSignature(shingles(col("text"), 3), 8).as("mh"),
         simhash32(col("text")).as("sh"),
@@ -329,7 +336,18 @@ class FunctionsSpec extends SparkSpec {
         ClfStats(col("text")).as("clf"),
         BigramEntropyStats(tokens(col("text"))).as("be"),
         TokenHashBuckets(col("text"), 17, 256L).as("thb"),
-        ShingleHashes(tokens(col("text")), 3).as("shh")).collect()
+        ShingleHashes(tokens(col("text")), 3).as("shh"))
+      val rows = q.collect()
+      val plan = q.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(plan.find {
+          case w: WholeStageCodegenExec => w.child.isInstanceOf[ProjectExec]
+          case _ => false
+        }.isDefined, s"projection must run whole-stage generated:\n$plan")
+      assert(plan.find(_.isInstanceOf[LocalTableScanExec]).isEmpty,
+        s"a LocalTableScan means the projection was folded on the driver:\n$plan")
       assert(rows.length == 2)
       assert(rows(0).getAs[String]("lang") == "en" && rows(1).getAs[String]("lang") == "de")
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
