@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Registry of persisted DataFrames that back lazily returned results
   * (dedup band tables, graph rank vectors). Spark has no "unpersist
   * when the consuming action finishes" hook, so producers register
-  * handles here and the harness (Verify/Bench/JudgeProbe) drains them
+  * handles here and the harness (Verify/Bench) drains them
   * after each query's action completes. Untracked, these persists
   * would pin executor storage for the session lifetime.
   *

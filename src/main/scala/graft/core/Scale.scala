@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session policy: Bench, Verify, JudgeProbe and PlanDump open
+/** The one session policy: Bench, Verify and PlanDump open
   * [[session]], so the oracle gate, plan dumps and timings run the same
   * plans. [[builder]] is the static part (SparkSpec builds on it too),
   * [[configure]] the input-size-derived part (guide §2.6):

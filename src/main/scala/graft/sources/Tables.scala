@@ -22,7 +22,7 @@ object Tables {
     * `spark.read.parquet` re-infers the schema with a footer-reading
     * Spark JOB on every call — a fixed ~0.1 s scheduling tax on every
     * query (the dominant cost of the sub-second audit tail, measured
-    * via JudgeProbe: 3-6 jobs/query of which one was always this).
+    * from per-query job counts: 3-6 jobs/query, one always this).
     * Cache the inferred schema — keyed on (dir, table, dir mtime) so a
     * path whose parquet is REWRITTEN within one JVM (a test regenerating
     * a fixture dir) re-infers instead of silently reading through a

@@ -47,10 +47,6 @@ out = {
     "spark_wins": sorted(
         (k for k in shared if dq[k] / max(sq[k], 1e-9) >= 2.0),
         key=lambda k: -dq[k] / max(sq[k], 1e-9))[:12],
-    # contention-sentinel trace from graft.Bench: control-query median,
-    # sample count and which queries were resampled for >1.5x drift —
-    # quantifies the error bar BASELINE.md quotes (r13 ADVICE)
-    "ctrl": spark.get("ctrl_trace") or spark.get("ctrl"),
     "queries": {k: {"spark": sq[k], "duckdb": dq[k]} for k in shared},
 }
 with open("BENCH_BOTH.json", "w") as f:
