@@ -4,8 +4,9 @@ package graft.core
   * capacity, linear probing, load factor ½) — the node-id index and the
   * edge-dedup set of the small-graph imperative regime
   * ([[graft.graph.SmallGraph]]), shared by [[graft.graph.Graph.pageRank]],
-  * [[graft.graph.Graph.kCore]], [[graft.graph.Graph.lpaCommunities]] and
-  * [[graft.llm.Dedup.nearDupComponents]]: no boxing, 32-64 bytes per
+  * [[graft.graph.Graph.kCore]], [[graft.graph.Graph.lpaCommunities]],
+  * [[graft.llm.Dedup.nearDupComponents]] and the pair kernels
+  * ([[graft.graph.SmallGraph.pairTopK]]): no boxing, 32-64 bytes per
   * distinct key (2-4 slots of key + index, plus the id array).
   * Single-threaded by design (one task owns it). */
 final class LongIndex(initialCapacity: Int = 1 << 14) {

@@ -30,9 +30,12 @@ import org.apache.spark.sql.SparkSession
   *   | min(8, cores) | 4 | 999 ms | | |
   *   | none (data-sized) | 2 | 761 ms | 201 ms | 620 / 184 |
   *
-  *   Two CPU-bound pair-unroll kernels pay for it at 2 tasks (q_item_cf
-  *   1.13 -> 1.40 s, q_adamic_adar 0.83 -> 1.02 s per pass) while the
-  *   heavy set's total stays flat and the light set gets faster. At
+  *   The heavy set's total stayed flat and the light set got faster.
+  *   Two CPU-bound pair-unroll kernels paid for it at 2 tasks (q_item_cf
+  *   1.13 -> 1.40 s, q_adamic_adar 0.83 -> 1.02 s per pass); they now
+  *   score their pairs in one task whatever the count
+  *   ([[graft.graph.SmallGraph.pairTopK]]: 0.29-0.31 s and 0.29-0.32 s
+  *   per pass, traced `batch`, 4 cores). At
   *   lake scale the AQE branch governs and this one never fires; on a
   *   real cluster the starting partition count stays the core count and
   *   AQE's advisory size does the coalescing.

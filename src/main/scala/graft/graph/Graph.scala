@@ -490,9 +490,34 @@ object Graph {
     * Exactness: all counts are exact integers (set semantics via
     * collect_set); the cosine is ONE final double shared between
     * engines; top-K orders by (cosine desc, i, j) — identical doubles
-    * from identical integer triples, deterministic tie-break. */
+    * from identical integer triples, deterministic tie-break.
+    *
+    * Two regimes. A small input with integral keys (the
+    * [[SmallGraph]] test) scores every pair in ONE task through
+    * [[SmallGraph.pairTopK]]: the same gate, supports and cosine from
+    * a sparse accumulator, ranked in the task — no pair hash table, no
+    * pair shuffle, no `collect_set`, no persist, no unpartitioned
+    * window. Otherwise, or for non-integral keys, the cluster branch
+    * described above runs. Both give the same rows and schema; the
+    * output keeps the item column's type. */
   def cooccurrenceTopK(edges: DataFrame, ctx: Column, item: Column,
-                       topK: Int, maxCtx: Long): DataFrame = {
+                       topK: Int, maxCtx: Long,
+                       smallGraphThreshold: Long = SmallGraph.MaxInputBytes): DataFrame = {
+    val keys = edges.select(ctx, item)
+    if (SmallGraph.isSmall(edges, smallGraphThreshold) && SmallGraph.integral(keys)) {
+      val e0 = edges.filter(ctx.isNotNull && item.isNotNull)
+        .select(ctx.cast("long"), item.cast("long"))
+      val t = keys.schema(1).dataType
+      return SmallGraph.run(e0, SmallGraph.Bipartite,
+          "item_a", "item_b", "n_both", "n_a", "n_b", "rank")(g =>
+          // a positive double orders as its bit pattern
+          SmallGraph.pairTopK(g, maxCtx, topK, _ => 0L, (both, _, nA, nB) =>
+              java.lang.Double.doubleToRawLongBits(
+                both.toDouble / math.sqrt(nA.toDouble * nB.toDouble)))
+            .map(p => (p.a, p.b, p.both, p.nA, p.nB, p.rank)))
+        .select(col("item_a").cast(t).as("item_a"), col("item_b").cast(t).as("item_b"),
+          col("n_both"), col("n_a"), col("n_b"), cosine.as("cosine"), col("rank"))
+    }
     val raw = edges.filter(ctx.isNotNull && item.isNotNull)
       .select(ctx.as("c"), item.as("i"))
     val deg = raw.groupBy(col("c"))
@@ -513,8 +538,7 @@ object Graph {
       .join(broadcast(support.select(col("i").as("item_b"),
         col("n_i").as("n_b"))), Seq("item_b"))
     val scored = pairs
-      .withColumn("cosine", col("n_both").cast("double") /
-        sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
+      .withColumn("cosine", cosine)
     scored
       .orderBy(col("cosine").desc, col("item_a"), col("item_b"))
       .limit(topK)
@@ -543,9 +567,32 @@ object Graph {
     * set; each neighbor's 1/ln(deg) weight is quantized floor(·10⁹)
     * LONG before the per-pair sum (the PSI discipline), so scores fold
     * exactly in any order; top-K orders by the integer score with the
-    * pair as tie-break. */
+    * pair as tie-break.
+    *
+    * Two regimes, as in [[cooccurrenceTopK]]: a small input with
+    * integral keys runs [[SmallGraph.pairTopK]] in ONE task, with the
+    * dst nodes as contexts and the src nodes as items, each kept
+    * neighbor weighing the same quantized `wq` (`StrictMath.log`, the
+    * function Spark's `log` evaluates); otherwise the cluster branch
+    * described above runs. Both give the same rows and schema; the output keeps
+    * the src column's type. */
   def adamicAdar(edges: DataFrame, src: Column, dst: Column,
-                 topK: Int, maxDeg: Long): DataFrame = {
+                 topK: Int, maxDeg: Long,
+                 smallGraphThreshold: Long = SmallGraph.MaxInputBytes): DataFrame = {
+    val keys = edges.select(src, dst)
+    if (SmallGraph.isSmall(edges, smallGraphThreshold) && SmallGraph.integral(keys)) {
+      val e0 = edges.filter(src.isNotNull && dst.isNotNull)
+        .select(dst.cast("long"), src.cast("long"))
+      val t = keys.schema(0).dataType
+      return SmallGraph.run(e0, SmallGraph.Bipartite,
+          "u", "v", "n_common", "sq", "rank")(g =>
+          SmallGraph.pairTopK(g, maxDeg, topK,
+              deg => math.floor(1.0 / StrictMath.log(deg.toDouble) * 1.0e9).toLong,
+              (_, sq, _, _) => sq)
+            .map(p => (p.a, p.b, p.both, p.weight, p.rank)))
+        .select(col("u").cast(t).as("u"), col("v").cast(t).as("v"),
+          col("n_common"), aaScore.as("aa_score"), col("rank"))
+    }
     val raw = edges.filter(src.isNotNull && dst.isNotNull)
       .select(src.as("s"), dst.as("w"))
     // degree gate FIRST (a map-combined countDistinct — never
@@ -572,11 +619,18 @@ object Graph {
       .agg(count(lit(1)).as("n_common"), sum(col("wq")).as("sq"))
       .orderBy(col("sq").desc, col("u"), col("v")).limit(topK)
       .select(col("u"), col("v"), col("n_common"),
-        (col("sq").cast("double") / lit(1.0e9)).as("aa_score"),
+        aaScore.as("aa_score"),
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("sq").desc, col("u"), col("v"))).cast("long")
           .as("rank"))
   }
+
+  /** [[cooccurrenceTopK]]'s cosine over (n_both, n_a, n_b) and
+    * [[adamicAdar]]'s score over the quantized sum `sq`, shared by both
+    * regimes. The small regime ranks by the same doubles in its task. */
+  private def cosine: Column = col("n_both").cast("double") /
+    sqrt(col("n_a").cast("double") * col("n_b").cast("double"))
+  private def aaScore: Column = col("sq").cast("double") / lit(1.0e9)
 
   /** Every unordered pair of a sorted set column `cs`, as columns
     * (`left`, `right`) with left before right in the set, plus the

@@ -14,6 +14,10 @@ class PlanSpec extends SparkSpec {
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
   private def explained(df: DataFrame): String =
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  /** The (cust, part) purchase edges q_item_cf and q_adamic_adar read. */
+  private def custPart: DataFrame = Tables.orders(spark, sf)
+    .join(Tables.lineitem(spark, sf), col("l_orderkey") === col("o_orderkey"))
+    .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
 
   test("filters and column pruning reach the parquet scan") {
     // RAW read: full pushdown + exact 2-column pruning
@@ -995,7 +999,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("adamic-adar: no edge self-join; pair agg is partial; top-k heap-based") {
-    val df = SparkEntry.queries("q_adamic_adar")(spark, sf)
+    // threshold 0 forces the cluster branch so its plan stays pinned
+    val df = graph.Graph.adamicAdar(custPart, col("cust"), col("part"), 50, 64L,
+      smallGraphThreshold = 0L)
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
     // the pair set comes from the per-dst array unroll, not a second
@@ -1057,7 +1063,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("item CF: bare pair agg; supports broadcast back — no shuffle join anywhere") {
-    val df = SparkEntry.queries("q_item_cf")(spark, sf)
+    // threshold 0 forces the cluster branch so its plan stays pinned
+    val df = graph.Graph.cooccurrenceTopK(custPart, col("cust"), col("part"), 50, 128L,
+      smallGraphThreshold = 0L)
     val p = plan(df)
     assert(p.contains("Generate posexplode") &&
       p.contains("Generate explode(slice"),
@@ -1074,6 +1082,21 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k must be heap-based:\n$p")
     graft.core.Caches.release()
+  }
+
+  test("item CF and adamic-adar below the size threshold score pairs in one task") {
+    // the small regime: the edge join, then the repartition(1) of the
+    // edges into one sparse-accumulator task that ranks in place — no
+    // pair unroll, no pair aggregate, no unpartitioned rank window
+    val joinExchanges = "Exchange".r.findAllIn(plan(custPart)).size
+    for (q <- Seq("q_item_cf", "q_adamic_adar")) {
+      val p = plan(SparkEntry.queries(q)(spark, sf))
+      assert(p.contains("MapPartitions"), s"$q must score in one task:\n$p")
+      assert("Exchange".r.findAllIn(p).size == joinExchanges + 1,
+        s"$q must add exactly one exchange to the edge join's:\n$p")
+      assert(!p.contains("Generate") && !p.contains("ObjectHashAggregate") &&
+        !p.contains("Window"), s"$q must not unroll, set-aggregate or window:\n$p")
+    }
   }
 
   test("calibration: score and label fuse into the scan — no join anywhere") {

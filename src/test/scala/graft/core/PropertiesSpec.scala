@@ -293,6 +293,52 @@ class PropertiesSpec extends SparkSpec {
     Caches.release()
   }
 
+  test("small-regime cooccurrenceTopK and adamicAdar match the cluster branch on a random bipartite graph") {
+    import graft.graph.{Graph, SmallGraph}
+    import org.apache.spark.sql.DataFrame
+    // (context, item) edges over negative and positive ids: ~13 edges
+    // per context, so repeats are common and some contexts exceed the
+    // gate of 10 distinct items; a few rows carry a NULL key
+    val edgeGen = Gen.listOfN(800,
+      Gen.zip(Gen.choose(-30L, 30L), Gen.choose(-60L, 60L)))
+    val pairs = sample(edgeGen, 53)
+    val rows = pairs.map { case (c, i) => (Option(c), Option(i)) } ++
+      Seq((None, Some(1L)), (Some(1L), None))
+    val items = pairs.map(_._2).distinct
+    assert(items != items.sorted, "first-seen item order must differ from id order")
+    assert(pairs.distinct.size < pairs.size, "the graph must repeat edges")
+    assert(pairs.groupBy(_._1).values.exists(_.map(_._2).distinct.size > 10),
+      "some context must exceed the degree gate")
+    val longKeys = rows.toDF("c", "i")
+    val intKeys = longKeys.select(col("c").cast("int").as("c"),
+      col("i").cast("int").as("i"))
+    val cf = (e: DataFrame, k: Int, gate: Long, t: Long) =>
+      Graph.cooccurrenceTopK(e, col("c"), col("i"), k, gate, smallGraphThreshold = t)
+    val aa = (e: DataFrame, k: Int, gate: Long, t: Long) =>
+      Graph.adamicAdar(e, col("i"), col("c"), k, gate, smallGraphThreshold = t)
+    def ranked(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.collect().toSeq.sortBy(_.getAs[Long]("rank"))
+    for ((name, kernel, score) <- Seq(("cf", cf, "cosine"), ("aa", aa, "aa_score"))) {
+      // a K whose last kept pair ties the first dropped one on score
+      val all = ranked(kernel(longKeys, Int.MaxValue, 10L, 0L))
+      val k = (20 until all.size).find(j =>
+        all(j - 1).getAs[Double](score) == all(j).getAs[Double](score)).get
+      for (e <- Seq(longKeys, intKeys); (topK, gate) <- Seq((k, 10L),
+           (all.size + 100, 10L), (k, 1L))) {
+        val small = kernel(e, topK, gate, SmallGraph.MaxInputBytes)
+        val cluster = kernel(e, topK, gate, 0L)
+        val label = s"$name ${e.schema("c").dataType} topK=$topK gate=$gate"
+        assert(small.queryExecution.executedPlan.toString.contains("MapPartitions"),
+          s"$label must take the small regime")
+        assert(small.schema == cluster.schema, s"$label schema")
+        val (got, want) = (ranked(small), ranked(cluster))
+        assert(got == want, s"$label rows")
+        assert(got.size == (if (gate == 1L) 0 else math.min(topK, all.size)), label)
+        Caches.release()
+      }
+    }
+  }
+
   test("interleaved Caches scopes release only their own handles") {
     import graft.core.Caches
     import org.apache.spark.storage.StorageLevel

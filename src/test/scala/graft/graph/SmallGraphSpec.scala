@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The small-graph edge loader without Spark: its three modes against
+/** The small-graph edge loader without Spark: its four modes against
   * plain-Scala references. */
 class SmallGraphSpec extends AnyFunSuite {
 
@@ -31,6 +31,13 @@ class SmallGraphSpec extends AnyFunSuite {
     check(SmallGraph.Undirected, pairs
       .map { case (a, b) => if (index(a) <= index(b)) (a, b) else (b, a) }
       .distinct)
+    // bipartite: the same id value on both sides stays two nodes
+    val g = SmallGraph.load(pairs.iterator, SmallGraph.Bipartite)
+    assert((0 until g.n).map(g.id) == pairs.map(_._1).distinct, "Bipartite src ids")
+    assert((0 until g.dstN).map(g.dstId) == pairs.map(_._2).distinct,
+      "Bipartite dst ids")
+    assert((0 until g.m).map(r => (g.id(g.src(r)), g.dstId(g.dst(r)))) ==
+      pairs.distinct, "Bipartite edges in first-seen order")
   }
 
   test("load of an empty stream has no nodes and no edges") {

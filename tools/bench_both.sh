@@ -9,9 +9,13 @@
 # totals over the SHARED query set plus their ratio — the number
 # BASELINE.md's headline table must quote.
 # Usage: tools/bench_both.sh [sf_dir]   (default /root/testdata/sf0.1)
+# Every path resolves from this script's own checkout; intermediates go
+# to a fresh temporary directory.
 set -e
 SF_DIR=${1:-/root/testdata/sf0.1}
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
+TMP=$(mktemp -d)
+trap 'rm -rf "$TMP"' EXIT
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -19,20 +23,20 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 JAVA="java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp /root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+  -cp $PWD/target/scala-2.13/classes:/opt/spark/jars/*"
 
-$JAVA graft.Verify --sql-only /tmp/oracle_sql_bench.json
+$JAVA graft.Verify --sql-only "$TMP/oracle_sql.json"
 
 echo "[bench_both] Spark pass ($SF_DIR)..." >&2
-SPARK_GRAFT_SF_DIR=$SF_DIR $JAVA graft.Bench > /tmp/bench_spark.out
+SPARK_GRAFT_SF_DIR=$SF_DIR $JAVA graft.Bench > "$TMP/bench_spark.out"
 echo "[bench_both] DuckDB pass ($SF_DIR)..." >&2
-python3 tools/duckdb_baseline.py "$SF_DIR" /tmp/oracle_sql_bench.json \
-  > /tmp/bench_duck.json
+python3 tools/duckdb_baseline.py "$SF_DIR" "$TMP/oracle_sql.json" \
+  > "$TMP/bench_duck.json"
 
-python3 - "$SF_DIR" <<'EOF'
+python3 - "$SF_DIR" "$TMP/bench_duck.json" <<'EOF'
 import json, sys
 spark = json.load(open("BENCH_FULL.json"))
-duck = json.load(open("/tmp/bench_duck.json"))
+duck = json.load(open(sys.argv[2]))
 sq, dq = spark["queries"], duck["queries"]
 shared = sorted(k for k in sq if k in dq and sq[k] > 0 and dq[k] > 0)
 s_tot = round(sum(sq[k] for k in shared), 2)

@@ -2,6 +2,8 @@
 # Local correctness loop: run graft.Verify (Spark) then tools/check.py
 # (DuckDB oracle compare) — a stand-in for the driver's t2 gate.
 set -e
+# every path resolves from this script's own checkout
+ROOT=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/vout}
 ADD_OPENS=""
@@ -12,6 +14,6 @@ done
 ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT" ${3:+"$3"}
-python3 /root/repo/tools/check.py "$SF_DIR" "$OUT"
+python3 "$ROOT/tools/check.py" "$SF_DIR" "$OUT"
