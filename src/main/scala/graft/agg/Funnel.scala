@@ -234,14 +234,20 @@ object Funnel {
     * what makes the streaming merge exact. */
   def userValuePeriods(events: DataFrame, user: Column, ts: Column,
                        value: Column, periodMicros: Long): DataFrame =
+    userValueRows(events, user, ts, value, periodMicros)
+      .groupBy(col("u"), col("wk"))
+      .agg(sum(col("cw")).as("cw"))
+
+  /** One (u, wk, cw) row per event, cw its value in whole cents:
+    * [[userValuePeriods]] before its sum. */
+  private[graft] def userValueRows(events: DataFrame, user: Column, ts: Column,
+                                   value: Column, periodMicros: Long): DataFrame =
     events
       .filter(user.isNotNull && ts.isNotNull && value.isNotNull)
       .select(user.as("u"), ts.as("__ts"),
-        floor(value * lit(100) + lit(0.5)).cast("long").as("c"))
+        floor(value * lit(100) + lit(0.5)).cast("long").as("cw"))
       .select(col("u"),
-        expr(s"unix_micros(__ts) div $periodMicros").as("wk"), col("c"))
-      .groupBy(col("u"), col("wk"))
-      .agg(sum(col("c")).as("cw"))
+        expr(s"unix_micros(__ts) div $periodMicros").as("wk"), col("cw"))
 
   /** [[cohortValue]] over pre-bucketed (u, wk, cw) rows — the form a
     * stored user-value ledger feeds directly. */

@@ -231,10 +231,17 @@ object RobustStats {
     * [[ksTwoSample]]). Additive across disjoint row sets — what makes
     * the streaming merge exact. */
   def psiValueCounts(df: DataFrame, x: Column, inRef: Column): DataFrame =
+    psiValueRows(df, x, inRef).groupBy(col("x"))
+      .agg(sum(col("a")).as("a"), sum(col("b")).as("b"))
+
+  /** One (x, a, b) row per non-NULL metric row, (a, b) = (1, 0) in the
+    * reference slice and (0, 1) outside it: [[psiValueCounts]] before
+    * its sums. */
+  private[graft] def psiValueRows(df: DataFrame, x: Column,
+                                  inRef: Column): DataFrame =
     df.filter(x.isNotNull).select(x.cast("long").as("x"),
-        when(inRef, lit(1L)).otherwise(lit(0L)).as("f"))
-      .groupBy(col("x"))
-      .agg(sum(col("f")).as("a"), sum(lit(1L) - col("f")).as("b"))
+        when(inRef, lit(1L)).otherwise(lit(0L)).as("a"))
+      .withColumn("b", lit(1L) - col("a"))
 
   /** PSI from a (x, a, b) value-count table (corpus-built or
     * ledger-built — identical results either way).

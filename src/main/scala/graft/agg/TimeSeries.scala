@@ -676,10 +676,13 @@ object TimeSeries {
     * shares the exact key/day semantics. Additive across disjoint row
     * sets — what makes the streaming merge exact. */
   def dailyCounts(df: DataFrame, key: Column, ts: Column): DataFrame =
+    dayRows(df, key, ts).groupBy(col("k"), col("day")).agg(count(lit(1)).as("c"))
+
+  /** One (k, day) row per event: [[dailyCounts]] before its count. */
+  private[graft] def dayRows(df: DataFrame, key: Column, ts: Column): DataFrame =
     df.filter(key.isNotNull && ts.isNotNull)
       .select(key.as("k"),
         call_function("div", unix_micros(ts), lit(86400000000L)).as("day"))
-      .groupBy(col("k"), col("day")).agg(count(lit(1)).as("c"))
 
   /** [[rollingAnomaly]] from a (k, day, c) daily table (corpus-built
     * or ledger-built — identical results either way). */

@@ -6,6 +6,7 @@ import graft.llm.{Dedup, Privacy, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Release-audit wave: k-anonymity/l-diversity disclosure risk,
   * Kruskal–Wallis k-sample rank test, KMV bottom-k sketch Jaccard
@@ -95,10 +96,6 @@ object AuditQueries {
             .otherwise((col("wp.n_tokens") + col("wp.n_unk")).cast("double") /
               col("wp.n_words").cast("double")).as("fertility")))
   )
-
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-  private val FoldToksSql =
-    s"list_filter(string_split($FoldSql, ' '), t -> len(t) > 0)"
 
   val oracle: Map[String, String] = Map(
     "q_dataset_card" ->
@@ -276,7 +273,7 @@ object AuditQueries {
     // with zero words coalesce to zeros off the doc spine
     "q_wordpiece" ->
       s"""WITH RECURSIVE w AS (
-         |  SELECT doc_id, unnest($FoldToksSql) AS w
+         |  SELECT doc_id, unnest($sqlFoldToks) AS w
          |  FROM documents WHERE text IS NOT NULL),
          |st AS (
          |  SELECT doc_id, w, 1 AS pos, 0 AS n_tok, 0 AS n_unk FROM w

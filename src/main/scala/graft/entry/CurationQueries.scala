@@ -4,6 +4,7 @@ import graft.llm.{Contamination, Dedup, Linkage, Preference, Privacy, Selection,
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Round-14 curation wave: Fellegi–Sunter record linkage, ε-DP noisy
   * count release, DoReMi-style one-step domain reweighting, Unicode-
@@ -172,12 +173,8 @@ object CurationQueries {
   // DuckDB oracle twins
   // ======================================================================
 
-  private val SqlToks =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
   private val SqlAlnumToks =
     "list_filter(regexp_split_to_array(text, '[^A-Za-z0-9]+'), t -> len(t) > 0)"
-  private def sqlMd5Long(x: String): String =
-    s"CAST('0x'||substring(md5($x),1,15) AS BIGINT)"
 
   /** Exact x^n as the exponentiation-by-squaring multiplication chain —
     * textually mirrors [[Dedup.lshPlan]]'s powChain (libm pow is only
@@ -244,7 +241,7 @@ object CurationQueries {
          |FROM r""".stripMargin,
 
     "q_domain_reweight" ->
-      s"""WITH toks AS (SELECT source, $SqlToks AS tk FROM documents),
+      s"""WITH toks AS (SELECT source, $sqlToks AS tk FROM documents),
          |m AS (
          |  SELECT source AS g,
          |    CASE WHEN tk IS NULL THEN NULL
@@ -332,7 +329,7 @@ object CurationQueries {
            |       ELSE 1.0 - ($prod) END AS pass_rate
            |FROM per""".stripMargin
       }.mkString("\nUNION ALL\n")
-      s"""WITH toks AS (SELECT doc_id, $SqlToks AS tk FROM documents),
+      s"""WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
          |m AS (
          |  SELECT doc_id % $PassTaskMod AS task,
          |    CASE WHEN tk IS NULL THEN NULL
@@ -418,7 +415,7 @@ object CurationQueries {
            |    AS fail_rate FROM a""".stripMargin
       }.mkString("\nUNION ALL\n")
       s"""WITH toks AS (
-         |  SELECT doc_id, lang, $SqlToks AS tk,
+         |  SELECT doc_id, lang, $sqlToks AS tk,
          |    list_filter(string_split(lower(translate(text, 'İΣ', 'iσ')),
          |      ' '), t -> len(t) > 0) AS ftk
          |  FROM documents WHERE text IS NOT NULL),
@@ -523,22 +520,12 @@ object CurationQueries {
          |SELECT * FROM p UNION ALL SELECT * FROM ng""".stripMargin
   )
 
-  /** Cosine twin of the CosineSimilarity expression (the QaQueries
-    * canonical text — index-order dot, 0 on zero norm). */
-  private def sqlCos(a: String, b: String): String =
-    s"""(CASE WHEN sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |            * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) = 0 THEN 0.0
-       |       ELSE list_sum(list_transform(range(0, least(len($a), len($b))), i ->
-       |              CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-       |            / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |               * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) END)""".stripMargin
-
   /** Shared duel-stream CTE (q_duel_matrix, q_bradley_terry): the
     * margin-scored blocked self-join twin of [[langDuels]] — the pair
     * SET is identical to the engine's sorted-array unroll. Leaves a
     * CTE `d(win, lose)` in scope (caller continues the WITH chain). */
   private lazy val DuelCte: String =
-    s"""toks AS (SELECT doc_id, source, lang, n_chars, $SqlToks AS tk
+    s"""toks AS (SELECT doc_id, source, lang, n_chars, $sqlToks AS tk
        |         FROM documents),
        |sc AS (
        |  SELECT doc_id, source, lang, n_chars // $DuelBucket AS lb,

@@ -5,6 +5,7 @@ import graft.llm.{Selection, Similarity, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Round-13 wave: readability scoring, conditional-bigram-entropy
   * repetitiveness, and CUSUM changepoint detection — plus the
@@ -181,21 +182,6 @@ object EvalQueries {
       e.filter(col("vec_id") % 13 === 3).select(col("vec_id")))
   }
 
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-  private val ToksSql = "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-  private val FoldToksSql =
-    s"list_filter(string_split($FoldSql, ' '), t -> len(t) > 0)"
-
-  /** Cosine in DOUBLE, index order, 0 on zero norm — the LlmQueries
-    * sqlCos twin of the CosineSimilarity expression. */
-  private def sqlCos(a: String, b: String): String =
-    s"""(CASE WHEN sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |            * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) = 0 THEN 0.0
-       |       ELSE list_sum(list_transform(range(0, least(len($a), len($b))), i ->
-       |              CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-       |            / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |               * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) END)""".stripMargin
-
   /** dimStats population variance over the 10⁻⁶-quantized grid — the
     * QaQueries VarSql (per-dim integer power sums in n/sq/sqq). */
   private val VarSql =
@@ -339,10 +325,10 @@ object EvalQueries {
 
     "q_readability" ->
       s"""WITH c AS (SELECT doc_id,
-         |  CAST(len($ToksSql) AS BIGINT) AS n_words,
+         |  CAST(len($sqlToks) AS BIGINT) AS n_words,
          |  CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT)
          |    AS n_sentences,
-         |  CAST(len(regexp_extract_all($FoldSql, '[aeiouy]+')) AS BIGINT)
+         |  CAST(len(regexp_extract_all($sqlFold, '[aeiouy]+')) AS BIGINT)
          |    AS n_syllables
          |FROM documents)
          |SELECT doc_id, n_words, n_sentences, n_syllables,
@@ -359,7 +345,7 @@ object EvalQueries {
          |FROM c""".stripMargin,
 
     "q_bigram_entropy" ->
-      s"""WITH t AS (SELECT doc_id AS doc, $FoldToksSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id AS doc, $sqlFoldToks AS tk FROM documents),
          |b AS (SELECT doc, CAST(len(tk) - 1 AS BIGINT) AS n,
          |        tk[i + 1] AS u, tk[i + 2] AS v
          |      FROM t CROSS JOIN LATERAL unnest(range(0, len(tk) - 1)) AS w(i)

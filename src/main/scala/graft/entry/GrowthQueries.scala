@@ -6,6 +6,7 @@ import graft.functions.GraftFunctions.tokensFolded
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Product/eval analytics wave: vocabulary-coverage curve, weekly
   * churn accounting, per-transition latency profiles, embedding
@@ -212,20 +213,12 @@ object GrowthQueries {
         .withColumnsRenamed(Map("k" -> "event_type")))
   )
 
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-  private val FoldToksSql =
-    s"list_filter(string_split($FoldSql, ' '), t -> len(t) > 0)"
-  private val SqlToks =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-  private def sqlMd5Long(x: String): String =
-    s"CAST('0x'||substring(md5($x),1,15) AS BIGINT)"
-
   /** Shared score/label CTE prefix of the calibration family
     * (q_calibration_bins, q_iso_calibration) — the clfScore margin and
     * the folded-token blocklist gate, verbatim in both twins. */
   private lazy val calibScoreCte: String =
-    s"""toks AS (SELECT $SqlToks AS tk,
-       |               $FoldToksSql AS ftk FROM documents),
+    s"""toks AS (SELECT $sqlToks AS tk,
+       |               $sqlFoldToks AS ftk FROM documents),
        |sc AS (SELECT
        |    CASE WHEN len(tk) = 0 THEN 0.0
        |         ELSE CAST(CAST(coalesce(list_sum(list_transform(tk, t ->
@@ -251,7 +244,7 @@ object GrowthQueries {
          |             0) AS BIGINT) AS DOUBLE)
          |           / (CAST(CAST(len(tk) AS BIGINT) AS DOUBLE) * 1000.0)
          |    END AS score
-         |  FROM (SELECT *, $SqlToks AS tk FROM documents
+         |  FROM (SELECT *, $sqlToks AS tk FROM documents
          |        WHERE text IS NOT NULL) x),
          |gated AS (SELECT * FROM sc2 WHERE score > 0),
          |dd AS (SELECT * FROM (
@@ -325,7 +318,7 @@ object GrowthQueries {
     // window corpus totals, the 80%-rule verdict
     "q_gate_parity" ->
       s"""WITH sx AS (SELECT source AS g,
-         |              (len(list_filter($FoldToksSql, t -> t IN
+         |              (len(list_filter($sqlFoldToks, t -> t IN
          |                (${BlockedWords.map(w => s"'$w'").mkString(", ")})))
          |               = 0) AS pass
          |            FROM documents),
@@ -450,7 +443,7 @@ object GrowthQueries {
          |  iso.iso_pos
          |FROM g JOIN iso USING (bin)""".stripMargin,
     "q_vocab_coverage" ->
-      s"""WITH tk AS (SELECT unnest($FoldToksSql) AS t FROM documents
+      s"""WITH tk AS (SELECT unnest($sqlFoldToks) AS t FROM documents
          |            WHERE text IS NOT NULL),
          |vocab AS (SELECT t, CAST(count(*) AS BIGINT) AS f FROM tk
          |          GROUP BY t),

@@ -8,6 +8,7 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Linkage/dominance wave: Adamic–Adar link prediction,
   * interval×interval overlap join, sorted-neighborhood dedup,
@@ -149,17 +150,6 @@ object LinkQueries {
           "y" -> "order_day")))
   )
 
-  /** Cosine similarity twin (QaQueries.sqlCos — shared shape). */
-  private def sqlCos(a: String, b: String): String =
-    s"""(CASE WHEN sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |            * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) = 0 THEN 0.0
-       |       ELSE list_sum(list_transform(range(0, least(len($a), len($b))), i ->
-       |              CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-       |            / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |               * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) END)""".stripMargin
-
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-
   val oracle: Map[String, String] = Map(
     "q_adamic_adar" ->
       s"""WITH e AS (SELECT DISTINCT o_custkey AS s, l_partkey AS w
@@ -206,7 +196,7 @@ object LinkQueries {
 
     "q_snm_dedup" ->
       s"""WITH d AS (SELECT doc_id, lang,
-         |             substring($FoldSql, 1, $SnmPfx) AS p FROM documents
+         |             substring($sqlFold, 1, $SnmPfx) AS p FROM documents
          |           WHERE doc_id IS NOT NULL AND lang IS NOT NULL
          |             AND text IS NOT NULL),
          |r AS (SELECT doc_id, lang, p,
@@ -283,7 +273,7 @@ object LinkQueries {
          |          doc_id NULLS LAST) AS prn
          |    FROM documents) WHERE prn <= $PrCap),
          |sd AS (SELECT doc_id, lang,
-         |              substring($FoldSql, 1, $SnmPfx) AS p FROM probe
+         |              substring($sqlFold, 1, $SnmPfx) AS p FROM probe
          |            WHERE doc_id IS NOT NULL AND lang IS NOT NULL
          |              AND text IS NOT NULL),
          |sr AS (SELECT doc_id, lang, p,
@@ -296,7 +286,7 @@ object LinkQueries {
          |sf AS (SELECT least(ida, idb) AS id1, greatest(ida, idb) AS id2,
          |         levenshtein(pa, pb) AS dist FROM sc),
          |snm AS (SELECT DISTINCT id1, id2 FROM sf WHERE dist <= $SnmDist),
-         |ed AS (SELECT doc_id, lang, $FoldSql AS p,
+         |ed AS (SELECT doc_id, lang, $sqlFold AS p,
          |         n_chars // $EbBucket AS b FROM probe),
          |eh AS (SELECT doc_id, lang, p, b, $histSql AS hist FROM ed),
          |ec AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.p AS pa,

@@ -6,6 +6,7 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** LLM-training-data-pipeline driver queries (BASELINE.json north_star):
   * deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard /
@@ -1139,14 +1140,6 @@ object LlmQueries {
   // DuckDB oracle twins
   // ======================================================================
 
-  /** md5-derived 60-bit BIGINT — DuckDB twin of GraftFunctions.md5Long. */
-  private def sqlMd5Long(x: String): String =
-    s"CAST('0x'||substring(md5($x),1,15) AS BIGINT)"
-
-  /** Whitespace tokens (drop empties) — twin of GraftFunctions.tokens. */
-  private val sqlToks =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-
   /** CTE producing (doc_id, tk tokens, sg w-shingles) for documents. */
   private def shingleCteW(w: Int): String =
     s"""toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
@@ -1248,16 +1241,6 @@ object LlmQueries {
         |  FROM enc0 e0 JOIN enc1 e1 USING (vec_id))""".stripMargin
     (kctes ++ ranked ++ encs :+ enc).mkString(",\n")
   }
-
-  /** Cosine similarity in DOUBLE, index order, 0 on zero norm — bitwise
-    * twin of the CosineSimilarity expression (no rounding on either side). */
-  private def sqlCos(a: String, b: String): String =
-    s"""(CASE WHEN sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |            * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) = 0 THEN 0.0
-       |       ELSE list_sum(list_transform(range(0, least(len($a), len($b))), i ->
-       |              CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-       |            / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |               * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) END)""".stripMargin
 
   private val sqlAlnumToks =
     "list_filter(regexp_split_to_array(text, '[^A-Za-z0-9]+'), t -> len(t) > 0)"

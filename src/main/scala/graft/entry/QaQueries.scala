@@ -5,6 +5,7 @@ import graft.llm.{Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Corpus/embedding QA wave: per-dimension embedding health, kNN
   * hubness audit, duplication-inflation accounting, templated-page
@@ -180,24 +181,6 @@ object QaQueries {
         col("text"))
         .withColumnsRenamed(Map("g" -> "source")))
   )
-
-  /** Cosine similarity in DOUBLE, index order, 0 on zero norm — the
-    * [[LlmQueries]] sqlCos twin of the CosineSimilarity expression. */
-  private def sqlCos(a: String, b: String): String =
-    s"""(CASE WHEN sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |            * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) = 0 THEN 0.0
-       |       ELSE list_sum(list_transform(range(0, least(len($a), len($b))), i ->
-       |              CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)))
-       |            / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-       |               * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) END)""".stripMargin
-
-  /** md5-derived 60-bit BIGINT — DuckDB twin of GraftFunctions.md5Long. */
-  private def sqlMd5Long(x: String): String =
-    s"CAST('0x'||substring(md5($x),1,15) AS BIGINT)"
-
-  /** Whitespace tokens (drop empties) — twin of GraftFunctions.tokens. */
-  private val sqlToks =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
 
   private val VarSql =
     """(CAST(sqq AS DOUBLE)

@@ -5,6 +5,7 @@ import graft.llm.{Bloom, Selection, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Model-based data-selection queries: the hashed linear quality
   * classifier (GPT-3/CCNet shape), DSIR importance weighting (Xie et
@@ -111,12 +112,6 @@ object SelectionQueries {
   // Scale = 1e9; weight mix = Weyl constant 2654435761).
   // ======================================================================
 
-  private val SqlToks =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-
-  private def sqlMd5Long(x: String): String =
-    s"CAST('0x'||substring(md5($x),1,15) AS BIGINT)"
-
   /** The 4 bloom positions of an md5 hex column — offsets 1/9/17/25,
     * 7 hex digits (28 bits) each, mod [[BloomBits]]. */
   private def sqlBloomPos(h: String): String =
@@ -134,7 +129,7 @@ object SelectionQueries {
       val pbar = "CAST(s_agree AS DOUBLE) / (CAST(n_docs AS DOUBLE) * 6.0)"
       val p1 = "CAST(s_votes AS DOUBLE) / (CAST(n_docs AS DOUBLE) * 3.0)"
       val pe = s"(($p1) * ($p1) + (1.0 - ($p1)) * (1.0 - ($p1)))"
-      s"""WITH toks AS (SELECT $SqlToks AS tk, n_chars FROM documents
+      s"""WITH toks AS (SELECT $sqlToks AS tk, n_chars FROM documents
          |              WHERE text IS NOT NULL),
          |v AS (SELECT
          |    (CASE WHEN $margin > 0 THEN 1 ELSE 0 END)
@@ -155,7 +150,7 @@ object SelectionQueries {
     },
 
     "q_quality_classifier" ->
-      s"""WITH toks AS (SELECT doc_id, $SqlToks AS tk FROM documents),
+      s"""WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
          |m AS (
          |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_toks,
          |    CASE WHEN tk IS NULL THEN NULL
@@ -171,7 +166,7 @@ object SelectionQueries {
          |FROM m""".stripMargin,
 
     "q_source_ablation" ->
-      s"""WITH toks AS (SELECT source, $SqlToks AS tk FROM documents
+      s"""WITH toks AS (SELECT source, $sqlToks AS tk FROM documents
          |              WHERE source IS NOT NULL),
          |m AS (
          |  SELECT source,
@@ -197,7 +192,7 @@ object SelectionQueries {
          |FROM w""".stripMargin,
 
     "q_dsir" ->
-      s"""WITH toks AS (SELECT doc_id, lang, $SqlToks AS tk FROM documents),
+      s"""WITH toks AS (SELECT doc_id, lang, $sqlToks AS tk FROM documents),
          |tw AS (SELECT doc_id, (lang = 'en') AS is_tgt, unnest(tk) AS w FROM toks),
          |bw AS (SELECT doc_id, is_tgt, ${sqlMd5Long("w")} % 256 AS b FROM tw),
          |cnt AS (
@@ -226,7 +221,7 @@ object SelectionQueries {
     "q_word_filter" ->
       s"""WITH m AS (
          |  SELECT doc_id,
-         |    CAST(len(list_filter($SqlToks,
+         |    CAST(len(list_filter($sqlToks,
          |      t -> lower(t) IN (${BlockedWords.map(w => s"'$w'").mkString(", ")})))
          |      AS BIGINT) AS n_blocked
          |  FROM documents)
@@ -283,7 +278,7 @@ object SelectionQueries {
     // contingency table from one conditional aggregate; po/pe/kappa are
     // the SAME SQL text the Spark plan evaluates (Selection.kappaSql)
     "q_scorer_kappa" ->
-      s"""WITH toks AS (SELECT $SqlToks AS tk FROM documents),
+      s"""WITH toks AS (SELECT $sqlToks AS tk FROM documents),
          |g AS (
          |  SELECT
          |    (len(tk) > 0 AND

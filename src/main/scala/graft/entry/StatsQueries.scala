@@ -5,6 +5,7 @@ import graft.llm.{Dedup, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Distribution-shape QA + corpus-maintenance wave: Benford
   * first-digit audit, median/MAD robust outliers, two-sample KS drift,
@@ -168,8 +169,6 @@ object StatsQueries {
     .map(c => s"len(p) - len(replace(p, '$c', ''))")
     .mkString("[", ", ", "]")
 
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-
   val oracle: Map[String, String] = Map(
     "q_benford" ->
       s"""WITH c AS (SELECT CAST(floor(o_totalprice*100 + 0.5) AS BIGINT) AS c
@@ -292,7 +291,7 @@ object StatsQueries {
 
     "q_bpe_pairs" ->
       s"""WITH toks AS (SELECT unnest(list_filter(
-         |        string_split($FoldSql, ' '), t -> len(t) > 0)) AS w
+         |        string_split($sqlFold, ' '), t -> len(t) > 0)) AS w
          |      FROM documents),
          |wc AS (SELECT w, count(*) AS cnt FROM toks GROUP BY w),
          |pairs AS (SELECT unnest(list_transform(range(1, len(w)),
@@ -306,7 +305,7 @@ object StatsQueries {
          |FROM top""".stripMargin,
 
     "q_edit_dedup" ->
-      s"""WITH d AS (SELECT doc_id, lang, $FoldSql AS p,
+      s"""WITH d AS (SELECT doc_id, lang, $sqlFold AS p,
          |             n_chars // $EditBucket AS b FROM documents),
          |h AS (SELECT doc_id, lang, p, b, $HistSql AS hist FROM d),
          |c AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.p AS pa, b.p AS pb,

@@ -6,6 +6,7 @@ import graft.llm.Dedup
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Trend/recommendation wave: item-item collaborative filtering,
   * rolling-window volume anomalies, lead–lag cross-correlation, Holt
@@ -79,12 +80,10 @@ object TrendQueries {
       Dedup.dupClusterStats(Tables.documents(s, d), col("text")))
   )
 
-  private val FoldSql = "lower(translate(text, 'İΣ', 'iσ'))"
-
   /** The q_snm_dedup candidate CTE chain (identical knobs). */
   private def snmPairsCte: String =
     s"""d AS (SELECT doc_id, lang,
-       |        substring($FoldSql, 1, $SnmPfx) AS p FROM documents
+       |        substring($sqlFold, 1, $SnmPfx) AS p FROM documents
        |      WHERE doc_id IS NOT NULL AND lang IS NOT NULL
        |        AND text IS NOT NULL),
        |r AS (SELECT doc_id, lang, p,

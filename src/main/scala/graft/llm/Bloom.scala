@@ -56,12 +56,18 @@ object Bloom {
     * with map-side partial combine; at most `bits/32` rows out however
     * large the key set is. */
   def wordBits(refKeys: DataFrame, md5Hex: Column, bits: Int): DataFrame =
+    wordBitRows(refKeys, md5Hex, bits)
+      .groupBy(col("word")).agg(bit_or(col("wbits")).as("wbits"))
+
+  /** One (word, wbits) row per key bit, wbits holding that single bit:
+    * [[wordBits]] before its bit_or. */
+  private[graft] def wordBitRows(refKeys: DataFrame, md5Hex: Column,
+                                 bits: Int): DataFrame =
     refKeys
       .select(explode(positions(md5Hex, bits)).as("pos"))
       .select(shiftright(col("pos"), 5).cast("int").as("word"),
         col("pos").bitwiseAND(lit(31L)).cast("int").as("bit"))
-      .groupBy(col("word"))
-      .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("wbits"))
+      .select(col("word"), expr("shiftleft(CAST(1 AS BIGINT), bit)").as("wbits"))
 
   /** Collapse a (word, wbits) table to the driver-side long array the
     * probe embeds as literal state. Bounded broadcast state (the

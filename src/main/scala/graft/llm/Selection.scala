@@ -194,15 +194,21 @@ object Selection {
                              salt: Int = 0): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("priority"), col("doc_id"))
+    priorities(docs, group, id, weight, salt)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k).drop("rn")
+  }
+
+  /** Every positive-weight row's (grp, doc_id, weight, priority):
+    * [[prioritySamplePerGroup]] before its per-group k-cut. */
+  private[graft] def priorities(docs: DataFrame, group: Column, id: Column,
+                                weight: Column, salt: Int): DataFrame =
     docs.select(group.as("grp"), id.as("doc_id"),
         weight.cast("long").as("weight"))
       .filter(col("weight") > 0)
       .withColumn("u", md5Long(col("doc_id").cast("string"), salt) + lit(1L))
-      .withColumn("priority", expr("u div weight"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("grp"), col("doc_id"), col("weight"), col("priority"))
-  }
+      .select(col("grp"), col("doc_id"), col("weight"),
+        expr("u div weight").as("priority"))
 
   /** DSIR importance log-weight per doc: every token hashes into
     * [[DsirBuckets]] buckets; bucket b carries

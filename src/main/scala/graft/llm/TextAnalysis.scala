@@ -148,16 +148,23 @@ object TextAnalysis {
     * built from — exposed separately because it is ADDITIVE: each token
     * occurrence lives in exactly one micro-batch, so per-batch counts
     * sum to the corpus table (the line-ledger discipline), which is
-    * what [[graft.streaming.Streaming.mergeKlLedger]] exploits. */
+    * what [[graft.streaming.Streaming.mergeKlLedgerIdempotent]]
+    * exploits. */
   def klBucketCounts(df: DataFrame, text: Column, group: Column,
                      salt: Int = 17): DataFrame =
-    // one native tokenize+hash pass per doc; the corpus-sized explode
-    // then carries 8-byte bucket ids instead of token strings (see
-    // TokenHashBuckets — value-identical to md5Long(t, salt) % 256)
+    klBuckets(df, text, group, salt)
+      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n_gb"))
+
+  /** One (g, b) row per token occurrence — [[klBucketCounts]] before
+    * its count, the form a ledger merge re-sums in its own shuffle. One
+    * native tokenize+hash pass per doc; the corpus-sized explode then
+    * carries 8-byte bucket ids instead of token strings (see
+    * TokenHashBuckets — value-identical to md5Long(t, salt) % 256). */
+  private[graft] def klBuckets(df: DataFrame, text: Column, group: Column,
+                               salt: Int = 17): DataFrame =
     df.filter(group.isNotNull)
       .select(group.as("g"), explode(
         graft.functions.TokenHashBuckets(text, salt, 256L)).as("b"))
-      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n_gb"))
 
   /** KL from a (g, b, n_gb) count table (corpus-built or ledger-built —
     * identical results either way, StreamingSpec pins it). Null-group

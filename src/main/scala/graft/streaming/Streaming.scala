@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.Row
 
 /** Structured Streaming twins of the reference's topology surface.
@@ -54,17 +54,6 @@ object Streaming {
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
 
-  /** Memory sink for interactive state queries (SURVEY.md §2.5 backend 1):
-    * the materialized view behind StateView get/all/range. */
-  def toMemory(df: DataFrame, queryName: String,
-               mode: OutputMode = OutputMode.Append()): StreamingQuery =
-    df.writeStream.format("memory").queryName(queryName).outputMode(mode).start()
-
-  /** Event-time watermark — prerequisite for every stateful streaming op;
-    * the late-data policy the reference lacks entirely (SURVEY.md §2.4). */
-  def withEventTime(df: DataFrame, tsCol: String, watermark: String): DataFrame =
-    df.withWatermark(tsCol, watermark)
-
   /** Streaming tumbling-window aggregation (reference roadmap "windowed
     * aggregates", README.md:30-31). */
   def tumbling(df: DataFrame, tsCol: String, watermark: String, size: String,
@@ -82,16 +71,6 @@ object Streaming {
       .withColumn("window_start", col("window.start"))
       .withColumn("window_end", col("window.end"))
       .drop("window")
-
-  /** Streaming session windows (gap-based). */
-  def session(df: DataFrame, tsCol: String, watermark: String, gap: String,
-              keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("session_start", col("session_window.start"))
-      .withColumn("session_end", col("session_window.end"))
-      .drop("session_window")
 
   /** Streaming `distinct` — the transducer's task-local seen-set
     * (SURVEY.md §2.2) made fault-tolerant + bounded by watermark. */
@@ -455,22 +434,6 @@ object Streaming {
       .join(ledger.select(ledgerHash.as("__ch")).distinct(), Seq("__ch"), "left_anti")
       .drop("__ch")
 
-  /** Merge one micro-batch's line doc-frequencies into a persistent
-    * line-hash ledger — the ingest-time half of line-level boilerplate
-    * dedup ([[graft.llm.Dedup.lineDedup]]'s streaming twin, the
-    * exactIncrement ledger discipline). Each arriving doc lives in
-    * exactly ONE micro-batch, so per-batch DISTINCT (line-hash, doc)
-    * counts are additive across batches: after the last batch the
-    * ledger equals the batch run's [[graft.llm.Dedup.lineFrequencies]]
-    * over the full corpus, bit for bit — StreamingSpec pins the
-    * equality. The ledger is (h, n_docs): O(distinct lines) state,
-    * stored as a table (bucket by h at lake scale for a co-located
-    * merge); line TEXT never enters the ledger or any shuffle key. */
-  def mergeLineLedger(ledger: DataFrame, batchDocs: DataFrame,
-                      id: Column, text: Column): DataFrame =
-    sumInto(ledger, graft.llm.Dedup.lineFrequencies(graft.llm.Dedup
-      .explodeLines(batchDocs, id, text)), Seq("h"), Seq("n_docs"))
-
   /** Read the `foreachBatch` batchId high-water mark (HWM) carried in a
     * ledger's null-keyed sentinel row; -1 when the ledger has never
     * been merged through a gated merge.
@@ -491,8 +454,8 @@ object Streaming {
     * across retries, which is exactly what makes `batchId <= hwm` the
     * correct skip test. Ledgers idempotent by construction (set union,
     * `bit_or`, bottom-k) need no mark. */
-  def ledgerHighWaterMark(ledger: DataFrame, key: Column,
-                          value: Column): Long =
+  private[graft] def ledgerHighWaterMark(ledger: DataFrame, key: Column,
+                                         value: Column): Long =
     ledger.filter(key.isNull).select(value.cast("long").as("v"))
       .collect().headOption.map(_.getLong(0)).getOrElse(-1L)
 
@@ -513,35 +476,69 @@ object Streaming {
       }: _*))
   }
 
-  /** Count-additive merge: union `delta` into the ledger's
-    * (keys, measures) rows and re-sum every measure per key as LONG. */
-  private def sumInto(ledger: DataFrame, delta: DataFrame, keys: Seq[String],
-                      measures: Seq[String]): DataFrame = {
+  // Every merge below plans ONE shuffle exchange: the batch side enters
+  // as rows BEFORE its aggregation, so the merge's own exchange also
+  // does the batch's counting.
+
+  /** Count-additive merge: union the batch `rows` (keys, measures, one
+    * row per unit counted — 1 for a count) into the ledger's rows and
+    * re-sum every measure per key as LONG, partial sums map-side. With
+    * `distinctRows` each distinct batch row counts once (extra columns
+    * such as doc_id give it its identity): the union is repartitioned by
+    * the keys so the distinct and the sum share that exchange, and a
+    * marker column keeps every ledger row apart from every batch row. */
+  private def sumInto(ledger: DataFrame, rows: DataFrame, keys: Seq[String],
+                      measures: Seq[String],
+                      distinctRows: Boolean = false): DataFrame = {
     val sums = measures.map(m => sum(col(m)).cast("long").as(m))
-    ledger.select((keys ++ measures).map(col): _*).unionByName(delta)
+    val all = ledger.select((keys ++ measures).map(col) :+ lit(true).as("__ledger"): _*)
+      .unionByName(rows.withColumn("__ledger", lit(false)), allowMissingColumns = true)
+    (if (distinctRows) all.repartition(keys.map(col): _*).distinct() else all)
       .groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
   }
 
-  /** Bottom-k merge: the distinct rows, cut to the first `k` per
-    * `group` in `order`. A redelivered row is bit-identical and
-    * collapses in the distinct, so the merge needs no mark. */
-  private def bottomK(rows: DataFrame, group: String, order: Seq[String],
-                      k: Int): DataFrame = {
+  /** Set-union merge: the distinct rows of ledger ∪ `rows`. Idempotent,
+    * so a redelivered batch is a no-op without a mark. */
+  private def unionInto(ledger: DataFrame, rows: DataFrame): DataFrame =
+    ledger.select(rows.columns.toSeq.map(col): _*).unionByName(rows).distinct()
+
+  /** Bottom-k merge: the distinct rows of ledger ∪ `rows`, cut to the
+    * first `k` per `group` in `order`, repartitioned by `group` so the
+    * distinct and the window share one exchange. A redelivered row is
+    * bit-identical and collapses in the distinct, so the merge needs no
+    * mark. */
+  private def bottomK(ledger: DataFrame, rows: DataFrame, group: String,
+                      order: Seq[String], k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(group)).orderBy(order.map(col): _*)
-    rows.distinct().withColumn("__rn", row_number().over(w))
+    ledger.select(rows.columns.toSeq.map(col): _*).unionByName(rows)
+      .repartition(col(group)).distinct()
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k).drop("__rn")
   }
 
-  /** Replay-proof [[mergeLineLedger]] under the [[ledgerHighWaterMark]]
-    * gate (sentinel h=null, n_docs=batchId) — the guarantee
-    * [[mergeBloomLedger]] gets for free from bit_or idempotence.
-    * [[lineVerdictsAgainstLedger]] ignores the sentinel (a null hash
-    * matches nothing). */
+  /** Merge one micro-batch's line doc-frequencies into a persistent
+    * line-hash ledger — the ingest-time half of line-level boilerplate
+    * dedup ([[graft.llm.Dedup.lineDedup]]'s streaming twin, the
+    * exactIncrement ledger discipline). Each arriving doc lives in
+    * exactly ONE micro-batch, so per-batch DISTINCT (line-hash, doc)
+    * counts are additive across batches: after the last batch the
+    * ledger equals the batch run's [[graft.llm.Dedup.lineFrequencies]]
+    * over the full corpus, bit for bit (a NULL doc id counts as one
+    * doc there and here) — StreamingSpec pins the equality. Replay-proof
+    * under the [[ledgerHighWaterMark]] gate (sentinel h=null,
+    * n_docs=batchId); [[lineVerdictsAgainstLedger]] ignores the
+    * sentinel (a null hash matches nothing). The ledger is (h, n_docs):
+    * O(distinct lines) state, stored as a table (bucket by h at lake
+    * scale for a co-located merge); line TEXT never enters the ledger
+    * or any shuffle key. */
   def mergeLineLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
                                 id: Column, text: Column,
                                 batchId: Long): DataFrame =
-    gated(ledger, batchId, "h", "n_docs")(mergeLineLedger(_, batchDocs, id, text))
+    gated(ledger, batchId, "h", "n_docs")(sumInto(_, graft.llm.Dedup
+      .explodeLines(batchDocs, id, text)
+      .select(col("h"), col("doc_id"), lit(1L).as("n_docs")),
+      Seq("h"), Seq("n_docs"), distinctRows = true))
 
   /** Scrub docs against a line ledger: lines whose cumulative distinct
     * doc count exceeds `maxDocs` are boilerplate. Run per micro-batch
@@ -558,78 +555,61 @@ object Streaming {
   /** Merge one micro-batch's docs into a persistent KL bucket ledger —
     * the ingest half of [[graft.llm.TextAnalysis.unigramKlDrift]]. Each
     * token occurrence lives in exactly one micro-batch, so per-batch
-    * (group, bucket) counts are additive (the mergeLineLedger
-    * discipline); after the last batch
-    * [[graft.llm.TextAnalysis.klFromBucketCounts]] over the ledger
-    * equals the one-shot batch drift bit for bit (StreamingSpec pins
-    * it). Ledger is (g, b, n_gb): ≤ |groups|·256 rows of state — the
-    * drift monitor every STREAMING ingest wants, recomputable per
-    * batch window at constant cost. */
-  def mergeKlLedger(ledger: DataFrame, batchDocs: DataFrame,
-                    text: Column, group: Column): DataFrame =
-    sumInto(ledger, graft.llm.TextAnalysis.klBucketCounts(batchDocs, text,
-      group), Seq("g", "b"), Seq("n_gb"))
-
-  /** Replay-proof [[mergeKlLedger]] under the [[ledgerHighWaterMark]]
-    * gate (sentinel g=null, b=0, n_gb=batchId). Real groups are
-    * non-null by construction ([[graft.llm.TextAnalysis
-    * .klBucketCounts]] filters them) and
-    * [[graft.llm.TextAnalysis.klFromBucketCounts]] drops null groups,
-    * so drift over the gated ledger equals the one-shot batch monitor
-    * bit for bit even under replay (StreamingSpec pins it). */
+    * (group, bucket) counts are additive (the line-ledger discipline).
+    * Replay-proof under the [[ledgerHighWaterMark]] gate (sentinel
+    * g=null, b=0, n_gb=batchId): real groups are non-null by
+    * construction ([[graft.llm.TextAnalysis.klBucketCounts]] filters
+    * them) and [[graft.llm.TextAnalysis.klFromBucketCounts]] drops null
+    * groups, so drift over the gated ledger equals the one-shot batch
+    * monitor bit for bit even under replay (StreamingSpec pins it).
+    * Ledger is (g, b, n_gb): ≤ |groups|·256 rows of state — the drift
+    * monitor every STREAMING ingest wants, recomputable per batch
+    * window at constant cost. */
   def mergeKlLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
                               text: Column, group: Column,
                               batchId: Long): DataFrame =
-    gated(ledger, batchId, "g", "n_gb")(mergeKlLedger(_, batchDocs, text, group))
+    gated(ledger, batchId, "g", "n_gb")(sumInto(_, graft.llm.TextAnalysis
+      .klBuckets(batchDocs, text, group).withColumn("n_gb", lit(1L)),
+      Seq("g", "b"), Seq("n_gb")))
 
-  /** Merge one micro-batch's docs into a persistent PSI value-count
+  /** Merge one micro-batch's rows into a persistent PSI value-count
     * ledger — the ingest half of [[graft.agg.RobustStats.psi]]. Each
     * row lives in exactly one micro-batch, so per-batch (x, a, b)
-    * value counts are additive (the mergeLineLedger discipline);
-    * after the last batch
-    * [[graft.agg.RobustStats.psiFromValueCounts]] over the ledger
-    * equals the one-shot batch index bit for bit (StreamingSpec pins
-    * it). State is the metric's VALUE DOMAIN — bounded for scores/
-    * lengths; pre-quantize a continuous metric before ingest. */
-  def mergePsiLedger(ledger: DataFrame, batchRows: DataFrame,
-                     x: Column, inRef: Column): DataFrame =
-    sumInto(ledger, graft.agg.RobustStats.psiValueCounts(batchRows, x, inRef),
-      Seq("x"), Seq("a", "b"))
-
-  /** Replay-proof [[mergePsiLedger]] under the [[ledgerHighWaterMark]]
-    * gate (sentinel x=null, a=batchId, b=0). Real metric values are
-    * non-null by construction ([[graft.agg.RobustStats.psiValueCounts]]
-    * filters them) and [[graft.agg.RobustStats.psiFromValueCounts]]
-    * drops null x, so the index over the gated ledger equals the
-    * one-shot batch monitor bit for bit even under replay
-    * (StreamingSpec pins it). */
+    * value counts are additive (the line-ledger discipline).
+    * Replay-proof under the [[ledgerHighWaterMark]] gate (sentinel
+    * x=null, a=batchId, b=0): real metric values are non-null by
+    * construction ([[graft.agg.RobustStats.psiValueCounts]] filters
+    * them) and [[graft.agg.RobustStats.psiFromValueCounts]] drops null
+    * x, so the index over the gated ledger equals the one-shot batch
+    * monitor bit for bit even under replay (StreamingSpec pins it).
+    * State is the metric's VALUE DOMAIN — bounded for scores/lengths;
+    * pre-quantize a continuous metric before ingest. */
   def mergePsiLedgerIdempotent(ledger: DataFrame, batchRows: DataFrame,
                                x: Column, inRef: Column,
                                batchId: Long): DataFrame =
-    gated(ledger, batchId, "x", "a")(mergePsiLedger(_, batchRows, x, inRef))
+    gated(ledger, batchId, "x", "a")(sumInto(_, graft.agg.RobustStats
+      .psiValueRows(batchRows, x, inRef), Seq("x"), Seq("a", "b")))
 
   /** Per-batch counts for the embedding ingest guard
     * ([[graft.sources.Tables.embeddings]] / FiniteVector): how many
     * vectors arrived, how many were NULL, how many the guard drops for
     * NaN/±Inf/NULL elements. One zero-shuffle scan + a 3-key agg. */
   def quarantineCounts(batch: DataFrame, vec: Column): DataFrame =
+    quarantineCats(batch, vec).groupBy(col("cat")).agg(count(lit(1)).as("n"))
+
+  /** One `cat` row per vector: [[quarantineCounts]] before its count. */
+  private def quarantineCats(batch: DataFrame, vec: Column): DataFrame =
     batch.select(
       when(vec.isNull, lit("null_in"))
         .when(!graft.functions.FiniteVector(vec), lit("quarantined"))
         .otherwise(lit("ok")).as("cat"))
-      .groupBy(col("cat")).agg(count(lit(1)).as("n"))
 
   /** Merge one micro-batch into the persistent quarantine-count ledger
     * — the streaming twin of the batch `q_embed_quarantine` lineage
     * line, so a lake-scale ingest dashboard alerts on a quarantine-rate
     * jump (a broken embedder upstream) without re-scanning history.
     * Counts are additive across micro-batches (the line/KL ledger
-    * class); state is 3 rows. */
-  def mergeQuarantineLedger(ledger: DataFrame, batch: DataFrame,
-                            vec: Column): DataFrame =
-    sumInto(ledger, quarantineCounts(batch, vec), Seq("cat"), Seq("n"))
-
-  /** Replay-proof [[mergeQuarantineLedger]] under the
+    * class); state is 3 rows. Replay-proof under the
     * [[ledgerHighWaterMark]] gate (sentinel cat=null, n=batchId): a
     * redelivered batch would otherwise fabricate a quarantine-rate
     * spike on every failure recovery. Real categories are the non-null
@@ -638,7 +618,8 @@ object Streaming {
   def mergeQuarantineLedgerIdempotent(ledger: DataFrame, batch: DataFrame,
                                       vec: Column,
                                       batchId: Long): DataFrame =
-    gated(ledger, batchId, "cat", "n")(mergeQuarantineLedger(_, batch, vec))
+    gated(ledger, batchId, "cat", "n")(sumInto(_,
+      quarantineCats(batch, vec).withColumn("n", lit(1L)), Seq("cat"), Seq("n")))
 
   /** Merge one micro-batch's events into the persistent (k, day, c)
     * daily-count ledger behind a streaming
@@ -658,7 +639,8 @@ object Streaming {
                                       ts: Column,
                                       batchId: Long): DataFrame =
     gated(ledger, batchId, "k", "day")(sumInto(_, graft.agg.TimeSeries
-      .dailyCounts(batchEvents, key, ts), Seq("k", "day"), Seq("c")))
+      .dayRows(batchEvents, key, ts).withColumn("c", lit(1L)),
+      Seq("k", "day"), Seq("c")))
 
   /** Merge one micro-batch's events into the persistent (u, wk, cw)
     * per-user-period value ledger behind a streaming
@@ -679,7 +661,7 @@ object Streaming {
                                      periodMicros: Long = 604800000000L)
       : DataFrame =
     gated(ledger, batchId, "u", "wk")(sumInto(_, graft.agg.Funnel
-      .userValuePeriods(batchEvents, user, ts, value, periodMicros),
+      .userValueRows(batchEvents, user, ts, value, periodMicros),
       Seq("u", "wk"), Seq("cw")))
 
   /** Merge one micro-batch's (user, period) activity rows into a
@@ -699,10 +681,8 @@ object Streaming {
   def mergeActivityLedger(ledger: DataFrame, batchEvents: DataFrame,
                           user: Column, ts: Column,
                           periodMicros: Long = 604800000000L): DataFrame =
-    ledger.select(col("user_id"), col("wk"))
-      .unionByName(graft.agg.Funnel.activityPeriods(
-        batchEvents, user, ts, periodMicros))
-      .distinct()
+    unionInto(ledger, graft.agg.Funnel.activityPeriods(
+      batchEvents, user, ts, periodMicros))
 
   /** Merge one micro-batch's (source, content-hash) sightings into the
     * persistent overlap ledger behind a streaming
@@ -710,17 +690,15 @@ object Streaming {
     * (src, h) set, so the merge is a set union — IDEMPOTENT by
     * construction (a redelivered batch re-unions rows already present),
     * no batchId high-water mark needed (the mergeActivityLedger class
-    * of ledger, not the count-additive mergeLineLedger class). The
+    * of ledger, not the count-additive line-ledger class). The
     * cross-source matrix of everything seen so far is one
     * crossSourceDup-shaped self-join over the ledger. State: O(distinct
     * (source, unit)) rows — bucket by h at lake scale so both the merge
     * and the pair join co-locate. */
   def mergeOverlapLedger(ledger: DataFrame, batchDocs: DataFrame,
                          source: Column, content: Column): DataFrame =
-    ledger.select(col("src"), col("h"))
-      .unionByName(batchDocs.filter(content.isNotNull)
-        .select(source.as("src"), md5(content).as("h")))
-      .distinct()
+    unionInto(ledger, batchDocs.filter(content.isNotNull)
+      .select(source.as("src"), md5(content).as("h")))
 
   /** The cross-source matrix over an overlap ledger — identical output
     * contract to [[graft.llm.Dedup.crossSourceDup]] on the batch union
@@ -734,24 +712,17 @@ object Streaming {
   /** Merge one micro-batch's token counts into a persistent vocabulary
     * ledger (tok, n) — the ingest half of a streaming tokenizer-coverage
     * audit ([[graft.llm.TextAnalysis.oovRate]]'s vocabulary, built
-    * incrementally). Count-additive, so the mergeLineLedger discipline
-    * applies: each token occurrence must live in exactly one micro-batch;
-    * use [[mergeVocabLedgerIdempotent]] under at-least-once
-    * `foreachBatch` delivery. State: O(distinct tokens) rows — bucket by
-    * tok at lake scale for a co-located merge. */
-  def mergeVocabLedger(ledger: DataFrame, batchDocs: DataFrame,
-                       text: Column): DataFrame =
-    sumInto(ledger, batchDocs
-      .select(explode(graft.functions.GraftFunctions.tokens(text)).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("n")), Seq("tok"), Seq("n"))
-
-  /** Replay-proof [[mergeVocabLedger]] under the [[ledgerHighWaterMark]]
-    * gate (sentinel tok=null, n=batchId; real tokens are non-empty
-    * strings, and the null-keyed row joins nothing in
-    * [[oovAgainstVocabLedger]]). */
+    * incrementally). Count-additive (each token occurrence lives in
+    * exactly one micro-batch) and replay-proof under the
+    * [[ledgerHighWaterMark]] gate (sentinel tok=null, n=batchId; real
+    * tokens are non-empty strings, and the null-keyed row joins nothing
+    * in [[oovAgainstVocabLedger]]). State: O(distinct tokens) rows —
+    * bucket by tok at lake scale for a co-located merge. */
   def mergeVocabLedgerIdempotent(ledger: DataFrame, batchDocs: DataFrame,
                                  text: Column, batchId: Long): DataFrame =
-    gated(ledger, batchId, "tok", "n")(mergeVocabLedger(_, batchDocs, text))
+    gated(ledger, batchId, "tok", "n")(sumInto(_, batchDocs.select(
+      explode(graft.functions.GraftFunctions.tokens(text)).as("tok"), lit(1L).as("n")),
+      Seq("tok"), Seq("n")))
 
   /** OOV audit of incoming docs against the ledger's top-`vocabSize`
     * vocabulary — the gate half of the streaming coverage audit: score
@@ -771,25 +742,25 @@ object Streaming {
   /** Merge one micro-batch into a per-group priority-sample ledger —
     * the streaming half of
     * [[graft.llm.Selection.prioritySamplePerGroup]]. k-smallest-by-
-    * priority is a MONOID: minK(A ∪ B) = minK(minK(A) ∪ minK(B)), so
-    * the ledger only ever holds k rows per group, the merge is one
-    * window pass over (ledger ∪ batch-sample), and — because
-    * priorities are pure content hashes — re-merging a redelivered
-    * batch reproduces identical (id, priority) rows that the distinct
-    * k-cut collapses: idempotent with no batchId mark (the
-    * bloom-ledger class). After the last batch the ledger equals the
-    * one-shot batch sample bit for bit (StreamingSpec pins it, replay
-    * included). State: k·|groups| rows, weight-stream independent. */
+    * priority is a MONOID: minK(A ∪ B) = minK(minK(A) ∪ B), so the
+    * ledger only ever holds k rows per group, the merge is one window
+    * pass over (ledger ∪ batch priorities), and — because priorities
+    * are pure content hashes — re-merging a redelivered batch
+    * reproduces identical (id, priority) rows that the distinct k-cut
+    * collapses: idempotent with no batchId mark (the bloom-ledger
+    * class). After the last batch the ledger equals the one-shot batch
+    * sample bit for bit (StreamingSpec pins it, replay included).
+    * State: k·|groups| rows, weight-stream independent. */
   def mergePrioritySampleLedger(ledger: DataFrame, batchDocs: DataFrame,
                                 group: Column, id: Column, weight: Column,
                                 k: Int, salt: Int = 0): DataFrame =
-    bottomK(ledger.select(col("grp"), col("doc_id"), col("weight"),
-      col("priority")).unionByName(graft.llm.Selection.prioritySamplePerGroup(
-        batchDocs, group, id, weight, k, salt)), "grp", Seq("priority", "doc_id"), k)
+    bottomK(ledger, graft.llm.Selection.priorities(batchDocs, group, id, weight, salt),
+      "grp", Seq("priority", "doc_id"), k)
 
   /** Merge one micro-batch's keys into a persistent Bloom word ledger —
-    * the ingest-time build half of [[graft.llm.Bloom.gate]] (the
-    * mergeLineLedger discipline). bit_or is associative, commutative
+    * the ingest-time build half of [[graft.llm.Bloom.gate]]: the
+    * ledger's (word, wbits) rows and the batch's single-bit rows fold
+    * in one word-keyed `bit_or`. bit_or is associative, commutative
     * AND idempotent, so batch boundaries, merge order and re-delivered
     * keys (at-least-once replay!) all leave the ledger equal to the
     * one-shot batch build bit for bit — strictly stronger than the
@@ -799,7 +770,7 @@ object Streaming {
   def mergeBloomLedger(ledger: DataFrame, batchDocs: DataFrame,
                        key: Column, bits: Int): DataFrame =
     ledger.select(col("word"), col("wbits"))
-      .unionByName(graft.llm.Bloom.wordBits(
+      .unionByName(graft.llm.Bloom.wordBitRows(
         batchDocs.select(md5(key).as("__h")), col("__h"), bits))
       .groupBy(col("word")).agg(bit_or(col("wbits")).as("wbits"))
 
@@ -818,10 +789,9 @@ object Streaming {
     * scale. */
   def mergeKmvLedger(ledger: DataFrame, batchDocs: DataFrame,
                      source: Column, content: Column, k: Int): DataFrame =
-    bottomK(ledger.select(col("src"), col("h")).unionByName(batchDocs
-      .filter(content.isNotNull && source.isNotNull)
+    bottomK(ledger, batchDocs.filter(content.isNotNull && source.isNotNull)
       .select(source.as("src"),
-        graft.functions.GraftFunctions.md5Long(content).as("h"))), "src", Seq("h"), k)
+        graft.functions.GraftFunctions.md5Long(content).as("h")), "src", Seq("h"), k)
 
   /** Merge one micro-batch's preference duels into a persistent
     * (win, lose, n) count ledger — the streaming half of
@@ -829,20 +799,15 @@ object Streaming {
     * .bradleyTerry]]: an arena ingests duels continuously, the
     * leaderboard recomputes from the ledger at constant cost. Each
     * duel lives in exactly one micro-batch, so the per-pair counts
-    * are ADDITIVE (the mergeLineLedger class — NOT redelivery-safe by
-    * construction; use the idempotent wrapper below under
-    * at-least-once delivery). State is the |items|²-bounded ordered
-    * pair table. */
-  def mergeDuelLedger(ledger: DataFrame, batchDuels: DataFrame): DataFrame =
-    sumInto(ledger, batchDuels.groupBy(col("win"), col("lose"))
-      .agg(count(lit(1)).as("n")), Seq("win", "lose"), Seq("n"))
-
-  /** Replay-proof [[mergeDuelLedger]] under the [[ledgerHighWaterMark]]
+    * are additive, replay-proof under the [[ledgerHighWaterMark]]
     * gate (sentinel win=null, lose=null, n=batchId; win/lose are
-    * non-null by construction). */
+    * non-null by construction). State is the |items|²-bounded ordered
+    * pair table. */
   def mergeDuelLedgerIdempotent(ledger: DataFrame, batchDuels: DataFrame,
                                 batchId: Long): DataFrame =
-    gated(ledger, batchId, "win", "n")(mergeDuelLedger(_, batchDuels))
+    gated(ledger, batchId, "win", "n")(sumInto(_,
+      batchDuels.select(col("win"), col("lose"), lit(1L).as("n")),
+      Seq("win", "lose"), Seq("n")))
 
   /** Win matrix off the duel ledger — against the final ledger it
     * equals the one-shot batch [[graft.llm.Preference.winMatrix]] bit
@@ -877,16 +842,16 @@ object Streaming {
     * doc is a duplicate only of a band owner VERIFIED within `maxDist`
     * hamming (the batch `simhashPairs` precision rule — an unverified
     * band collision is just a 15-bit hash coincidence); otherwise kept.
-    * Same consumption contract as [[streamingMinHashDedup]]. */
+    * An unverified claim is rewritten as self-owned, so
+    * [[claimsToVerdicts]] skips it. Same consumption contract as
+    * [[streamingMinHashDedup]]. */
   def streamingSimHashDedup(docs: DataFrame, id: Column, text: Column,
                             width: Int = 60, bands: Int = 4,
                             maxDist: Int = 3): DataFrame =
-    streamingSimHashClaims(docs, id, text, width, bands)
+    claimsToVerdicts(streamingSimHashClaims(docs, id, text, width, bands)
       .toDF("doc_id", "band_key", "owner", "dist")
-      .groupBy(col("doc_id"))
-      .agg(min(when(col("owner") =!= col("doc_id") && col("dist") <= maxDist,
-        col("owner"))).as("dup_of"))
-      .select(col("doc_id"), col("dup_of"), col("dup_of").isNull.as("kept"))
+      .withColumn("owner", when(col("dist") > maxDist, col("doc_id"))
+        .otherwise(col("owner"))))
 
   /** Per-doc dedup verdicts from band-claim rows: a doc is KEPT iff every
     * one of its bands was first claimed by itself; otherwise `dup_of` is
@@ -920,12 +885,4 @@ object Streaming {
     claimsToVerdicts(
       streamingBandClaims(docs, id, text, shingleWidth, bands, rowsPerBand)
         .toDF("doc_id", "band_key", "owner"))
-
-  /** Convenience: run a micro-batch query to completion over a bounded
-    * test source (Trigger.AvailableNow) and block. */
-  def runAvailableNow(w: DataStreamWriter[Row]): StreamingQuery = {
-    val q = w.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
 }

@@ -365,11 +365,16 @@ class StreamingSpec extends SparkSpec {
     val q = agg.writeStream.format("memory").queryName("ckpt_out")
       .option("checkpointLocation", ckpt).outputMode("complete").start()
     q.processAllAvailable(); q.stop()
-    // Spark 4 statestore reader: exact keyed state, offline
-    val state = spark.read.format("statestore").option("path", ckpt).load()
-    val rows = state.select(col("key.k"), col("value.sum"))
-      .as[(String, Long)].collect().toMap
-    assert(rows == Map("a" -> 3L, "b" -> 5L))
+    // Spark 4 statestore reader: exact keyed state, offline, keyed by the
+    // nested grouping column
+    val sv = graft.state.StateView.ofCheckpoint(spark, ckpt, "key.k", "ckpt_state")
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("key.k"), col("value.sum")).as[(String, Long)].collect().toSeq
+    assert(sums(sv.get("a")) == Seq(("a", 3L)))
+    assert(sums(sv.get("z")).isEmpty)
+    assert(sums(sv.all()).toMap == Map("a" -> 3L, "b" -> 5L))
+    assert(sums(sv.range("a", "b")) == Seq(("a", 3L), ("b", 5L)))
+    assert(sums(sv.range("b", "z")) == Seq(("b", 5L)))
   }
 
   test("a checkpoint written under 8 shuffle partitions restores at 8 under a 2-partition session") {
@@ -505,58 +510,6 @@ class StreamingSpec extends SparkSpec {
     assert(ids == Set(2L), s"only unseen content admitted: $ids")
   }
 
-  test("line-ledger in foreachBatch: merged ledger and verdicts equal the batch lineDedup") {
-    // ingest-time twin of Dedup.lineDedup: each micro-batch folds its
-    // distinct (line-hash, doc) counts into a persistent ledger; after
-    // the last batch the ledger must equal the batch lineFrequencies and
-    // re-scrubbing against it must equal the batch verdicts exactly
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = Seq(
-      (1L, "home | about\nunique one\ncopyright X"),
-      (2L, "copyright X\nhome | about\nbody two"),
-      (3L, "opening three\nhome | about\nclosing three"),
-      (4L, "home | about\nhome | about"))
-    val maxDocs = 2L
-
-    var ledger = Seq.empty[(Long, Long)].toDF("h", "n_docs")
-    val ms = MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // read-merge-swap, the parquet-table shape of a real ledger
-        ledger.synchronized {
-          ledger = Streaming.mergeLineLedger(ledger, batch,
-            col("doc_id"), col("text")).cache()
-          ledger.count() // materialize before the source frame is reused
-        }
-        ()
-      }.start()
-    // three uneven micro-batches — doc 4's within-doc repeat must count
-    // once, and the (1,2) vs (3) split puts "home | about" over maxDocs
-    // only after the LAST batch
-    ms.addData(docs.take(2)); q.processAllAvailable()
-    ms.addData(Seq(docs(2))); q.processAllAvailable()
-    ms.addData(Seq(docs(3))); q.processAllAvailable()
-    q.stop()
-
-    val all = docs.toDF("doc_id", "text")
-    val batchFreqs = graft.llm.Dedup.lineFrequencies(
-      graft.llm.Dedup.explodeLines(all, col("doc_id"), col("text")))
-      .as[(Long, Long)].collect().toSet
-    assert(ledger.as[(Long, Long)].collect().toSet == batchFreqs,
-      "streamed ledger must equal batch line frequencies")
-
-    val streamed = Streaming.lineVerdictsAgainstLedger(all, col("doc_id"),
-        col("text"), ledger, maxDocs)
-      .as[(Long, String, Long, Long)].collect().toSet
-    val batch = graft.llm.Dedup.lineDedup(all, col("doc_id"), col("text"), maxDocs)
-      .as[(Long, String, Long, Long)].collect().toSet
-    graft.llm.Dedup.releaseCaches()
-    assert(streamed == batch, s"stream=$streamed batch=$batch")
-    // and the boilerplate actually fired: doc 4 is all nav bar
-    assert(streamed.find(_._1 == 4L).get._2 == "")
-  }
-
   test("activity ledger in foreachBatch: retention equals batch; replay is a no-op (set union)") {
     // streaming half of Funnel.retention: the (user, period) ledger is
     // a distinct set union — idempotent, so unlike the count-additive
@@ -640,52 +593,6 @@ class StreamingSpec extends SparkSpec {
     assert(ledger.as[(String, Long, Long, Long)].collect().toSet == batchSample)
   }
 
-  test("kl ledger in foreachBatch: merged bucket counts and drift equal the batch monitor") {
-    // ingest-time twin of TextAnalysis.unigramKlDrift: micro-batches fold
-    // (group, bucket) token counts into a ledger (additive — each token
-    // occurrence lives in exactly one batch); drift over the final
-    // ledger must equal the one-shot batch computation bit for bit
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = Seq(
-      (1L, "alpha beta gamma delta", "steady"),
-      (2L, "alpha beta gamma epsilon", "steady"),
-      (3L, "zzz qqq xxx www", "drifted"),
-      (4L, "alpha beta zeta eta", "steady"),
-      (5L, "vvv zzz qqq uuu", "drifted"))
-
-    var ledger = Seq.empty[(String, Long, Long)].toDF("g", "b", "n_gb")
-    val ms = MemoryStream[(Long, String, String)]
-    val q = ms.toDF().toDF("doc_id", "text", "source").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ledger.synchronized {
-          ledger = Streaming.mergeKlLedger(ledger, batch,
-            col("text"), col("source")).cache()
-          ledger.count()
-        }
-        ()
-      }.start()
-    // uneven batches split the 'steady' group across all three
-    ms.addData(docs.take(2)); q.processAllAvailable()
-    ms.addData(Seq(docs(2), docs(3))); q.processAllAvailable()
-    ms.addData(Seq(docs(4))); q.processAllAvailable()
-    q.stop()
-
-    val all = docs.toDF("doc_id", "text", "source")
-    val batchCounts = graft.llm.TextAnalysis.klBucketCounts(
-      all, col("text"), col("source"))
-      .as[(String, Long, Long)].collect().toSet
-    assert(ledger.as[(String, Long, Long)].collect().toSet == batchCounts,
-      "streamed ledger must equal batch bucket counts")
-
-    val streamed = graft.llm.TextAnalysis.klFromBucketCounts(ledger)
-      .as[(String, Double)].collect().toSet
-    val batch = graft.llm.TextAnalysis.unigramKlDrift(all, col("text"),
-      col("source")).as[(String, Double)].collect().toSet
-    graft.core.Caches.release()
-    assert(streamed == batch, s"stream=$streamed batch=$batch")
-  }
-
   test("idempotent line ledger: a replayed batch is a no-op (batchId high-water mark)") {
     // at-least-once failure recovery redelivers a whole foreachBatch
     // batch with the SAME batchId; the gated merge must make that a
@@ -743,6 +650,8 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String, Long, Long)].collect().toSet
     graft.llm.Dedup.releaseCaches()
     assert(streamed == batch, s"stream=$streamed batch=$batch")
+    // and the boilerplate actually fired: doc 4 is all nav bar
+    assert(streamed.find(_._1 == 4L).get._2 == "")
   }
 
   test("idempotent kl ledger: a replayed batch is a no-op and drift matches the batch monitor") {
@@ -1335,5 +1244,152 @@ class StreamingSpec extends SparkSpec {
       assert(c.merge(ledger, c.batch(0), 0L).collect().toSet == before,
         s"${c.name}: replaying batch 0 after batch 2 must be a no-op")
     }
+  }
+
+  test("every ledger merge plans exactly one shuffle exchange") {
+    // the batch side enters each merge as rows, so the merge's one
+    // exchange also does the batch's distinct/count/top-k
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def exchanges(df: DataFrame): Int = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.collect { case e: ShuffleExchangeExec => e }.size
+    }
+    val docs = Seq(
+      (1L, "s1", "home\nbody one", 2L, 10L, 1.5, Option(Seq(1f, 2f)), "en", "de"),
+      (2L, "s2", "home\nbody two", 3L, 90000000000L, 2.0, Option.empty[Seq[Float]], "de", "fr"))
+      .toDF("doc_id", "source", "text", "w", "u", "v", "embedding", "win", "lose")
+      .withColumn("ts", timestamp_micros(col("u")))
+    val cases: Seq[(String, DataFrame, (DataFrame, Long) => DataFrame)] = Seq(
+      ("line", Seq.empty[(Long, Long)].toDF("h", "n_docs"),
+        (l, id) => Streaming.mergeLineLedgerIdempotent(l, docs, col("doc_id"), col("text"), id)),
+      ("kl", Seq.empty[(String, Long, Long)].toDF("g", "b", "n_gb"),
+        (l, id) => Streaming.mergeKlLedgerIdempotent(l, docs, col("text"), col("source"), id)),
+      ("psi", Seq.empty[(Long, Long, Long)].toDF("x", "a", "b"),
+        (l, id) => Streaming.mergePsiLedgerIdempotent(l, docs, col("w"), col("source") === "s1", id)),
+      ("quarantine", Seq.empty[(String, Long)].toDF("cat", "n"),
+        (l, id) => Streaming.mergeQuarantineLedgerIdempotent(l, docs, col("embedding"), id)),
+      ("vocab", Seq.empty[(String, Long)].toDF("tok", "n"),
+        (l, id) => Streaming.mergeVocabLedgerIdempotent(l, docs, col("text"), id)),
+      ("duel", Seq.empty[(String, String, Long)].toDF("win", "lose", "n"),
+        (l, id) => Streaming.mergeDuelLedgerIdempotent(l, docs, id)),
+      ("daily-count", Seq.empty[(String, Long, Long)].toDF("k", "day", "c"),
+        (l, id) => Streaming.mergeDailyCountLedgerIdempotent(l, docs, col("source"), col("ts"), id)),
+      ("user-value", Seq.empty[(Long, Long, Long)].toDF("u", "wk", "cw"),
+        (l, id) => Streaming.mergeUserValueLedgerIdempotent(l, docs, col("doc_id"), col("ts"), col("v"), id)),
+      ("activity", Seq.empty[(Long, Long)].toDF("user_id", "wk"),
+        (l, _) => Streaming.mergeActivityLedger(l, docs, col("doc_id"), col("ts"))),
+      ("overlap", Seq.empty[(String, String)].toDF("src", "h"),
+        (l, _) => Streaming.mergeOverlapLedger(l, docs, col("source"), col("text"))),
+      ("priority-sample", Seq.empty[(String, Long, Long, Long)].toDF("grp", "doc_id", "weight", "priority"),
+        (l, _) => Streaming.mergePrioritySampleLedger(l, docs, col("source"), col("doc_id"), col("w"), 1)),
+      ("kmv", Seq.empty[(String, Long)].toDF("src", "h"),
+        (l, _) => Streaming.mergeKmvLedger(l, docs, col("source"), col("text"), 4)),
+      ("bloom", Seq.empty[(Int, Long)].toDF("word", "wbits"),
+        (l, _) => Streaming.mergeBloomLedger(l, docs, col("text"), 1024)))
+    cases.foreach { case (name, empty, merge) =>
+      // a stored, non-empty ledger: a leaf of the plan, like a parquet read
+      val ledger = merge(empty, 0L).localCheckpoint()
+      val next = merge(ledger, 1L)
+      assert(exchanges(next) == 1, s"$name:\n${next.queryExecution.executedPlan}")
+    }
+  }
+
+  test("line merge: a NULL doc_id counts as one doc, a doc_id repeated across rows once") {
+    // lineFrequencies counts distinct (h, doc_id) pairs and keeps one
+    // NULL doc; the merge must too, and its NULL batch doc must not
+    // collapse into a ledger row that happens to hold n_docs = 1
+    import spark.implicits._
+    val b1 = Seq((Option(1L), "a\nb"), (Option(1L), "a\nd"))
+    val b2 = Seq((Option.empty[Long], "a\nc"), (Option.empty[Long], "a"), (Option(2L), "e\ne"))
+    val ledger = Seq(b1, b2).zipWithIndex.foldLeft(Seq.empty[(Long, Long)].toDF("h", "n_docs")) {
+      case (l, (b, i)) => Streaming.mergeLineLedgerIdempotent(l, b.toDF("doc_id", "text"),
+        col("doc_id"), col("text"), i.toLong).localCheckpoint()
+    }
+    val all = (b1 ++ b2).toDF("doc_id", "text")
+    val expected = graft.llm.Dedup.lineFrequencies(
+      graft.llm.Dedup.explodeLines(all, col("doc_id"), col("text")))
+      .as[(Long, Long)].collect().toSet
+    assert(ledger.filter(col("h").isNotNull).as[(Long, Long)].collect().toSet == expected)
+    assert(expected.toSeq.map(_._2).sorted == Seq(1L, 1L, 1L, 1L, 2L),
+      s"a: docs {1, NULL}; b, c, d, e: one doc each: $expected")
+  }
+
+  test("line ledger across a restart: a batch that dies after its ledger commit re-runs as a no-op") {
+    // the ledger lives in versioned parquet directories v<batchId> plus a
+    // pointer file committed by rename; the first run dies after batch 1
+    // commits its ledger but before Spark commits the batch, so the
+    // restarted query re-runs batch 1 against a ledger that already holds it
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Dataset, Row}
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val docs = Seq(
+      Seq((1L, "home | about\nunique one"), (2L, "home | about\nbody two")),
+      Seq((3L, "copyright X\nhome | about"), (4L, "home | about\nhome | about")),
+      Seq((5L, "copyright X\nclosing five")))
+    def tmp(p: String) = Files.createTempDirectory(p)
+    def drop(input: Path, i: Int): Unit = {
+      val f = Files.createTempFile("graft_ledger_doc", ".json")
+      Files.write(f, docs(i).toDF("doc_id", "text").toJSON.collect().mkString("\n").getBytes("UTF-8"))
+      Files.move(f, input.resolve(s"docs$i.json"), StandardCopyOption.ATOMIC_MOVE)
+    }
+    def load(store: Path): DataFrame = {
+      val pointer = store.resolve("current")
+      if (Files.exists(pointer)) spark.read.parquet(store.resolve(Files.readString(pointer)).toString)
+      else Seq.empty[(Long, Long)].toDF("h", "n_docs")
+    }
+    val runs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    @volatile var replayMatched = true
+    def start(input: Path, ckpt: Path, store: Path, failBatch: Long) =
+      spark.readStream.schema("doc_id LONG, text STRING").option("maxFilesPerTrigger", "1")
+        .json(input.toString).writeStream.option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          val attempt = runs.merge(batchId, 1, _ + _)
+          val merged = Streaming.mergeLineLedgerIdempotent(load(store), batch,
+            col("doc_id"), col("text"), batchId)
+          val version = store.resolve(s"v$batchId")
+          if (Files.exists(version)) {
+            // a committed version is immutable: the replay must reproduce it
+            val stored = spark.read.parquet(version.toString)
+            replayMatched &&= merged.exceptAll(stored).isEmpty && stored.exceptAll(merged).isEmpty
+          } else {
+            merged.write.parquet(version.toString)
+            val next = Files.writeString(store.resolve("current.tmp"), s"v$batchId")
+            Files.move(next, store.resolve("current"), StandardCopyOption.ATOMIC_MOVE,
+              StandardCopyOption.REPLACE_EXISTING)
+          }
+          if (batchId == failBatch && attempt == 1) throw new IllegalStateException("injected crash")
+        }.start()
+
+    val (input, ckpt, store) = (tmp("graft_ledger_in"), tmp("graft_ledger_ckpt"), tmp("graft_ledger_store"))
+    val first = start(input, ckpt, store, failBatch = 1L)
+    drop(input, 0); first.processAllAvailable()
+    drop(input, 1)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](first.processAllAvailable())
+    assert(Files.readString(store.resolve("current")) == "v1", "batch 1 committed its ledger")
+    val restarted = start(input, ckpt, store, failBatch = 1L)
+    restarted.processAllAvailable()
+    drop(input, 2); restarted.processAllAvailable()
+    restarted.stop()
+    assert(runs.get(1L) == 2, s"batch 1 must run twice: $runs")
+    assert(replayMatched, "the re-run batch 1 must reproduce the committed v1")
+    val recovered = load(store).as[(Option[Long], Long)].collect().toSet
+
+    runs.clear()
+    val (input2, ckpt2, store2) = (tmp("graft_ledger_in2"), tmp("graft_ledger_ckpt2"), tmp("graft_ledger_store2"))
+    val straight = start(input2, ckpt2, store2, failBatch = -1L)
+    docs.indices.foreach { i => drop(input2, i); straight.processAllAvailable() }
+    straight.stop()
+    assert(recovered == load(store2).as[(Option[Long], Long)].collect().toSet,
+      "the restarted ledger must equal an uninterrupted run")
+    val expected = graft.llm.Dedup.lineFrequencies(graft.llm.Dedup.explodeLines(
+      docs.flatten.toDF("doc_id", "text"), col("doc_id"), col("text")))
+      .as[(Long, Long)].collect().map { case (h, n) => (Option(h), n) }.toSet
+    assert(recovered == expected + ((None, 2L)), "ledger = lineFrequencies plus the batch-2 sentinel")
   }
 }
