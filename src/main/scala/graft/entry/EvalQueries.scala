@@ -39,13 +39,10 @@ object EvalQueries {
   val queries: Map[String, Q] = Map(
     // NDCG@10 / MRR / hits@10 of the SQ8 quantized retriever against
     // exact-cosine graded relevance, per 1-in-8 panel query — the
-    // ORDER-quality eval beside q_ann_sq8_recall's set-quality floor
-    // spreadToCores: embeddings scans as one split, and the per-pair
-    // double scoring would otherwise run single-task (qualityRules
-    // lesson; no-op at lake scale)
+    // ORDER-quality eval beside q_ann_sq8_recall's set-quality floor;
+    // a small corpus scores in one task, a large one spreads to the cores
     "q_rank_eval" -> ((s, d) =>
-      Similarity.rankingMetrics(
-        graft.core.Xform.spreadToCores(Tables.embeddings(s, d)),
+      Similarity.rankingMetrics(Tables.embeddings(s, d),
         col("vec_id"), col("embedding"), sqStats(s, d), RankK, RankMod)),
 
     // diagonal-Mahalanobis embedding outliers from the dimStats

@@ -42,7 +42,19 @@ import scala.reflect.runtime.universe.TypeTag
   * hundred MB; each kernel takes it as `smallGraphThreshold` so tests
   * pin both branches (0 forces the cluster branch). Each body mirrors
   * its cluster branch's dedup and arithmetic, so both regimes and the
-  * SQL oracles agree bit-for-bit. */
+  * SQL oracles agree bit-for-bit.
+  *
+  * Two non-graph kernels reuse [[isSmall]] and [[integral]] for their
+  * own one-task bodies over a `coalesce(1)` scan, each under its own
+  * bound rather than [[MaxInputBytes]]:
+  * [[graft.llm.Dedup.jaccardJoinPrefix]] (in-task PPJoin, bounded by
+  * `Dedup.SmallJoinMaxBytes`) and [[graft.llm.Similarity.rankingMetrics]]
+  * (bounded by `Similarity.SmallRankMaxBytes`). Both bounds are the
+  * largest input at which the one task was timed against the cluster
+  * branch. The ranking kernel's work is quadratic: every panel query
+  * scores every candidate, queries × candidates × dim in one task,
+  * so a byte bound fixes that work only for a given dim and query
+  * rate. */
 object SmallGraph {
 
   /** Default bound on the summed input-leaf bytes of the small regime
@@ -50,9 +62,11 @@ object SmallGraph {
   val MaxInputBytes = 67108864L
 
   /** Whether `input`'s summed input-leaf size is within `threshold`
-    * bytes (plan statistics only, no job). */
+    * bytes (plan statistics only, no job). A threshold of 0 is never
+    * met, so it forces the cluster branch even for an empty local
+    * relation, whose leaf reports 0 bytes. */
   def isSmall(input: DataFrame, threshold: Long): Boolean =
-    input.queryExecution.optimizedPlan.collectLeaves()
+    threshold > 0 && input.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum <= BigInt(threshold)
 
   /** Whether every column of `keys` is integral, the key types the

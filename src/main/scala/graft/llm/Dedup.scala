@@ -303,6 +303,15 @@ object Dedup {
     }.reduce(_ unionByName _)
   }
 
+  /** Default input-leaf bound of [[jaccardJoinPrefix]]'s single-task
+    * regime (2 MiB), at most the largest input at which the one task
+    * was timed against the cluster branch. On `tools/gen_sf1.py`
+    * replicas of sf0.1 at θ = 2/5, `local[4]`, 4 shuffle partitions,
+    * one task / cluster: 2.2 / 11.0 s at 1.17 MB of documents and
+    * 6.5 / 27.2 s at 2.32 MB, with the same rows. Above the bound the
+    * cluster branch runs until a larger input is timed. */
+  val SmallJoinMaxBytes: Long = 2L << 20
+
   /** EXACT Jaccard similarity self-join via prefix filtering (Chaudhuri
     * et al. ICDE'06; Xiao et al. WWW'08 "PPJoin") — the zero-false-
     * negative complement of [[nearDupPairs]]: LSH banding trades recall
@@ -326,21 +335,51 @@ object Dedup {
     * verify; prefix postings shrink with θ (θ=0.8 keeps ~20% of
     * postings). Verification joins the bounded candidate set back to
     * the full shingle arrays — the [[nearDupPairs]] verify pattern.
+    *
+    * A small input with an integral id (the [[SmallGraph]] regime test
+    * against `smallInputThreshold`, default [[SmallJoinMaxBytes]]; 0
+    * forces the cluster branch above)
+    * runs the same prefix filter in ONE task over the codegen'd shingle
+    * projection: one job, no exchange (see [[smallJaccardJoin]]).
+    *
+    * A NULL id, NULL text or a text shorter than `shingleWidth` tokens
+    * is in no pair. Ids are expected unique. A duplicated non-null id
+    * pairs with no copy of itself, and both branches then filter
+    * candidates per id over the merged multiset of its copies' tokens
+    * (the per-doc windows) but verify and emit each pair of copies
+    * apart, so they agree; that merged filter is not complete for the
+    * copies, so some of their pairs with J ≥ n/m may be missed.
     * Emits (doc_a, doc_b, inter, union_sz) for pairs with J ≥ n/m. */
   def jaccardJoinPrefix(df: DataFrame, id: Column, text: Column,
                         thetaNum: Int, thetaDen: Int,
-                        shingleWidth: Int = 3): DataFrame = {
+                        shingleWidth: Int = 3,
+                        smallInputThreshold: Long = SmallJoinMaxBytes): DataFrame = {
     require(thetaNum > 0 && thetaDen >= thetaNum,
       s"threshold $thetaNum/$thetaDen must sit in (0, 1]")
     val (n, m) = (thetaNum.toLong, thetaDen.toLong)
+    def shingled(in: DataFrame) = in.select(id.as("doc_id"),
+      array_distinct(graft.functions.ShingleHashes(tokens(text),
+        shingleWidth)).as("sh"))
+    val ids = df.select(id)
+    if (SmallGraph.isSmall(df, smallInputThreshold) && SmallGraph.integral(ids)) {
+      val session = df.sparkSession
+      import session.implicits._
+      val idType = ids.schema.head.dataType
+      return shingled(df)
+        .select(col("doc_id").cast("long"), col("sh"))
+        .filter(size(col("sh")) > 0)
+        .as[(Option[Long], Array[Long])]
+        .coalesce(1)
+        .mapPartitions(smallJaccardJoin(_, n, m))
+        .toDF("doc_a", "doc_b", "inter", "union_sz")
+        .withColumn("doc_a", col("doc_a").cast(idType))
+        .withColumn("doc_b", col("doc_b").cast(idType))
+    }
     import org.apache.spark.sql.expressions.Window
     // spread BEFORE the shingle explode: a single-split source would
     // otherwise run the whole tokenize+shingle projection in one task
     // (the qualityRules lesson); no-op at lake scale where scans split
-    val withSh = persistTracked(graft.core.Xform.spreadToCores(df)
-      .select(id.as("doc_id"),
-        array_distinct(graft.functions.ShingleHashes(tokens(text),
-          shingleWidth)).as("sh")))
+    val withSh = persistTracked(shingled(graft.core.Xform.spreadToCores(df)))
     val posts = withSh.select(col("doc_id"), explode(col("sh")).as("tok"))
     // df via hash aggregate + join-back: A/B-measured 2.9 s vs 13.5 s
     // for the window-over-token form — shingle vocab is explode-sized
@@ -387,6 +426,141 @@ object Dedup {
         size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long").as("inter"),
         size(array_union(col("sa.sh"), col("sb.sh"))).cast("long").as("union_sz"))
       .filter(col("inter") * (m + n) >= (col("inter") + col("union_sz")) * n)
+  }
+
+  /** The small-input regime of [[jaccardJoinPrefix]]: PPJoin in one
+    * task over (doc_id, distinct shingle hashes) rows with non-empty
+    * sets. Hashes intern to dense ints and renumber by (df asc, hash
+    * asc), df counting every row as the cluster branch's postings do
+    * (NULL ids included), so each row becomes an ascending int array
+    * under the global order. Rows group by id: one record per id, the
+    * merged multiset of its copies (the row itself when the id is
+    * unique). Records are probed in ascending size against an index of
+    * the prefixes p = s − ⌈n·s/m⌉ + 1 of the records before them, which
+    * are no larger, under the cluster branch's size gate
+    * (n·s_x ≤ m·s_y) and positional bound (the first prefix match
+    * bounds the overlap by 1 + min of the remaining lengths).
+    * Survivors verify copy by copy with a sorted merge under the same
+    * integer predicate. Work is the prefix postings' pair count plus
+    * the merges: never Σ df², which a full overlap count pays on
+    * common shingles. */
+  private def smallJaccardJoin(docs: Iterator[(Option[Long], Array[Long])], n: Long,
+                               m: Long): Iterator[(Long, Long, Long, Long)] = {
+    val hashes = new graft.core.LongIndex()
+    val rowIds = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
+    val sets = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
+    var dfc = new Array[Int](1 << 12)
+    docs.foreach { case (d, sh) =>
+      val s = sh.map { h =>
+        val t = hashes.intern(h)
+        if (t == dfc.length) dfc = java.util.Arrays.copyOf(dfc, t << 1)
+        dfc(t) += 1
+        t
+      }
+      rowIds += d; sets += s
+    }
+    // rank tokens by (df asc, hash asc): counting sort on df, then the
+    // hashes of each df run ascending
+    val nt = hashes.size
+    val maxDf = if (nt == 0) 0 else dfc.iterator.take(nt).max
+    val start = new Array[Int](maxDf + 2)
+    var t = 0
+    while (t < nt) { start(dfc(t) + 1) += 1; t += 1 }
+    var f = 0
+    while (f <= maxDf) { start(f + 1) += start(f); f += 1 }
+    val sorted = new Array[Long](nt)
+    val fill = start.clone()
+    t = 0
+    while (t < nt) { sorted(fill(dfc(t))) = hashes.id(t); fill(dfc(t)) += 1; t += 1 }
+    f = 0
+    while (f <= maxDf) { java.util.Arrays.sort(sorted, start(f), start(f + 1)); f += 1 }
+    val rank = new Array[Int](nt)
+    var r = 0
+    while (r < nt) { rank(hashes.intern(sorted(r))) = r; r += 1 }
+    // one record per non-NULL id: its copies' ranked sets, and their
+    // merged multiset for the candidate filter
+    val live = rowIds.indices.filter(rowIds(_).isDefined).sortBy(rowIds(_).get)
+    val runs = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Int]]
+    live.indices.foreach { i =>
+      if (i == 0 || rowIds(live(i)) != rowIds(live(i - 1))) runs += IndexedSeq(live(i))
+      else runs(runs.length - 1) :+= live(i)
+    }
+    val nd = runs.length
+    val ids = runs.map(g => rowIds(g.head).get).toArray
+    val copies = runs.map(_.map { x =>
+      val s = sets(x).map(rank); java.util.Arrays.sort(s); s
+    }.toArray).toArray
+    val recs = copies.map { c =>
+      if (c.length == 1) c(0) else { val a = c.flatten; java.util.Arrays.sort(a); a }
+    }
+    def prefix(s: Int): Int = (s - (n * s + m - 1) / m + 1).toInt
+    // records by ascending size; prefix postings (record, position) per
+    // token in that order, so each list is size-ascending
+    val order = Array.range(0, nd).sortBy(recs(_).length)
+    val pOff = new Array[Int](nt + 1)
+    order.foreach { x =>
+      var i = 0
+      while (i < prefix(recs(x).length)) { pOff(recs(x)(i) + 1) += 1; i += 1 }
+    }
+    t = 0
+    while (t < nt) { pOff(t + 1) += pOff(t); t += 1 }
+    val pDoc = new Array[Int](pOff(nt)); val pPos = new Array[Int](pOff(nt))
+    val pFill = pOff.clone()
+    val seq = new Array[Int](nd) // record → its place in `order`
+    var o = 0
+    while (o < nd) {
+      val x = order(o); seq(x) = o
+      var i = 0
+      while (i < prefix(recs(x).length)) {
+        val tok = recs(x)(i)
+        pDoc(pFill(tok)) = x; pPos(pFill(tok)) = i; pFill(tok) += 1
+        i += 1
+      }
+      o += 1
+    }
+    def overlap(a: Array[Int], b: Array[Int]): Long = {
+      var i = 0; var j = 0; var inter = 0L
+      while (i < a.length && j < b.length) {
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else { inter += 1; i += 1; j += 1 }
+      }
+      inter
+    }
+    // per-token cursor past postings too small for every later probe
+    val lo = pOff.clone()
+    val seen = Array.fill(nd)(-1)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    o = 0
+    while (o < nd) {
+      val x = order(o); val rx = recs(x); val sx = rx.length.toLong
+      var i = 0
+      while (i < prefix(rx.length)) {
+        val tok = rx(i)
+        while (lo(tok) < pOff(tok + 1) && n * sx > m * recs(pDoc(lo(tok))).length)
+          lo(tok) += 1
+        var e = lo(tok)
+        while (e < pOff(tok + 1) && seq(pDoc(e)) < o) {
+          val y = pDoc(e)
+          if (seen(y) != o) {
+            seen(y) = o
+            val sy = recs(y).length.toLong
+            val ub = 1L + math.min(sx - i - 1, sy - pPos(e) - 1)
+            if (ub * (m + n) >= (sx + sy) * n)
+              for (a <- copies(x); b <- copies(y)) {
+                val inter = overlap(a, b)
+                if (inter * (m + n) >= (a.length + b.length).toLong * n)
+                  out += ((math.min(ids(x), ids(y)), math.max(ids(x), ids(y)),
+                    inter, a.length + b.length - inter))
+              }
+          }
+          e += 1
+        }
+        i += 1
+      }
+      o += 1
+    }
+    out.iterator
   }
 
   /** Exact CONTAINMENT self-join: pairs (a, b) with

@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.functions.CosineSimilarity
 import graft.functions.GraftFunctions._
+import graft.graph.SmallGraph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1004,6 +1005,16 @@ object Similarity {
   def ndcgDiscounts(k: Int): Array[Double] =
     (1 to k).map(r => 1.0 / (math.log(r + 1.0) / math.log(2.0))).toArray
 
+  /** Default input-leaf bound of [[rankingMetrics]]' single-task
+    * regime (2 MiB), at most the largest input at which the one task
+    * was timed against the cluster branch. On `tools/gen_sf1.py`
+    * replicas of sf0.1 (64-dim, 1-in-20 panel, k = 10), `local[4]`,
+    * 4 shuffle partitions, one task / cluster: 1.2 / 5.9 s at 1.05 MB
+    * of embeddings and 1.8 / 17.1 s at 2.10 MB, with the same rows.
+    * The work is quadratic in the rows, so at one byte size it grows
+    * as dim shrinks or the panel rate rises. */
+  val SmallRankMaxBytes: Long = 2L << 20
+
   /** Ranking-quality evaluation of the SQ8 quantized retriever against
     * exact-cosine relevance: NDCG@k, MRR and hits@k per panel query —
     * the eval harness that closes the ANN family's loop ("recall says
@@ -1020,13 +1031,28 @@ object Similarity {
     * the two integer sums once. MRR = 1/first-relevant-system-rank
     * (over the full ranking, so it always exists).
     *
-    * Shape: the corpus crossJoins a BROADCAST 1-in-`queryMod` panel
-    * (the hubness audit shape — run it on the probe sample at lake
-    * scale), two window sorts on the same query partitioning, one
-    * ≤panel-key agg. */
+    * Shape: a small input with an integral id (the [[SmallGraph]]
+    * regime test against `smallInputThreshold`, default
+    * [[SmallRankMaxBytes]]; 0 forces the cluster branch) scores every
+    * (query, candidate) pair in ONE task: one job, no exchange (see
+    * [[smallRanking]]). Above the bound the
+    * corpus spreads to the cores and crossJoins a BROADCAST
+    * 1-in-`queryMod` panel (the hubness audit shape — run it on the
+    * probe sample at lake scale), two window sorts on the same query
+    * partitioning, one ≤panel-key agg.
+    *
+    * NULLs: a NULL id is never a query nor a candidate; a NULL vector
+    * scores NULL `cos` (ranked last) and, as a query, NULL `sqq`. Ids
+    * are expected unique. With a duplicated non-null id neither copy
+    * is the other's candidate, and a duplicated query id emits one row
+    * in both branches, its copies' candidates ranked together. Entries
+    * tied on both score and vec_id (possible only with duplicated ids)
+    * have no defined order: the cluster branch's window may order them
+    * either way, the one task keeps input order. */
   def rankingMetrics(df: DataFrame, id: Column, vec: Column,
                      stats: Seq[(Int, Double, Double)], k: Int,
-                     queryMod: Long): DataFrame = {
+                     queryMod: Long,
+                     smallInputThreshold: Long = SmallRankMaxBytes): DataFrame = {
     val mn = lit(stats.map(_._2).toArray)
     val mx = lit(stats.map(_._3).toArray)
     val disc = lit(ndcgDiscounts(k))
@@ -1045,7 +1071,15 @@ object Similarity {
             floor((x - mnd) / (mxd - mnd) * lit(256.0)).cast("long"))))
         mnd + (c.cast("double") + lit(0.5)) * (mxd - mnd) / lit(256.0)
       })
-    val v = df.select(id.as("vec_id"), vec.as("v"))
+    val ids = df.select(id)
+    if (SmallGraph.isSmall(df, smallInputThreshold) && SmallGraph.integral(ids))
+      return smallRanking(df.select(id.cast("long").as("vec_id"), vec.as("v"))
+          .filter(col("vec_id").isNotNull).withColumn("recon", recon),
+          k, queryMod)
+        .withColumn("query_id", col("query_id").cast(ids.schema.head.dataType))
+    // spread: embeddings scan as one split, and the per-pair double
+    // scoring would otherwise run single-task (no-op at lake scale)
+    val v = graft.core.Xform.spreadToCores(df).select(id.as("vec_id"), vec.as("v"))
       .withColumn("recon", recon)
     val sqq = aggregate(
       sequence(lit(0), size(col("recon")) - 1),
@@ -1088,6 +1122,181 @@ object Similarity {
             col("idcg_q").cast("double")).as("ndcg"),
         (lit(1.0) / col("first_rel").cast("double")).as("mrr"),
         col("hits").as("hits_at_k"))
+  }
+
+  /** One row of [[rankingMetrics]]' output. */
+  final case class RankRow(query_id: Long, n_cands: Long, dcg: Double,
+                           idcg: Double, ndcg: Option[Double],
+                           mrr: Option[Double], hits_at_k: Long)
+
+  /** The small-input regime of [[rankingMetrics]]: every (query,
+    * candidate) pair of the (vec_id, v, recon) rows scored and ranked in
+    * ONE task. The rows stream once into primitive arrays. `cos` is the
+    * [[CosineSimilarity]] loop and `sqq` the fixed-point ADC sum over
+    * the candidate's plan-computed `recon`, term for term as the cluster
+    * branch evaluates them (a query NULL element makes `sqq` NULL; a
+    * query shorter than a candidate's recon fails as `element_at` does
+    * under ANSI). The copies of a duplicated query id rank their
+    * candidates together and emit one row, as the cluster branch's
+    * windows partitioned by query_id do. Ranks follow Spark's
+    * `(score DESC NULLS LAST, vec_id)` order, so only the exact top-k
+    * and their system ranks are needed: a bounded insertion keeps the
+    * top-k, and one binary search per candidate over those k in system
+    * order counts who precedes each. Work is queries × candidates × dim
+    * in one task, which [[SmallRankMaxBytes]] bounds. */
+  private def smallRanking(rows: DataFrame, k: Int, queryMod: Long): DataFrame = {
+    val session = rows.sparkSession
+    import session.implicits._
+    val ansi = session.sessionState.conf.ansiEnabled
+    val disc = ndcgDiscounts(k)
+    rows.coalesce(1).mapPartitions { it =>
+      // v as primitive floats (a NULL element reads 0, as the unsafe
+      // getFloat of CosineSimilarity does) and its first NULL position
+      val idB = Array.newBuilder[Long]; val vB = Array.newBuilder[Array[Float]]
+      val holeB = Array.newBuilder[Int]; val rcB = Array.newBuilder[Array[Double]]
+      it.foreach { r =>
+        idB += r.getLong(0)
+        var hole = Int.MaxValue
+        vB += (if (r.isNullAt(1)) null else {
+          val s = r.getSeq[Any](1)
+          val a = new Array[Float](s.length)
+          var d = 0
+          s.foreach { x =>
+            if (x == null) hole = math.min(hole, d) else a(d) = x.asInstanceOf[Float]
+            d += 1
+          }
+          a
+        })
+        holeB += hole
+        rcB += (if (r.isNullAt(2)) null else r.getSeq[Double](2).toArray)
+      }
+      val ids = idB.result(); val vs = vB.result()
+      val hole = holeB.result(); val recons = rcB.result()
+      val n = ids.length
+      // query rows grouped by id; entry e scores copy e / n of the
+      // query against candidate e % n
+      val qrows = Array.range(0, n).filter(ids(_) % queryMod == 0L).sortBy(ids(_))
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var i = 0
+      while (i <= qrows.length) {
+        if (i == 0 || i == qrows.length || ids(qrows(i)) != ids(qrows(i - 1))) runs += i
+        i += 1
+      }
+      val maxCopies = if (qrows.isEmpty) 0
+        else runs.iterator.zip(runs.iterator.drop(1)).map { case (a, b) => b - a }.max
+      val cos = new Array[Double](n * maxCopies); val cosOk = new Array[Boolean](n * maxCopies)
+      val sqq = new Array[Long](n * maxCopies); val sqqOk = new Array[Boolean](n * maxCopies)
+      // (score DESC NULLS LAST, vec_id): Spark's double order equates
+      // -0.0 with 0.0 and ranks NaN above every number
+      def exactBefore(a: Int, b: Int): Boolean =
+        if (cosOk(a) != cosOk(b)) cosOk(a)
+        else {
+          val c = if (!cosOk(a) || cos(a) == cos(b)) 0
+                  else java.lang.Double.compare(cos(a), cos(b))
+          c > 0 || (c == 0 && ids(a % n) < ids(b % n))
+        }
+      def sysBefore(a: Int, b: Int): Boolean =
+        if (sqqOk(a) != sqqOk(b)) sqqOk(a)
+        else if (sqqOk(a) && sqq(a) != sqq(b)) sqq(a) > sqq(b)
+        else ids(a % n) < ids(b % n)
+      val out = scala.collection.mutable.ArrayBuffer.empty[RankRow]
+      var g = 0
+      while (g + 1 < runs.length) {
+        val qid = ids(qrows(runs(g)))
+        val ne = (runs(g + 1) - runs(g)) * n
+        var nc = 0
+        var e = 0
+        while (e < ne) {
+          val q = qrows(runs(g) + e / n); val c = e % n
+          if (ids(c) != qid) {
+            nc += 1
+            val qv = vs(q); val v = vs(c)
+            cosOk(e) = v != null && qv != null
+            if (cosOk(e)) {
+              val len = math.min(v.length, qv.length)
+              var dot = 0.0; var na = 0.0; var nb = 0.0; var d = 0
+              while (d < len) {
+                val x = v(d).toDouble; val y = qv(d).toDouble
+                dot += x * y; na += x * x; nb += y * y; d += 1
+              }
+              val denom = math.sqrt(na) * math.sqrt(nb)
+              cos(e) = if (denom == 0.0) 0.0 else dot / denom
+            }
+            val rc = recons(c)
+            if (qv != null && rc != null && qv.length < rc.length && ansi)
+              throw new ArrayIndexOutOfBoundsException(
+                s"element_at: query $qid has ${qv.length} elements, " +
+                  s"candidate ${ids(c)}'s recon ${rc.length}")
+            sqqOk(e) = qv != null && rc != null && hole(q) >= rc.length &&
+              qv.length >= rc.length
+            if (sqqOk(e)) {
+              var acc = 0L; var d = 0
+              while (d < rc.length) {
+                acc += math.floor(qv(d).toDouble * rc(d) * 1e9).toLong; d += 1
+              }
+              sqq(e) = acc
+            }
+          }
+          e += 1
+        }
+        if (nc > 0) {
+          // exact top-k by bounded insertion, best first
+          val kk = math.max(0, math.min(k, nc))
+          val top = new Array[Int](kk)
+          var t = 0
+          e = 0
+          while (e < ne) {
+            if (ids(e % n) != qid && (t < kk || kk > 0 && exactBefore(e, top(kk - 1)))) {
+              var p = math.min(t, kk - 1)
+              while (p > 0 && exactBefore(e, top(p - 1))) { top(p) = top(p - 1); p -= 1 }
+              top(p) = e
+              if (t < kk) t += 1
+            }
+            e += 1
+          }
+          // exact ranks of the top-k in system order; an entry precedes
+          // a suffix of that order
+          val bySys = Array.range(0, kk).sortWith((x, y) => sysBefore(top(x), top(y)))
+          val from = new Array[Int](kk + 1)
+          e = 0
+          while (e < ne) {
+            if (ids(e % n) != qid) {
+              var lo = 0; var hi = kk
+              while (lo < hi) {
+                val mid = (lo + hi) >>> 1
+                if (sysBefore(e, top(bySys(mid)))) hi = mid else lo = mid + 1
+              }
+              from(lo) += 1
+            }
+            e += 1
+          }
+          var idcg = 0L; var dcg = 0L; var hits = 0L; var firstRel = Long.MaxValue
+          var r = 0
+          while (r < kk) {
+            idcg += math.floor((k - r).toDouble * disc(r) * 1.0e9).toLong
+            r += 1
+          }
+          var before = 0L
+          var j = 0
+          while (j < kk) {
+            before += from(j)
+            val sysRank = before + 1
+            val rel = k - bySys(j)
+            if (sysRank <= k) {
+              dcg += math.floor(rel.toDouble * disc(sysRank.toInt - 1) * 1.0e9).toLong
+              hits += 1
+            }
+            firstRel = math.min(firstRel, sysRank)
+            j += 1
+          }
+          out += RankRow(qid, nc, dcg / 1.0e9, idcg / 1.0e9,
+            if (idcg == 0L) None else Some(dcg.toDouble / idcg.toDouble),
+            if (kk == 0) None else Some(1.0 / firstRel.toDouble), hits)
+        }
+        g += 1
+      }
+      out.iterator
+    }.toDF()
   }
 
   /** Local Outlier Factor (Breunig et al. SIGMOD'00) over a

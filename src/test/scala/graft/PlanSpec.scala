@@ -167,8 +167,10 @@ class PlanSpec extends SparkSpec {
     // the PPJoin shape: candidates come from an equi-join on the
     // prefix token, never an all-pairs compare; the (df, tok) ordering
     // is applied per doc (window PARTITION BY doc_id), so no global
-    // rank sort exists anywhere in the plan
-    val df = SparkEntry.queries("q_jaccard_join")(spark, sf)
+    // rank sort exists anywhere in the plan. Threshold 0 forces the
+    // cluster branch so its plan stays pinned
+    val df = llm.Dedup.jaccardJoinPrefix(Tables.documents(spark, sf),
+      col("doc_id"), col("text"), 2, 5, 3, smallInputThreshold = 0L)
     val p = plan(df)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"prefix-filter join degenerated to a cross product:\n$p")
@@ -176,6 +178,15 @@ class PlanSpec extends SparkSpec {
       || p.contains("ShuffledHashJoin"), s"expected an equi-join on the prefix token:\n$p")
     assert("windowspecdefinition\\(doc_id#".r.findFirstIn(p).isDefined,
       s"token ordering must window per doc, not globally:\n$p")
+  }
+
+  test("exact jaccard join below the size threshold: one job, one task, no exchange") {
+    val df = SparkEntry.queries("q_jaccard_join")(spark, sf)
+    val p = plan(df)
+    assert(p.contains("MapPartitions") && !p.contains("Exchange") && !p.contains("Join"),
+      s"the small regime must run the prefix join in one task:\n$p")
+    val run = Bench.once(spark, sf, "q_jaccard_join", SparkEntry.queries("q_jaccard_join"))
+    assert(run.error.isEmpty && run.jobs == 1 && run.stages == 1, s"$run")
   }
 
   test("ranked multi-probe LSH plans as a joinless bucket-IN filter") {
@@ -922,12 +933,31 @@ class PlanSpec extends SparkSpec {
     graft.core.Caches.release()
   }
 
+  /** q_rank_eval's kernel over the test corpus, with its SQ8 stats
+    * trained ahead (that eager job is not the kernel's). */
+  private def rankEval(threshold: Long): (org.apache.spark.sql.SparkSession, String) => DataFrame = {
+    val emb = Tables.embeddings(spark, sf)
+    val stats = llm.Similarity.sqTrain(emb, col("embedding"))
+    (s, d) => llm.Similarity.rankingMetrics(Tables.embeddings(s, d), col("vec_id"),
+      col("embedding"), stats, 10, 20L, threshold)
+  }
+
   test("rank eval: corpus streams past the broadcast query panel (hubness shape)") {
-    val p = plan(SparkEntry.queries("q_rank_eval")(spark, sf))
+    // threshold 0 forces the cluster branch so its plan stays pinned
+    val p = plan(rankEval(0L)(spark, sf))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"the panel must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"pairing must ride the broadcast, never a cartesian:\n$p")
+  }
+
+  test("rank eval below the size threshold: one job, one task, no exchange past the stats job") {
+    val p = plan(SparkEntry.queries("q_rank_eval")(spark, sf))
+    assert(p.contains("MapPartitions") && !p.contains("Exchange") && !p.contains("Join"),
+      s"the small regime must score every pair in one task:\n$p")
+    val run = Bench.once(spark, sf, "q_rank_eval",
+      rankEval(llm.Similarity.SmallRankMaxBytes))
+    assert(run.error.isEmpty && run.jobs == 1 && run.stages == 1, s"$run")
   }
 
   test("mask ngrams: frequent-slice equi-join, no pair joins anywhere") {

@@ -192,8 +192,6 @@ class PropertiesSpec extends SparkSpec {
       val docs = (0 until 12).map(j => (j.toLong, sample(docGen, 9000 + 31 * i + j)))
       val df = docs.toDF("doc_id", "text")
       val (tn, td) = thetas(i % thetas.length)
-      val pref = Dedup.jaccardJoinPrefix(df, col("doc_id"), col("text"), tn, td, 2)
-        .as[(Long, Long, Long, Long)].collect().toSet
       val withSh = df.select(col("doc_id"),
         array_distinct(GraftFunctions.shingles(col("text"), 2)).as("sh"))
         .filter(size(col("sh")) > 0)
@@ -204,7 +202,13 @@ class PropertiesSpec extends SparkSpec {
           size(array_union(col("a.sh"), col("b.sh"))).cast("long").as("u"))
         .filter(col("i") * (td + tn) >= (col("i") + col("u")) * tn)
         .as[(Long, Long, Long, Long)].collect().toSet
-      assert(pref == naive, s"case $i θ=$tn/$td: pref=$pref naive=$naive docs=$docs")
+      // both regimes: the single-task default and the cluster branch
+      for (threshold <- Seq(graft.llm.Dedup.SmallJoinMaxBytes, 0L)) {
+        val pref = Dedup.jaccardJoinPrefix(df, col("doc_id"), col("text"), tn, td, 2,
+          threshold).as[(Long, Long, Long, Long)].collect().toSet
+        assert(pref == naive,
+          s"case $i θ=$tn/$td threshold=$threshold: pref=$pref naive=$naive docs=$docs")
+      }
     }
   }
 

@@ -151,6 +151,27 @@ class AnalyticsSpec extends SparkSpec {
     assert(at23.isEmpty)
   }
 
+  test("jaccardJoinPrefix: the single-task regime equals the cluster branch row for row on edge rows") {
+    // a NULL id, a NULL text, texts shorter than w = 3 tokens, exact
+    // duplicates (J = 1), pairs either side of θ = 2/5, and ids 11 and
+    // 12 twice with a different text per copy
+    val rows: Seq[(java.lang.Long, String)] = Seq(
+      (1L, "a b c d e f"), (2L, "a b c d e x"), (3L, "a b c d e f"),
+      (null, "a b c d e f"), (4L, null), (5L, "a b"), (6L, ""), (7L, "a b c"),
+      (8L, "c d e f g h i"), (9L, "p q r s t u"), (10L, "p q r s t v w"),
+      (11L, "a b c d e f"), (11L, "a b c d e g h"), (12L, "x y z a b c d"),
+      (12L, "a b c d e f g"), (13L, "x y z a b c"))
+    val docs = rows.toDF("doc_id", "text")
+    def run(frame: org.apache.spark.sql.DataFrame, threshold: Long) =
+      Dedup.jaccardJoinPrefix(frame, col("doc_id"), col("text"), 2, 5, 3, threshold)
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    val small = run(docs, Dedup.SmallJoinMaxBytes)
+    assert(small.exists(_._1 == 11L) && small.exists(_._2 == 13L))
+    assert(small == run(docs, 0L))
+    val empty = docs.filter(col("doc_id") > 100L)
+    assert(run(empty, Dedup.SmallJoinMaxBytes).isEmpty && run(empty, 0L).isEmpty)
+  }
+
   test("jaccardJoinPrefix recall 1: matches the naive all-pairs join on a shared-vocab corpus") {
     // overlapping sliding windows of one token stream — adjacent docs
     // share most shingles, distant docs share few: pairs at every J

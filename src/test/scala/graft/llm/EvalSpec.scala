@@ -94,15 +94,66 @@ class EvalSpec extends SparkSpec {
     // query 0 only: a mid-corpus query would have two EQUIDISTANT
     // neighbors (±0.12 rad) whose exact-cosine tie breaks by id while
     // ADC may order them oppositely — a legitimate ndcg < 1
-    val out = Similarity.rankingMetrics(df, col("id"), col("v"), stats,
-      k = 5, queryMod = 100L).collect().map(r => r.getLong(0) -> r).toMap
-    assert(out.keySet == Set(0L))
-    val r = out(0L)
-    assert(r.getLong(1) == 11L)          // n_cands = 12 - 1
-    assert(r.getDouble(4) == 1.0, "ndcg") // perfect order
-    assert(r.getDouble(5) == 1.0, "mrr")
-    assert(r.getLong(6) == 5L)           // all top-5 relevant
-    assert(r.getDouble(2) == r.getDouble(3)) // dcg = idcg
+    // both regimes: the single-task default and the cluster branch
+    for (threshold <- Seq(Similarity.SmallRankMaxBytes, 0L)) {
+      val out = Similarity.rankingMetrics(df, col("id"), col("v"), stats,
+        k = 5, queryMod = 100L, threshold).collect().map(r => r.getLong(0) -> r).toMap
+      assert(out.keySet == Set(0L))
+      val r = out(0L)
+      assert(r.getLong(1) == 11L)          // n_cands = 12 - 1
+      assert(r.getDouble(4) == 1.0, "ndcg") // perfect order
+      assert(r.getDouble(5) == 1.0, "mrr")
+      assert(r.getLong(6) == 5L)           // all top-5 relevant
+      assert(r.getDouble(2) == r.getDouble(3)) // dcg = idcg
+    }
+  }
+
+  test("rankingMetrics: the single-task regime equals the cluster branch row for row on edge rows") {
+    // 16-dim corpus: a NULL id, a NULL vector (a candidate, and a query
+    // at id 9), the zero vector, an 8-dim candidate, and exact ties in
+    // cos and sqq (ids 4/5/6 share one vector; 10 and 11 are parallel)
+    def vec(seed: Int): Array[Float] = Array.tabulate(16)(d => ((seed * 7 + d * 3) % 11 - 5) / 5f)
+    val rows: Seq[(java.lang.Long, Array[Float])] = Seq(
+      (0L, vec(1)), (1L, vec(2)), (2L, vec(3)), (null, vec(4)), (3L, null),
+      (4L, vec(5)), (5L, vec(5)), (6L, vec(5)), (7L, new Array[Float](16)),
+      (8L, vec(6).take(8)), (9L, null), (10L, vec(7)), (11L, vec(7).map(_ * 2)),
+      (12L, vec(8)), (13L, vec(9)), (14L, vec(10)), (15L, vec(1)))
+    val df = rows.toDF("id", "v")
+    val stats = Similarity.sqTrain(df, col("v"))
+    def run(frame: org.apache.spark.sql.DataFrame, k: Int, mod: Long, threshold: Long) =
+      Similarity.rankingMetrics(frame, col("id"), col("v"), stats, k, mod, threshold)
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    for ((k, mod) <- Seq((3, 3L), (5, 5L), (20, 7L), (0, 3L))) {
+      val small = run(df, k, mod, Similarity.SmallRankMaxBytes)
+      val cluster = run(df, k, mod, 0L)
+      assert(small.nonEmpty && small == cluster, s"k=$k mod=$mod\n$small\n$cluster")
+    }
+    val empty = df.filter(col("id") > 100L)
+    assert(run(empty, 3, 3L, Similarity.SmallRankMaxBytes).isEmpty &&
+      run(empty, 3, 3L, 0L).isEmpty)
+    // the 8-dim vector as a QUERY reads past its end against 16-dim
+    // candidates: both branches fail as ANSI element_at does
+    for (threshold <- Seq(Similarity.SmallRankMaxBytes, 0L))
+      intercept[Exception](run(df, 3, 8L, threshold))
+  }
+
+  test("rankingMetrics: with duplicated ids the single-task regime equals the cluster branch") {
+    // query id 0 and candidate id 7 twice, each copy its own vector: the
+    // copies of a query rank their candidates together in one row
+    val rnd = new scala.util.Random(7)
+    val rows: Seq[(Long, Array[Float])] =
+      (Seq(0L, 0L, 7L, 7L) ++ (1L to 14L)).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+    val df = rows.toDF("id", "v")
+    val stats = Similarity.sqTrain(df, col("v"))
+    def run(k: Int, threshold: Long) =
+      Similarity.rankingMetrics(df, col("id"), col("v"), stats, k, 5L, threshold)
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    for (k <- Seq(3, 10)) {
+      val small = run(k, Similarity.SmallRankMaxBytes)
+      assert(small.map(_.head) == Seq(0L, 5L, 10L), small)
+      assert(small.head(1) == 32L) // n_cands: 2 copies × 16 other rows
+      assert(small == run(k, 0L), s"k=$k")
+    }
   }
 
   test("pcaPower recovers a planted dominant direction with ~all variance explained") {
