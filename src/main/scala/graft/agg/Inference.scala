@@ -1,8 +1,13 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.graph.SmallGraph
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Two-sample / k-sample inference tests — the "is this slice actually
   * different?" layer on top of the drift monitors in [[RobustStats]]:
@@ -450,7 +455,13 @@ object Inference {
     val s = df.filter(y.isNotNull && x1.isNotNull && x2.isNotNull)
       .select(y.cast("long").as("y"), x1.cast("long").as("a"),
         x2.cast("long").as("b"))
-    val g = s.agg(count(lit(1)).as("n"),
+    ols2Solve(ols2Sums(s))
+  }
+
+  /** [[ols2]]'s ten power sums over (y, a, b) LONG rows, in one row:
+    * (n, sa, sb, sy, saa, sab, sbb, say, sby, syy). */
+  private def ols2Sums(s: DataFrame): DataFrame =
+    s.agg(count(lit(1)).as("n"),
       sum(col("a")).as("sa"), sum(col("b")).as("sb"),
       sum(col("y").cast("decimal(38,0)")).as("sy"),
       sum((col("a") * col("a")).cast("decimal(38,0)")).as("saa"),
@@ -459,6 +470,10 @@ object Inference {
       sum((col("a") * col("y")).cast("decimal(38,0)")).as("say"),
       sum((col("b") * col("y")).cast("decimal(38,0)")).as("sby"),
       sum((col("y") * col("y")).cast("decimal(38,0)")).as("syy"))
+
+  /** [[ols2]]'s Cramer solve over a frame of [[ols2Sums]] rows:
+    * (n, b0, b1, b2, r2). */
+  private def ols2Solve(g: DataFrame): DataFrame = {
     def d(c: String): Column = col(c).cast("double")
     val n = d("n"); val sa = d("sa"); val sb = d("sb"); val sy = d("sy")
     val saa = d("saa"); val sab = d("sab"); val sbb = d("sbb")
@@ -521,11 +536,38 @@ object Inference {
     * depends on the β the first pass produces, and no fixed set of
     * (y, x) moments determines the post-hoc residual histogram.
     * Fusing would require materializing the per-row projection
-    * (a corpus persist — the scale-killer the r16 fold removed). */
+    * (a corpus persist — the scale-killer the r16 fold removed).
+    *
+    * NULL rules: a row with a NULL y, x1, x2 or inTrain is in no slice;
+    * a NULL inCalib reads as a TEST row. Special rows: no usable fit
+    * (fewer than 3 train rows, det = 0) gives (n_train, 0, 0, NULL,
+    * NULL); no non-train rows gives (n_train, NULL, NULL, NULL, NULL).
+    * LONG sums and products overflow as ANSI Spark does (an error
+    * under ANSI).
+    *
+    * Regime: a small input (the [[graft.graph.SmallGraph]] regime test
+    * against `smallInputThreshold`, default
+    * [[graft.graph.SmallGraph.MaxInputBytes]]; 0 forces the cluster
+    * branch) runs both passes in ONE task over the scan, lazily: one
+    * job, no exchange, no construction-time job (see
+    * [[smallConformal]]). The one task was timed against the cluster
+    * branch past that bound: on `tools/gen_sf1.py` replicas of sf0.1's
+    * lineitem, `local[4]`, one task / cluster, 2 warm runs each:
+    * 0.63-0.69 / 1.6-2.1 s at 10.3 MiB, 1.1-1.2 / 2.0-2.8 s at
+    * 62.3 MiB and 1.2-1.3 / 1.8-2.9 s at 80.4 MiB. Above the bound the
+    * fit and the DriverFold counts probe are two EAGER jobs at
+    * construction. */
   def conformalInterval(df: DataFrame, y: Column, x1: Column, x2: Column,
                         inTrain: Column, inCalib: Column,
-                        covNum: Int = 9, covDen: Int = 10): DataFrame = {
+                        covNum: Int = 9, covDen: Int = 10,
+                        smallInputThreshold: Long = SmallGraph.MaxInputBytes): DataFrame = {
     val spark = df.sparkSession
+    if (SmallGraph.isSmall(df, smallInputThreshold))
+      return smallConformal(df
+        .filter(y.isNotNull && x1.isNotNull && x2.isNotNull && inTrain.isNotNull)
+        .select(y.cast("long").as("y"), x1.cast("long").as("a"),
+          x2.cast("long").as("b"), inTrain.as("train"),
+          coalesce(inCalib, lit(false)).as("cal")), covNum, covDen)
     val fit = ols2(df.filter(inTrain), y, x1, x2).collect().head
     val nTrain = fit.getLong(0)
     val s = df
@@ -563,45 +605,13 @@ object Inference {
     // (calib-only cumulate window + coverage re-scan) runs instead,
     // bit-identically. EAGER under the cap (fit job + counts job at
     // construction time).
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val countsDf = scored.groupBy(col("cal"), col("rq"))
       .agg(count(lit(1)).as("c"))
     graft.core.DriverFold.collectBounded(countsDf) match {
       case Some(collected) =>
-        val counts = collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val schema = StructType(Seq(
-          StructField("n_train", LongType), StructField("n_calib", LongType),
-          StructField("n_test", LongType), StructField("qhat", DoubleType),
-          StructField("coverage", DoubleType)))
-        val row = if (counts.isEmpty) {
-          // no non-train rows at all: the old agg-over-empty emitted NULLs
-          Row(nTrain, null, null, null, null)
-        } else {
-          val calib = counts.filter(_._1 == 1L).sortBy(_._2)
-          val nCalibOrNull: Any = if (calib.isEmpty) null
-            else calib.iterator.map(_._3).sum
-          val qhatQ: Option[Long] = nCalibOrNull match {
-            case null => None
-            case nc: Long =>
-              val xp = (nc + 1L) * covNum.toLong + (covDen.toLong - 1L)
-              val kScaled = math.min(xp - xp % covDen.toLong, nc * covDen.toLong)
-              var cum = 0L
-              calib.collectFirst {
-                case (_, rq, c) if { cum += c; cum * covDen.toLong >= kScaled } =>
-                  rq
-              }
-          }
-          val nTest = counts.filter(_._1 == 0L).map(_._3).sum
-          val nCov = qhatQ.map(q =>
-            counts.filter(t => t._1 == 0L && t._2 <= q).map(_._3).sum)
-          val qhatOrNull: Any = qhatQ.map(_.toDouble / 1.0e6).orNull
-          val covOrNull: Any =
-            if (nTest == 0L || qhatQ.isEmpty) null
-            else nCov.get.toDouble / nTest.toDouble
-          Row(nTrain, nCalibOrNull, nTest, qhatOrNull, covOrNull)
-        }
-        spark.createDataFrame(java.util.Arrays.asList(row), schema)
+        val counts = collected.toIndexedSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        spark.createDataFrame(java.util.Arrays.asList(
+          conformalFold(nTrain, counts, covNum, covDen)), ConformalSchema)
       case None => // distributed tail: the pre-r16 window + re-scan form
         val cc = scored.filter(col("cal") === 1L)
           .groupBy(col("rq")).agg(count(lit(1)).as("c"))
@@ -633,6 +643,139 @@ object Inference {
               .otherwise(col("n_cov").cast("double") /
                 col("n_test").cast("double")).as("coverage"))
     }
+  }
+
+  private val ConformalSchema = StructType(Seq(
+    StructField("n_train", LongType), StructField("n_calib", LongType),
+    StructField("n_test", LongType), StructField("qhat", DoubleType),
+    StructField("coverage", DoubleType)))
+
+  /** [[conformalInterval]]'s tail over the (cal, rq, count) relation
+    * of the non-train rows: n_calib, the k-th smallest calibration rq,
+    * and the test coverage of q̂, in exact integer arithmetic. */
+  private def conformalFold(nTrain: Long, counts: Seq[(Long, Long, Long)],
+                            covNum: Int, covDen: Int): Row =
+    if (counts.isEmpty) {
+      // no non-train rows at all: the old agg-over-empty emitted NULLs
+      Row(nTrain, null, null, null, null)
+    } else {
+      val calib = counts.filter(_._1 == 1L).sortBy(_._2)
+      val nCalibOrNull: Any = if (calib.isEmpty) null
+        else calib.iterator.map(_._3).sum
+      val qhatQ: Option[Long] = nCalibOrNull match {
+        case null => None
+        case nc: Long =>
+          val xp = (nc + 1L) * covNum.toLong + (covDen.toLong - 1L)
+          val kScaled = math.min(xp - xp % covDen.toLong, nc * covDen.toLong)
+          var cum = 0L
+          calib.collectFirst {
+            case (_, rq, c) if { cum += c; cum * covDen.toLong >= kScaled } =>
+              rq
+          }
+      }
+      val nTest = counts.filter(_._1 == 0L).map(_._3).sum
+      val nCov = qhatQ.map(q =>
+        counts.filter(t => t._1 == 0L && t._2 <= q).map(_._3).sum)
+      val qhatOrNull: Any = qhatQ.map(_.toDouble / 1.0e6).orNull
+      val covOrNull: Any =
+        if (nTest == 0L || qhatQ.isEmpty) null
+        else nCov.get.toDouble / nTest.toDouble
+      Row(nTrain, nCalibOrNull, nTest, qhatOrNull, covOrNull)
+    }
+
+  /** The small-input regime of [[conformalInterval]] over (y, a, b,
+    * train, cal) rows in one task. One pass accumulates [[ols2Sums]]
+    * over the train rows — n, sa, sb as LONG sums, the products as
+    * LONG multiplies, each overflowing as the session's ANSI mode
+    * does, the DECIMAL sums exact in 128 bits — and buffers the
+    * non-train rows in primitive arrays. The fit then evaluates
+    * [[ols2Solve]]'s own expressions, bound to that sums row, so the
+    * Cramer solve is the cluster's double op order by construction.
+    * Residuals quantize as the cluster branch's projection does, count
+    * by (cal, rq), and [[conformalFold]] finishes. */
+  private def smallConformal(rows: DataFrame, covNum: Int, covDen: Int): DataFrame = {
+    val session = rows.sparkSession
+    val ansi = session.sessionState.conf.ansiEnabled
+    val solve = ols2Solve(session.createDataFrame(
+      java.util.Collections.emptyList[Row](), ols2Sums(rows).schema)).queryExecution.analyzed
+    val fit = solve match {
+      case Project(list, child) =>
+        BindReferences.bindReferences[Expression](list, AttributeSeq(child.output))
+    }
+    rows.queryExecution.optimizedPlan match {
+      // a statically empty input plans no task: the fit is n = 0
+      case l: LocalRelation if l.data.isEmpty =>
+        return session.createDataFrame(
+          java.util.Arrays.asList(Row(0L, 0L, 0L, null, null)), ConformalSchema)
+      case _ =>
+    }
+    rows.coalesce(1).mapPartitions { it =>
+      def add(x: Long, v: Long): Long = if (ansi) Math.addExact(x, v) else x + v
+      def mul(x: Long, v: Long): Long = if (ansi) Math.multiplyExact(x, v) else x * v
+      var n = 0L; var sa = 0L; var sb = 0L
+      val sums = Array.fill(7)(new Sum128) // sy, saa, sab, sbb, say, sby, syy
+      var ys = new Array[Long](1 << 12); var as = new Array[Long](1 << 12)
+      var bs = new Array[Long](1 << 12); var cal = new Array[Boolean](1 << 12)
+      var m = 0
+      it.foreach { r =>
+        val y = r.getLong(0); val a = r.getLong(1); val b = r.getLong(2)
+        if (r.getBoolean(3)) {
+          n += 1; sa = add(sa, a); sb = add(sb, b)
+          sums(0).add(y); sums(1).add(mul(a, a)); sums(2).add(mul(a, b))
+          sums(3).add(mul(b, b)); sums(4).add(mul(a, y)); sums(5).add(mul(b, y))
+          sums(6).add(mul(y, y))
+        } else {
+          if (m == ys.length) {
+            ys = java.util.Arrays.copyOf(ys, m << 1); as = java.util.Arrays.copyOf(as, m << 1)
+            bs = java.util.Arrays.copyOf(bs, m << 1); cal = java.util.Arrays.copyOf(cal, m << 1)
+          }
+          ys(m) = y; as(m) = a; bs(m) = b; cal(m) = r.getBoolean(4); m += 1
+        }
+      }
+      // SUM over no rows is NULL; COUNT is 0
+      val sumsRow = InternalRow.fromSeq(n +: (if (n == 0L) Seq.fill(9)(null)
+        else Seq(sa, sb) ++ sums.map(_.decimal)))
+      val f = fit.map(_.eval(sumsRow))
+      val nTrain = f(0).asInstanceOf[Long]
+      if (f(1) == null) Iterator.single(Row(nTrain, 0L, 0L, null, null))
+      else {
+        val (b0, b1, b2) = (f(1).asInstanceOf[Double], f(2).asInstanceOf[Double],
+          f(3).asInstanceOf[Double])
+        val rqs = Array.fill(2)(new graft.core.LongIndex())
+        val cnt = Array.fill(2)(new Array[Long](1 << 12))
+        var i = 0
+        while (i < m) {
+          val rq = math.floor(math.abs(ys(i).toDouble -
+            (b0 + b1 * as(i).toDouble + b2 * bs(i).toDouble)) * 1.0e6).toLong
+          val c = if (cal(i)) 1 else 0
+          val k = rqs(c).intern(rq)
+          if (k == cnt(c).length) cnt(c) = java.util.Arrays.copyOf(cnt(c), k << 1)
+          cnt(c)(k) += 1
+          i += 1
+        }
+        val counts = for (c <- 0 to 1; k <- 0 until rqs(c).size)
+          yield (c.toLong, rqs(c).id(k), cnt(c)(k))
+        Iterator.single(conformalFold(nTrain, counts, covNum, covDen))
+      }
+    }(Encoders.row(ConformalSchema))
+  }
+
+  /** An exact 128-bit two's-complement sum of LONG terms: below 2⁶³
+    * terms it cannot overflow, and it stays within DECIMAL(38,0) (10³⁸
+    * > 2¹²⁶), so it equals a DECIMAL(38,0) SUM of the same terms. */
+  private final class Sum128 {
+    private var hi = 0L
+    private var lo = 0L
+
+    def add(v: Long): Unit = {
+      val s = lo + v
+      hi += (v >> 63) + (if (java.lang.Long.compareUnsigned(s, lo) < 0) 1L else 0L)
+      lo = s
+    }
+
+    def decimal: Decimal = Decimal(new java.math.BigDecimal(
+      java.math.BigInteger.valueOf(hi).shiftLeft(64)
+        .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))), 38, 0)
   }
 
   /** Isotonic (monotone non-decreasing) recalibration of a binary
@@ -672,8 +815,6 @@ object Inference {
     // job). Each segment mean is the same (LONG diff)/(LONG diff) IEEE
     // quotient, and the min/max selection over those doubles is
     // engine-exact, as before.
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val bins2 = g.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getLong(2))).sortBy(_._1)
     val nBins = bins2.length

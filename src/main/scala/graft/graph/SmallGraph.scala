@@ -44,17 +44,25 @@ import scala.reflect.runtime.universe.TypeTag
   * its cluster branch's dedup and arithmetic, so both regimes and the
   * SQL oracles agree bit-for-bit.
   *
-  * Two non-graph kernels reuse [[isSmall]] and [[integral]] for their
-  * own one-task bodies over a `coalesce(1)` scan, each under its own
-  * bound rather than [[MaxInputBytes]]:
-  * [[graft.llm.Dedup.jaccardJoinPrefix]] (in-task PPJoin, bounded by
-  * `Dedup.SmallJoinMaxBytes`) and [[graft.llm.Similarity.rankingMetrics]]
-  * (bounded by `Similarity.SmallRankMaxBytes`). Both bounds are the
-  * largest input at which the one task was timed against the cluster
-  * branch. The ranking kernel's work is quadratic: every panel query
-  * scores every candidate, queries × candidates × dim in one task,
-  * so a byte bound fixes that work only for a given dim and query
-  * rate. */
+  * Four non-graph kernels reuse [[isSmall]] for their own one-task
+  * bodies over a `coalesce(1)` scan, each under a default bound
+  * (`smallInputThreshold`, 0 forcing the cluster branch):
+  *  - [[graft.llm.Dedup.jaccardJoinPrefix]]: in-task PPJoin, bounded by
+  *    `Dedup.SmallJoinMaxBytes`, integral ids only;
+  *  - [[graft.llm.Similarity.rankingMetrics]]: in-task scoring and
+  *    ranking, bounded by `Similarity.SmallRankMaxBytes`, integral ids
+  *    only. Its work is quadratic: every panel query scores every
+  *    candidate, queries × candidates × dim in one task, so a byte
+  *    bound fixes that work only for a given dim and query rate;
+  *  - [[graft.llm.Multimodal.cdcChunkStats]]: in-task chunk interning
+  *    and per-media sums over the native chunk projection, bounded by
+  *    `Multimodal.SmallCdcMaxBytes` (16 MiB, below a measured
+  *    crossover), integral media ids only;
+  *  - [[graft.agg.Inference.conformalInterval]]: the fit, residuals
+  *    and quantile fold in one pass plus a buffer, bounded by
+  *    [[MaxInputBytes]] (timed past it).
+  * Each bound is at most the largest input at which the one task was
+  * timed against the cluster branch. */
 object SmallGraph {
 
   /** Default bound on the summed input-leaf bytes of the small regime

@@ -435,9 +435,11 @@ object Dedup {
     * (NULL ids included), so each row becomes an ascending int array
     * under the global order. Rows group by id: one record per id, the
     * merged multiset of its copies (the row itself when the id is
-    * unique). Records are probed in ascending size against an index of
-    * the prefixes p = s − ⌈n·s/m⌉ + 1 of the records before them, which
-    * are no larger, under the cluster branch's size gate
+    * unique). Records are probed by their prefixes p = s − ⌈n·s/m⌉ + 1
+    * in ascending size against an index of the shorter PPJoin index
+    * prefixes s − ⌈2n·s/(m+n)⌉ + 1 of the records before them (p itself
+    * when an id is duplicated), which are no larger, under the cluster
+    * branch's size gate
     * (n·s_x ≤ m·s_y) and positional bound (the first prefix match
     * bounds the overlap by 1 + min of the remaining lengths).
     * Survivors verify copy by copy with a sorted merge under the same
@@ -494,13 +496,21 @@ object Dedup {
       if (c.length == 1) c(0) else { val a = c.flatten; java.util.Arrays.sort(a); a }
     }
     def prefix(s: Int): Int = (s - (n * s + m - 1) / m + 1).toInt
-    // records by ascending size; prefix postings (record, position) per
-    // token in that order, so each list is size-ascending
+    // PPJoin's index prefix s − ⌈2n·s/(m+n)⌉ + 1: a record is only ever
+    // probed by records no smaller, so a pair with J ≥ n/m overlaps in
+    // ≥ 2n/(m+n)·s of the indexed record's tokens, and their first
+    // common token falls inside it. Merged copies of a duplicated id are
+    // multisets, for which that bound fails: they index the probe prefix
+    val merged = runs.exists(_.length > 1)
+    def indexPrefix(s: Int): Int =
+      if (merged) prefix(s) else (s - (2 * n * s + m + n - 1) / (m + n) + 1).toInt
+    // records by ascending size; index-prefix postings (record,
+    // position) per token in that order, so each list is size-ascending
     val order = Array.range(0, nd).sortBy(recs(_).length)
     val pOff = new Array[Int](nt + 1)
     order.foreach { x =>
       var i = 0
-      while (i < prefix(recs(x).length)) { pOff(recs(x)(i) + 1) += 1; i += 1 }
+      while (i < indexPrefix(recs(x).length)) { pOff(recs(x)(i) + 1) += 1; i += 1 }
     }
     t = 0
     while (t < nt) { pOff(t + 1) += pOff(t); t += 1 }
@@ -511,7 +521,7 @@ object Dedup {
     while (o < nd) {
       val x = order(o); seq(x) = o
       var i = 0
-      while (i < prefix(recs(x).length)) {
+      while (i < indexPrefix(recs(x).length)) {
         val tok = recs(x)(i)
         pDoc(pFill(tok)) = x; pPos(pFill(tok)) = i; pFill(tok) += 1
         i += 1

@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import graft.graph.SmallGraph
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,20 +40,22 @@ object Multimodal {
     * PARSED from the payload's container header bytes
     * ([[graft.functions.MediaDims]] — a codegen'd projection, so the
     * metadata materializes at scan speed with zero shuffles; downstream
-    * filters read the struct and never touch the blob again). */
+    * filters read the struct and never touch the blob again). The
+    * payload is projected once and the meta struct reads the projected
+    * column, so a large `payload` expression (a synthesized one) is
+    * analyzed once, not once per meta field. */
   def asMediaTable(df: DataFrame, id: Column, payload: Column): DataFrame = {
-    val dims = graft.functions.MediaDims(payload)
-    df.select(
-      id.cast("long").as("media_id"),
-      payload.as("payload"),
-      struct(
-        when(dims.getField("format") === "unknown",
-          lit("application/octet-stream"))
-          .otherwise(concat(lit("image/"), dims.getField("format"))).as("mime"),
-        dims.getField("width").as("width"),
-        dims.getField("height").as("height"),
-        dims.getField("bit_depth").as("bit_depth"),
-        octet_length(payload).cast("long").as("n_bytes")).as("meta"))
+    val dims = graft.functions.MediaDims(col("payload"))
+    df.select(id.cast("long").as("media_id"), payload.as("payload"))
+      .select(col("media_id"), col("payload"),
+        struct(
+          when(dims.getField("format") === "unknown",
+            lit("application/octet-stream"))
+            .otherwise(concat(lit("image/"), dims.getField("format"))).as("mime"),
+          dims.getField("width").as("width"),
+          dims.getField("height").as("height"),
+          dims.getField("bit_depth").as("bit_depth"),
+          octet_length(col("payload")).cast("long").as("n_bytes")).as("meta"))
   }
 
   /** Deterministic test-corpus payload: REAL container header bytes
@@ -223,15 +226,37 @@ object Multimodal {
     * storage-dedup yield estimate, and Σ shared_bytes/Σ n_bytes the
     * corpus figure.
     *
-    * Plan shape: the chunk table is one projection + explode over the
-    * payload scan, persisted because it feeds both the share aggregate
-    * and the join back. "≥ 2 distinct non-NULL media" is
-    * min(media_id) < max(media_id) — a plain partial aggregate, no
-    * distinct-aggregate shuffle; both forms ignore NULL ids alike. */
-  def cdcChunkStats(media: DataFrame, window: Int = 8,
-                    divisor: Int = 32): DataFrame = {
-    val chunks = graft.core.Caches.track(media
+    * A NULL or empty payload has no chunks. A NULL media_id is its own
+    * output group, and it never makes a chunk shared: "≥ 2 distinct
+    * non-NULL media" is min(media_id) < max(media_id), which ignores
+    * NULL ids. Rows sharing a media_id sum into one output row.
+    *
+    * Regime: a small input with an integral media_id (the
+    * [[graft.graph.SmallGraph]] regime test against
+    * `smallInputThreshold`, default [[SmallCdcMaxBytes]]; 0 forces the
+    * cluster branch) runs in ONE task over the codegen'd
+    * [[graft.functions.CdcChunks]] projection: lazy, one job, no
+    * exchange (see [[smallCdcStats]]). Above it the chunk table is one
+    * projection + explode over the payload scan, persisted because it
+    * feeds both the share aggregate and the join back; the share test
+    * is a plain partial aggregate, no distinct-aggregate shuffle. */
+  def cdcChunkStats(media: DataFrame, window: Int = 8, divisor: Int = 32,
+                    smallInputThreshold: Long = SmallCdcMaxBytes): DataFrame = {
+    val payloads = media
       .filter(col("payload").isNotNull && octet_length(col("payload")) > 0)
+    val ids = media.select(col("media_id"))
+    if (SmallGraph.isSmall(media, smallInputThreshold) && SmallGraph.integral(ids)) {
+      val enc = Encoders.tuple(Encoders.LONG, Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.scalaLong, Encoders.scalaLong)
+      return payloads
+        .select(col("media_id").cast("long"),
+          graft.functions.CdcChunks(col("payload"), window, divisor).as("c"))
+        .coalesce(1)
+        .mapPartitions(smallCdcStats)(enc)
+        .toDF("media_id", "n_bytes", "n_chunks", "n_shared", "shared_bytes")
+        .withColumn("media_id", col("media_id").cast(ids.schema.head.dataType))
+    }
+    val chunks = graft.core.Caches.track(payloads
       .select(col("media_id"),
         explode(graft.functions.CdcChunks(col("payload"), window, divisor)).as("c"))
       .select(col("media_id"), col("c.ch").as("ch"), col("c.l").as("clen")))
@@ -243,6 +268,70 @@ object Multimodal {
         count(lit(1)).as("n_chunks"),
         sum(when(col("shared"), 1L).otherwise(0L)).as("n_shared"),
         sum(when(col("shared"), col("clen")).otherwise(0L)).as("shared_bytes"))
+  }
+
+  /** Default input-leaf bound of [[cdcChunkStats]]' single-task
+    * regime (16 MiB), below the crossover with the cluster branch. On
+    * `tools/gen_sf1.py` replicas of sf0.1's documents, `local[4]`, one
+    * task / cluster, warm runs (2 of 3; 2 of 2 at ~61 MiB): 0.45-0.60 /
+    * 0.88-1.12 s at 0.57 MiB, 1.8-1.9 / 2.6-2.8 s at 4.4 MiB,
+    * 6.4-6.7 / 8.2-8.7 s at 17.7 MiB, then 8.6-9.5 / 8.0-8.6 s at
+    * 26.5 MiB, 13.0-13.1 / 10.1-10.5 s at 35.4 MiB and
+    * 21.7-22.0 / 18.2-19.8 s at ~61 MiB: past ~20 MiB the serial chunk
+    * scan costs more than the cluster's shuffles. */
+  val SmallCdcMaxBytes: Long = 16L << 20
+
+  /** The small-input regime of [[cdcChunkStats]]: (media_id, chunks)
+    * rows of non-empty payloads in one task. Each (ch, clen) interns to
+    * a dense chunk index carrying the min and max non-NULL media_id
+    * seen with it; every occurrence buffers (media group, chunk index).
+    * One more pass over the buffer sums per media group, a chunk being
+    * shared when its min id < its max id. Media groups are the distinct
+    * non-NULL ids in first-seen order, then one NULL group. */
+  private def smallCdcStats(rows: Iterator[Row])
+      : Iterator[(java.lang.Long, Long, Long, Long, Long)] = {
+    val media = new graft.core.LongIndex()
+    val chunkOf = scala.collection.mutable.HashMap.empty[(String, Long), Int]
+    var lo = new Array[Long](1 << 12); var hi = new Array[Long](1 << 12)
+    val clen = scala.collection.mutable.ArrayBuilder.make[Long]
+    val occGroup = scala.collection.mutable.ArrayBuilder.make[Int]
+    val occChunk = scala.collection.mutable.ArrayBuilder.make[Int]
+    var sawNull = false
+    rows.foreach { r =>
+      val g = if (r.isNullAt(0)) { sawNull = true; -1 } else media.intern(r.getLong(0))
+      r.getSeq[Row](1).foreach { c =>
+        val len = c.getLong(1)
+        val k = chunkOf.getOrElseUpdate((c.getString(0), len), {
+          val i = chunkOf.size
+          if (i == lo.length) {
+            lo = java.util.Arrays.copyOf(lo, i << 1); hi = java.util.Arrays.copyOf(hi, i << 1)
+          }
+          lo(i) = Long.MaxValue; hi(i) = Long.MinValue; clen += len
+          i
+        })
+        if (g >= 0) {
+          val id = media.id(g)
+          lo(k) = math.min(lo(k), id); hi(k) = math.max(hi(k), id)
+        }
+        occGroup += g; occChunk += k
+      }
+    }
+    val ng = media.size
+    val lens = clen.result(); val gs = occGroup.result(); val cs = occChunk.result()
+    // group ng is the NULL media_id
+    val nBytes = new Array[Long](ng + 1); val nChunks = new Array[Long](ng + 1)
+    val nShared = new Array[Long](ng + 1); val sharedBytes = new Array[Long](ng + 1)
+    var o = 0
+    while (o < gs.length) {
+      val g = if (gs(o) < 0) ng else gs(o); val k = cs(o)
+      nBytes(g) += lens(k); nChunks(g) += 1
+      if (lo(k) < hi(k)) { nShared(g) += 1; sharedBytes(g) += lens(k) }
+      o += 1
+    }
+    (0 to ng).iterator.filter(g => g < ng || sawNull).map { g =>
+      (if (g < ng) Long.box(media.id(g)) else null,
+        nBytes(g), nChunks(g), nShared(g), sharedBytes(g))
+    }
   }
 
   /** 64-bit perceptual difference hash (dHash, the aHash/pHash family's

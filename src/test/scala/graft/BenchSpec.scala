@@ -26,8 +26,9 @@ class BenchSpec extends SparkSpec {
 
   test("once counts the sample's jobs and stages as a listener does, off-thread and eager ones too") {
     // (label, jobs at least, query): the broadcast job runs on another
-    // thread; conformalInterval collects its fit and runs its DriverFold
-    // probe while the frame is built, before the timed action
+    // thread; conformalInterval's cluster branch (threshold 0) collects
+    // its fit and runs its DriverFold probe while the frame is built,
+    // before the timed action
     val cases: Seq[(String, Int, Bench.Query)] = Seq(
       ("aggregate", 1, (sp, _) => sp.range(5000).groupBy(col("id") % 7).count()),
       ("broadcast join", 2, (sp, _) => sp.range(5000).withColumn("k", col("id") % 10)
@@ -35,7 +36,8 @@ class BenchSpec extends SparkSpec {
       ("driver fold", 3, (sp, _) => graft.agg.Inference.conformalInterval(
         sp.range(300).select(col("id").as("k"), (col("id") * 10 + col("id") % 4).as("y"),
           col("id").as("a"), (col("id") % 4).as("b")),
-        col("y"), col("a"), col("b"), col("k") % 5 >= 2, col("k") % 5 === 0)))
+        col("y"), col("a"), col("b"), col("k") % 5 >= 2, col("k") % 5 === 0,
+        smallInputThreshold = 0L)))
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val stages = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {

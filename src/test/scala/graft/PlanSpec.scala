@@ -734,8 +734,34 @@ class PlanSpec extends SparkSpec {
       s"no doc-order sort anywhere:\n$p")
   }
 
+  /** q_cdc_chunks' kernel over the test corpus's media table. */
+  private def cdcChunks(threshold: Long): DataFrame =
+    llm.Multimodal.cdcChunkStats(llm.Multimodal.asMediaTable(Tables.documents(spark, sf),
+      col("doc_id"), llm.Multimodal.syntheticPayload(col("doc_id"), col("text"))),
+      smallInputThreshold = threshold)
+
+  /** The jobs `build` runs, then the jobs, stages and tasks of one
+    * action over the frame it built, read from the status tracker
+    * under a job group each. */
+  private def buildThenRun(build: => DataFrame): (DataFrame, Int, Int, Int, Int) = {
+    val sc = spark.sparkContext
+    def jobsOf[T](body: => T): (T, Array[Int]) = {
+      val group = s"plan-spec-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+      (out, sc.statusTracker.getJobIdsForGroup(group))
+    }
+    val (df, built) = jobsOf(build)
+    val (_, ran) = jobsOf(df.queryExecution.toRdd.count())
+    val stages = ran.toSeq.flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds.toSeq)
+    val tasks = stages.flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sum
+    (df, built.length, ran.length, stages.length, tasks)
+  }
+
   test("cdc chunks: boundary fold rides the projection; chunk table persists for both consumers") {
-    val p = plan(SparkEntry.queries("q_cdc_chunks")(spark, sf))
+    // threshold 0 forces the cluster branch so its plan stays pinned
+    val p = plan(cdcChunks(0L))
     assert(!p.contains("CartesianProduct"), s"share join must stay equi-keyed:\n$p")
     // chunk table feeds the share aggregate AND the join back — both
     // must read the persisted copy, not re-run the hex fold chain
@@ -744,10 +770,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("cdc chunks: one native byte scan — no lambda, no hex rendering, no round-robin spread") {
-    val p = plan(SparkEntry.queries("q_cdc_chunks")(spark, sf))
+    val p = plan(cdcChunks(0L))
     assert(p.contains("cdc_chunks("), s"boundary scan must be the native expression:\n$p")
     Seq("lambdafunction", "conv(", "lower(hex(", "RoundRobinPartitioning", "count(distinct")
       .foreach(t => assert(!p.contains(t), s"plan must not contain '$t':\n$p"))
+  }
+
+  test("cdc chunks below the size threshold: built lazily, one job, one task, no exchange") {
+    val (df, built, jobs, stages, tasks) =
+      buildThenRun(cdcChunks(llm.Multimodal.SmallCdcMaxBytes))
+    val p = plan(df)
+    assert(p.contains("MapPartitions") && p.contains("cdc_chunks(") &&
+      !p.contains("Exchange") && !p.contains("Generate") && !p.contains("lambdafunction"),
+      s"the small regime must chunk natively and sum in one task:\n$p")
+    assert((built, jobs, stages, tasks) == ((0, 1, 1, 1)), s"$built $jobs $stages $tasks")
+  }
+
+  test("conformal below the size threshold: built lazily, one job, one task, no exchange") {
+    val (df, built, jobs, stages, tasks) =
+      buildThenRun(SparkEntry.queries("q_conformal")(spark, sf))
+    val p = plan(df)
+    assert(p.contains("MapPartitions") && !p.contains("Exchange") && !p.contains("Join"),
+      s"the small regime must fit and score in one task:\n$p")
+    assert((built, jobs, stages, tasks) == ((0, 1, 1, 1)), s"$built $jobs $stages $tasks")
   }
 
   test("cluster quality: literal-centroid projection — no join, one cid reduce") {

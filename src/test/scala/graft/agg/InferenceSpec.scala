@@ -209,21 +209,72 @@ class InferenceSpec extends SparkSpec {
     val test = Seq((1L, 10L * 3 + 1 + 5, 3L, 1L),
       (6L, 10L * 3 + 1 + 50, 3L, 1L))
     val df = (train ++ calib ++ test).toDF("k", "y", "a", "b")
-    val r = Inference.conformalInterval(df, col("y"), col("a"), col("b"),
-      col("k") % 5 >= 2, col("k") % 5 === 0).head()
-    assert(r.getAs[Long]("n_train") == 30L)
-    assert(r.getAs[Long]("n_calib") == 9L)
-    assert(r.getAs[Long]("n_test") == 2L)
-    assert(math.abs(r.getAs[Double]("qhat") - 8.0) < 1e-5)
-    assert(math.abs(r.getAs[Double]("coverage") - 0.5) < 1e-12)
-    // degenerate fit (collinear train) → NULL qhat/coverage
-    val sing = Seq((2L, 1L, 1L, 1L), (7L, 2L, 2L, 2L), (12L, 3L, 3L, 3L),
-      (17L, 9L, 4L, 4L), (0L, 5L, 5L, 5L), (1L, 6L, 6L, 6L))
-      .toDF("k", "y", "a", "b")
-    val d = Inference.conformalInterval(sing, col("y"), col("a"), col("b"),
-      col("k") % 5 >= 2, col("k") % 5 === 0).head()
-    assert(d.isNullAt(d.fieldIndex("qhat")) &&
-      d.isNullAt(d.fieldIndex("coverage")))
+    // both regimes: the single-task default and the cluster branch
+    for (threshold <- Seq(graft.graph.SmallGraph.MaxInputBytes, 0L)) {
+      val r = Inference.conformalInterval(df, col("y"), col("a"), col("b"),
+        col("k") % 5 >= 2, col("k") % 5 === 0, smallInputThreshold = threshold).head()
+      assert(r.getAs[Long]("n_train") == 30L)
+      assert(r.getAs[Long]("n_calib") == 9L)
+      assert(r.getAs[Long]("n_test") == 2L)
+      assert(math.abs(r.getAs[Double]("qhat") - 8.0) < 1e-5)
+      assert(math.abs(r.getAs[Double]("coverage") - 0.5) < 1e-12)
+      // degenerate fit (collinear train) → NULL qhat/coverage
+      val sing = Seq((2L, 1L, 1L, 1L), (7L, 2L, 2L, 2L), (12L, 3L, 3L, 3L),
+        (17L, 9L, 4L, 4L), (0L, 5L, 5L, 5L), (1L, 6L, 6L, 6L))
+        .toDF("k", "y", "a", "b")
+      val d = Inference.conformalInterval(sing, col("y"), col("a"), col("b"),
+        col("k") % 5 >= 2, col("k") % 5 === 0, smallInputThreshold = threshold).head()
+      assert(d.isNullAt(d.fieldIndex("qhat")) &&
+        d.isNullAt(d.fieldIndex("coverage")))
+    }
+  }
+
+  test("conformalInterval: the single-task regime equals the cluster branch bit for bit on edge rows") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq("y", "a", "b").map(StructField(_, LongType)) ++
+      Seq("t", "c").map(StructField(_, BooleanType)))
+    def frame(rows: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def run(df: org.apache.spark.sql.DataFrame, threshold: Long): Seq[Seq[Any]] =
+      Inference.conformalInterval(df, col("y"), col("a"), col("b"), col("t"), col("c"),
+        smallInputThreshold = threshold).collect().toSeq.map(_.toSeq.map {
+          case d: java.lang.Double => java.lang.Double.doubleToLongBits(d)
+          case x => x
+        })
+    def both(df: org.apache.spark.sql.DataFrame): Seq[Any] = {
+      val small = run(df, graft.graph.SmallGraph.MaxInputBytes)
+      assert(small == run(df, 0L) && small.size == 1)
+      small.head
+    }
+    // the fixture above: exact train fit, calib offsets 0..8, test
+    // offsets 5 and 50 (the second test row by a NULL calib flag); rows
+    // with a NULL y, a, b or train flag are in no slice
+    val train = (1L to 30L).map(i => Row(10 * i + (i % 4), i, i % 4, true, false))
+    val calib = (0L until 9L).map(j => Row(10 * 7 + 2 + j, 7L, 2L, false, true))
+    val test = Seq(Row(36L, 3L, 1L, false, false), Row(81L, 3L, 1L, false, null))
+    val nulls = Seq(Row(null, 1L, 1L, true, false), Row(5L, null, 1L, false, true),
+      Row(5L, 1L, null, false, false), Row(5L, 1L, 1L, null, true))
+    val full = both(frame(train ++ calib ++ test ++ nulls))
+    assert(full.take(3) == Seq(30L, 9L, 2L) &&
+      full(4) == java.lang.Double.doubleToLongBits(0.5))
+    // no calib rows: NULL n_calib, q̂ and coverage
+    assert(both(frame(train ++ test)) == Seq(30L, null, 2L, null, null))
+    // no non-train rows
+    assert(both(frame(train)) == Seq(30L, null, null, null, null))
+    // no usable fit: fewer than 3 train rows, then det = 0 (collinear)
+    assert(both(frame(train.take(2) ++ calib ++ test)) == Seq(2L, 0L, 0L, null, null))
+    val collinear = Seq(Row(1L, 1L, 1L, true, false), Row(2L, 2L, 2L, true, false),
+      Row(3L, 3L, 3L, true, false), Row(9L, 4L, 4L, true, false))
+    assert(both(frame(collinear ++ calib ++ test)) == Seq(4L, 0L, 0L, null, null))
+    // empty, statically (a local relation) and at run time
+    assert(both(frame(Nil)) == Seq(0L, 0L, 0L, null, null))
+    assert(both(frame(train).filter(col("y") < 0L)) == Seq(0L, 0L, 0L, null, null))
+    // a LONG product past 2^63 (a·a) raises on both branches
+    val overflow = frame(train :+ Row(1L, 4000000000L, 1L, true, false))
+    Seq(graft.graph.SmallGraph.MaxInputBytes, 0L).foreach { threshold =>
+      val e = intercept[Exception](run(overflow, threshold))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"threshold $threshold: $e")
+    }
   }
 
   test("wasserstein1 equals the hand-computed CDF area; empty slice is NULL") {

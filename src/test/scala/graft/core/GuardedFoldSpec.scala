@@ -96,9 +96,10 @@ class GuardedFoldSpec extends SparkSpec {
     val test0 = Seq((1L, 10L * 3 + 1 + 5, 3L, 1L),
       (6L, 10L * 3 + 1 + 50, 3L, 1L))
     val df = (train ++ calib ++ test0).toDF("k", "y", "a", "b")
+    // threshold 0: the folds live in the cluster branch
     val (fold, dist) = bothArms(
       graft.agg.Inference.conformalInterval(df, col("y"), col("a"),
-        col("b"), col("k") % 5 >= 2, col("k") % 5 === 0))
+        col("b"), col("k") % 5 >= 2, col("k") % 5 === 0, smallInputThreshold = 0L))
     assert(fold == dist && fold.size == 1)
   }
 

@@ -110,16 +110,47 @@ class MediaDimsSpec extends SparkSpec {
     val b = (0x55.toByte +: a.toSeq).toArray
     val tiny = Array[Byte](1, 2, 3) // shorter than the 8-byte window
     val media = Seq((1L, a), (2L, b), (3L, tiny)).toDF("media_id", "payload")
-    val got = graft.llm.Multimodal.cdcChunkStats(media)
-      .as[(Long, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    // chunk lengths partition the payload exactly
-    assert(got(1L)._2 == 200L && got(2L)._2 == 201L && got(3L)._2 == 3L)
-    assert(got(3L)._3 == 1L && got(3L)._4 == 0L, "sub-window payload is one unshared chunk")
-    // alignment robustness: most of A's mass is shared with B despite
-    // the 1-byte shift (only the prefix before the first boundary differs)
-    assert(got(1L)._4 > 0L, "shifted twin must share chunks")
-    assert(got(1L)._5 >= got(1L)._2 / 2,
-      s"CDC must share most of the shifted payload, got ${got(1L)._5} of ${got(1L)._2}")
+    // both regimes: the single-task default and the cluster branch
+    for (threshold <- Seq(graft.llm.Multimodal.SmallCdcMaxBytes, 0L)) {
+      val got = graft.llm.Multimodal.cdcChunkStats(media, smallInputThreshold = threshold)
+        .as[(Long, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+      // chunk lengths partition the payload exactly
+      assert(got(1L)._2 == 200L && got(2L)._2 == 201L && got(3L)._2 == 3L)
+      assert(got(3L)._3 == 1L && got(3L)._4 == 0L, "sub-window payload is one unshared chunk")
+      // alignment robustness: most of A's mass is shared with B despite
+      // the 1-byte shift (only the prefix before the first boundary differs)
+      assert(got(1L)._4 > 0L, "shifted twin must share chunks")
+      assert(got(1L)._5 >= got(1L)._2 / 2,
+        s"CDC must share most of the shifted payload, got ${got(1L)._5} of ${got(1L)._2}")
+    }
+  }
+
+  test("cdcChunkStats: the single-task regime equals the cluster branch row for row on edge rows") {
+    // a NULL and an empty payload (no chunks), sub-window payloads
+    // shared by ids 5 and 7, a NULL media_id twice (one group), its
+    // payload also id 8's (a NULL id never makes a chunk shared), id 2
+    // twice with one payload (one id: nothing shared between its copies
+    // beyond what id 1's shifted twin shares)
+    val a = Array.tabulate(200)(i => ((i * 131 + 7) % 251).toByte)
+    val b = (0x55.toByte +: a.toSeq).toArray
+    val c = Array.tabulate(90)(i => ((i * 17 + 3) % 253).toByte)
+    val tiny = Array[Byte](1, 2, 3)
+    val rows: Seq[(java.lang.Long, Array[Byte])] = Seq(
+      (1L, a), (2L, b), (2L, b), (3L, null), (4L, Array.emptyByteArray), (5L, tiny),
+      (7L, tiny), (8L, c), (null, c), (null, tiny.take(2)), (9L, c.take(5)))
+    val media = rows.toDF("media_id", "payload")
+    def run(frame: org.apache.spark.sql.DataFrame, threshold: Long) =
+      graft.llm.Multimodal.cdcChunkStats(frame, smallInputThreshold = threshold)
+        .as[(Option[Long], Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val small = run(media, graft.llm.Multimodal.SmallCdcMaxBytes)
+    assert(small == run(media, 0L))
+    val got = small.map(r => r._1 -> r).toMap
+    assert(got.keySet == Set(None, Some(1L), Some(2L), Some(5L), Some(7L), Some(8L), Some(9L)))
+    assert(got(Some(2L))._2 == 402L && got(None)._2 == 92L)
+    assert(got(Some(5L))._4 == 1L && got(Some(7L))._4 == 1L)
+    assert(got(Some(8L))._4 == 0L && got(None)._4 == 0L)
+    val empty = media.filter(col("media_id") > 100L)
+    assert(run(empty, graft.llm.Multimodal.SmallCdcMaxBytes).isEmpty && run(empty, 0L).isEmpty)
   }
 
   test("energyScan frames, gates and totals exact integer energies") {
