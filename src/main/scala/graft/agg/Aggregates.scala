@@ -22,14 +22,12 @@ object Aggregates {
   def grouped(df: DataFrame, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
     df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
 
-  /** Tumbling event-time window aggregation (batch twin of
-    * `groupBy(window(...))`; streaming twin in [[graft.streaming]]). */
+  /** Tumbling event-time window aggregation: [[hopping]] with the slide
+    * equal to the size (Spark builds the same `TimeWindow`). Serves a
+    * watermarked stream unchanged, e.g. through
+    * [[graft.streaming.Streaming.tumblingChained]]. */
   def tumbling(df: DataFrame, ts: Column, size: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.groupBy(window(ts, size) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
+    hopping(df, ts, size, size, keys, aggs)
 
   /** Hopping (sliding) window aggregation. */
   def hopping(df: DataFrame, ts: Column, size: String, slide: String,

@@ -536,7 +536,7 @@ object Inference {
     * depends on the β the first pass produces, and no fixed set of
     * (y, x) moments determines the post-hoc residual histogram.
     * Fusing would require materializing the per-row projection
-    * (a corpus persist — the scale-killer the r16 fold removed).
+    * (a corpus persist).
     *
     * NULL rules: a row with a NULL y, x1, x2 or inTrain is in no slice;
     * a NULL inCalib reads as a TEST row. Special rows: no usable fit
@@ -555,8 +555,11 @@ object Inference {
     * lineitem, `local[4]`, one task / cluster, 2 warm runs each:
     * 0.63-0.69 / 1.6-2.1 s at 10.3 MiB, 1.1-1.2 / 2.0-2.8 s at
     * 62.3 MiB and 1.2-1.3 / 1.8-2.9 s at 80.4 MiB. Above the bound the
-    * fit and the DriverFold counts probe are two EAGER jobs at
-    * construction. */
+    * fit is one EAGER job at construction and the action runs the
+    * distributed tail. No driver fold of the (cal, rq) counts serves
+    * there: past 64 MiB of lineitem (≥ ~3.5 M rows, ~40 % non-train)
+    * the quantized residuals are near-unique, far above
+    * [[graft.core.DriverFold.cap]]. */
   def conformalInterval(df: DataFrame, y: Column, x1: Column, x2: Column,
                         inTrain: Column, inCalib: Column,
                         covNum: Int = 9, covDen: Int = 10,
@@ -589,60 +592,37 @@ object Inference {
         lit(b2) * col("b").cast("double")))
     val scored = s.select(col("cal"),
       floor(resid * lit(1.0e6)).cast("long").as("rq"))
-    // r16: ONE (cal, rq) aggregate replaces the calib-only cc + 1-row t
-    // + cumulate-window q̂ + coverage re-scan chain (was 4 jobs / 10
-    // stages over 3 corpus passes; now 2 jobs / 2 passes: the fit, then
-    // this). The grouped output is DOMAIN-sized (distinct quantized
-    // residuals × 2 slices — note this fold's domain bound covers BOTH
-    // slices where the old cumulate window only funneled the CALIB
-    // slice; the r17 guard below is what makes that widened assumption
-    // safe), so n_calib, the k-th order statistic and
-    // the coverage count fold into exact integer driver arithmetic on
-    // the collected counts: the cumulative walk over rq-sorted distinct
-    // values IS the old window, the rank compare is the same integer
-    // compare, and coverage divides once at the end (shared IEEE).
-    // r17 guard: above the DriverFold cap the pre-fold distributed form
-    // (calib-only cumulate window + coverage re-scan) runs instead,
-    // bit-identically. EAGER under the cap (fit job + counts job at
-    // construction time).
-    val countsDf = scored.groupBy(col("cal"), col("rq"))
-      .agg(count(lit(1)).as("c"))
-    graft.core.DriverFold.collectBounded(countsDf) match {
-      case Some(collected) =>
-        val counts = collected.toIndexedSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        spark.createDataFrame(java.util.Arrays.asList(
-          conformalFold(nTrain, counts, covNum, covDen)), ConformalSchema)
-      case None => // distributed tail: the pre-r16 window + re-scan form
-        val cc = scored.filter(col("cal") === 1L)
-          .groupBy(col("rq")).agg(count(lit(1)).as("c"))
-        val t = cc.agg(sum(col("c")).as("n_calib"))
-        val wq = Window.orderBy(col("rq"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // k = ceil(covNum·(n+1)/covDen) clamped to n (tiny-calib guard);
-        // k·covDen = x' − x' mod covDen with x' = covNum·(n+1)+covDen−1,
-        // so `cum ≥ k` stays a pure integer compare
-        val xp = (col("n_calib") + lit(1L)) * lit(covNum.toLong) +
-          lit(covDen.toLong - 1L)
-        val kScaled = least(xp - xp % lit(covDen.toLong),
-          col("n_calib") * lit(covDen.toLong))
-        val qhat = cc.select(col("rq"), sum(col("c")).over(wq).as("cum"))
-          .crossJoin(broadcast(t))
-          .filter(col("cum") * lit(covDen.toLong) >= kScaled)
-          .agg(min(col("rq")).as("qhat_q"))
-          .crossJoin(broadcast(t))
-        scored.crossJoin(broadcast(qhat))
-          .agg(max(col("n_calib")).as("n_calib"),
-            sum(lit(1L) - col("cal")).as("n_test"),
-            max(col("qhat_q")).as("qhat_q"),
-            sum(when(col("cal") === 0L && col("rq") <= col("qhat_q"), 1L)
-              .otherwise(0L)).as("n_cov"))
-          .select(lit(nTrain).as("n_train"), col("n_calib"), col("n_test"),
-            (col("qhat_q").cast("double") / lit(1.0e6)).as("qhat"),
-            when(col("n_test") === 0L || col("qhat_q").isNull,
-              lit(null).cast("double"))
-              .otherwise(col("n_cov").cast("double") /
-                col("n_test").cast("double")).as("coverage"))
-    }
+    // q̂ is the k-th smallest calibration rq: a cumulate window over the
+    // calib-only distinct-rq counts, then one coverage pass over `scored`
+    val cc = scored.filter(col("cal") === 1L)
+      .groupBy(col("rq")).agg(count(lit(1)).as("c"))
+    val t = cc.agg(sum(col("c")).as("n_calib"))
+    val wq = Window.orderBy(col("rq"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // k = ceil(covNum·(n+1)/covDen) clamped to n (tiny-calib guard);
+    // k·covDen = x' − x' mod covDen with x' = covNum·(n+1)+covDen−1,
+    // so `cum ≥ k` stays a pure integer compare
+    val xp = (col("n_calib") + lit(1L)) * lit(covNum.toLong) +
+      lit(covDen.toLong - 1L)
+    val kScaled = least(xp - xp % lit(covDen.toLong),
+      col("n_calib") * lit(covDen.toLong))
+    val qhat = cc.select(col("rq"), sum(col("c")).over(wq).as("cum"))
+      .crossJoin(broadcast(t))
+      .filter(col("cum") * lit(covDen.toLong) >= kScaled)
+      .agg(min(col("rq")).as("qhat_q"))
+      .crossJoin(broadcast(t))
+    scored.crossJoin(broadcast(qhat))
+      .agg(max(col("n_calib")).as("n_calib"),
+        sum(lit(1L) - col("cal")).as("n_test"),
+        max(col("qhat_q")).as("qhat_q"),
+        sum(when(col("cal") === 0L && col("rq") <= col("qhat_q"), 1L)
+          .otherwise(0L)).as("n_cov"))
+      .select(lit(nTrain).as("n_train"), col("n_calib"), col("n_test"),
+        (col("qhat_q").cast("double") / lit(1.0e6)).as("qhat"),
+        when(col("n_test") === 0L || col("qhat_q").isNull,
+          lit(null).cast("double"))
+          .otherwise(col("n_cov").cast("double") /
+            col("n_test").cast("double")).as("coverage"))
   }
 
   private val ConformalSchema = StructType(Seq(
@@ -650,13 +630,14 @@ object Inference {
     StructField("n_test", LongType), StructField("qhat", DoubleType),
     StructField("coverage", DoubleType)))
 
-  /** [[conformalInterval]]'s tail over the (cal, rq, count) relation
-    * of the non-train rows: n_calib, the k-th smallest calibration rq,
-    * and the test coverage of q̂, in exact integer arithmetic. */
+  /** [[smallConformal]]'s tail over the (cal, rq, count) relation of
+    * the non-train rows: n_calib, the k-th smallest calibration rq, and
+    * the test coverage of q̂, in exact integer arithmetic — the cluster
+    * branch's window and coverage pass, replayed. */
   private def conformalFold(nTrain: Long, counts: Seq[(Long, Long, Long)],
                             covNum: Int, covDen: Int): Row =
     if (counts.isEmpty) {
-      // no non-train rows at all: the old agg-over-empty emitted NULLs
+      // no non-train rows at all: the cluster branch's agg over no rows gives NULLs
       Row(nTrain, null, null, null, null)
     } else {
       val calib = counts.filter(_._1 == 1L).sortBy(_._2)

@@ -104,16 +104,6 @@ object Xform {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  // ---- Typed (arbitrary-function) layer ---------------------------------
-
-  def tmap[T, U: Encoder](f: T => U): Pipe.Pipe[T, U] = _.map(f)
-  def tfilter[T](p: T => Boolean): Pipe.Pipe[T, T] = _.filter(p)
-  def tremove[T](p: T => Boolean): Pipe.Pipe[T, T] = _.filter((t: T) => !p(t))
-  def tkeep[T, U: Encoder](f: T => Option[U]): Pipe.Pipe[T, U] =
-    _.flatMap(t => f(t))
-  def tmapcat[T, U: Encoder](f: T => IterableOnce[U]): Pipe.Pipe[T, U] =
-    _.flatMap(f)
-
   /** Error-swallowing step semantics (reference: api.clj:21-24 catches,
     * prints, and drops the failing record). Spark's default is
     * fail-the-task; this combinator reproduces the reference's observable
@@ -132,9 +122,4 @@ object Xform {
         }
       }
   }
-
-  /** Typed 1→1 with error-skip. */
-  def safeMap[T, U: Encoder](spark: SparkSession, name: String)(
-      f: T => U): Pipe.Pipe[T, U] =
-    safeFlatMap[T, U](spark, name)(t => Iterator.single(f(t)))
 }

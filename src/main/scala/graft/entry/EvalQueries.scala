@@ -30,20 +30,17 @@ object EvalQueries {
   /** Neyman allocation budget (docs). */
   private val NeymanBudget = 100L
 
-  /** SQ8 [min,max] calibration artifact (same build as LlmQueries'
-    * sqStats — content-keyed, so the two memoize independently but
-    * bit-identically). */
-  private def sqStats(s: SparkSession, d: String): Seq[(Int, Double, Double)] =
-    Similarity.sqTrain(Tables.embeddings(s, d), col("embedding"))
-
   val queries: Map[String, Q] = Map(
     // NDCG@10 / MRR / hits@10 of the SQ8 quantized retriever against
     // exact-cosine graded relevance, per 1-in-8 panel query — the
     // ORDER-quality eval beside q_ann_sq8_recall's set-quality floor;
-    // a small corpus scores in one task, a large one spreads to the cores
+    // a small corpus scores in one task, a large one spreads to the cores;
+    // the SQ8 [min,max] calibration is one eager stats job per build
     "q_rank_eval" -> ((s, d) =>
       Similarity.rankingMetrics(Tables.embeddings(s, d),
-        col("vec_id"), col("embedding"), sqStats(s, d), RankK, RankMod)),
+        col("vec_id"), col("embedding"),
+        Similarity.sqTrain(Tables.embeddings(s, d), col("embedding")),
+        RankK, RankMod)),
 
     // diagonal-Mahalanobis embedding outliers from the dimStats
     // calibration — zero-shuffle projection against literal μ/σ state

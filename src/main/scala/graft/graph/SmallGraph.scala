@@ -60,7 +60,8 @@ import scala.reflect.runtime.universe.TypeTag
   *    crossover), integral media ids only;
   *  - [[graft.agg.Inference.conformalInterval]]: the fit, residuals
   *    and quantile fold in one pass plus a buffer, bounded by
-  *    [[MaxInputBytes]] (timed past it).
+  *    [[MaxInputBytes]] (timed past it). This task is the only place
+  *    its counts fold; the cluster branch runs the distributed tail.
   * Each bound is at most the largest input at which the one task was
   * timed against the cluster branch. */
 object SmallGraph {

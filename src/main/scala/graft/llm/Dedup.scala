@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Caches
 import graft.functions.GraftFunctions._
 import graft.graph.SmallGraph
 import org.apache.spark.sql.{Column, DataFrame}
@@ -13,20 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Band tables persisted by [[minhashDedupKeptIds]] / [[nearDupPairs]].
-    * Caching contract: the persist is what stops Spark re-running the
-    * scan→shingle→signature subtree once per self-join side; handles go
-    * through the shared [[graft.core.Caches]] registry and callers
-    * release them with [[releaseCaches]] after their action completes
-    * (Verify/Bench do this per query). */
-  private def persistTracked(df: DataFrame): DataFrame = graft.core.Caches.track(df)
-
   /** Release every GLOBALLY tracked cache (dedup band tables, graph
     * rank vectors, …) registered since the last release — delegates to
     * [[graft.core.Caches.release]]. Call after the action consuming
     * the returned DataFrame; a concurrent harness wraps each query in
     * [[graft.core.Caches.scope]] instead and closes its own scope. */
-  def releaseCaches(): Unit = graft.core.Caches.release()
+  def releaseCaches(): Unit = Caches.release()
 
   /** Exact dedup by content hash: keeps the lowest-id row per distinct
     * content. One hash-aggregate shuffle; at 100 TB the md5 prefilter means
@@ -65,7 +58,7 @@ object Dedup {
     // sf0.1 (1.30 → 1.57 s) and sf1 — the raw exploded shingle stream
     // it shuffles outweighs the saved exchange; map-side dedup earns
     // its second (much smaller) shuffle. Kept: distinct-then-rekey.
-    val sh = persistTracked(df.filter(content.isNotNull)
+    val sh = Caches.track(df.filter(content.isNotNull)
       .select(source.as("src"),
         graft.functions.GraftFunctions.md5Long(content).as("h")).distinct())
     sh.as("a").join(sh.as("b"),
@@ -235,7 +228,7 @@ object Dedup {
     * once and joining against the materialization. */
   def minhashDedupKeptIds(df: DataFrame, id: Column, text: Column,
                           shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
-    val b = persistTracked(minhashBands(df, id, text, shingleWidth, bands, rowsPerBand))
+    val b = Caches.track(minhashBands(df, id, text, shingleWidth, bands, rowsPerBand))
     val dominated = b.as("a").join(b.as("b"),
         col("a.band_key") === col("b.band_key") && col("a.doc_id") > col("b.doc_id"))
       .select(col("a.doc_id").as("doc_id")).distinct()
@@ -252,7 +245,7 @@ object Dedup {
   def lshCandidatePairs(df: DataFrame, id: Column, text: Column,
                         shingleWidth: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 2): DataFrame = {
-    val b = persistTracked(minhashBands(df, id, text, shingleWidth, bands, rowsPerBand))
+    val b = Caches.track(minhashBands(df, id, text, shingleWidth, bands, rowsPerBand))
     b.as("x").join(b.as("y"),
         col("x.band_key") === col("y.band_key") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
@@ -292,7 +285,7 @@ object Dedup {
   def dedupYieldCurve(df: DataFrame, id: Column, text: Column,
                       thresholds: Seq[Double], shingleWidth: Int = 3,
                       bands: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val base = persistTracked(nearDupPairs(df, id, text, thresholds.min,
+    val base = Caches.track(nearDupPairs(df, id, text, thresholds.min,
       shingleWidth, bands, rowsPerBand))
     thresholds.sorted.map { t =>
       base.filter(col("jaccard_sim") >= t)
@@ -379,7 +372,7 @@ object Dedup {
     // spread BEFORE the shingle explode: a single-split source would
     // otherwise run the whole tokenize+shingle projection in one task
     // (the qualityRules lesson); no-op at lake scale where scans split
-    val withSh = persistTracked(shingled(graft.core.Xform.spreadToCores(df)))
+    val withSh = Caches.track(shingled(graft.core.Xform.spreadToCores(df)))
     val posts = withSh.select(col("doc_id"), explode(col("sh")).as("tok"))
     // df via hash aggregate + join-back: A/B-measured 2.9 s vs 13.5 s
     // for the window-over-token form — shingle vocab is explode-sized
@@ -395,7 +388,7 @@ object Dedup {
       .withColumn("s", count(lit(1)).over(w))
     // p = s − ⌈n·s/m⌉ + 1 without any division: rn ≤ p ⇔ ⌈ns/m⌉ ≤
     // s − rn + 1 ⇔ n·s ≤ m·(s − rn + 1) — exact integer multiplies
-    val prefix = persistTracked(ordered
+    val prefix = Caches.track(ordered
       .filter(col("s") * n <= (col("s") - col("rn") + 1) * m)
       .select(col("doc_id"), col("tok"), col("s"), col("rn")))
     // PPJoin positional filter: a prefix match at ranks (rn_x, rn_y)
@@ -606,14 +599,14 @@ object Dedup {
       s"threshold $thetaNum/$thetaDen must sit in (0, 1]")
     val (n, m) = (thetaNum.toLong, thetaDen.toLong)
     import org.apache.spark.sql.expressions.Window
-    val withSh = persistTracked(graft.core.Xform.spreadToCores(df)
+    val withSh = Caches.track(graft.core.Xform.spreadToCores(df)
       .select(id.as("doc_id"),
         array_distinct(graft.functions.ShingleHashes(tokens(text),
           shingleWidth)).as("sh")))
     val posts = withSh.select(col("doc_id"), explode(col("sh")).as("tok"))
     val dfreq = posts.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
-    val ordered = persistTracked(posts.join(dfreq, "tok")
+    val ordered = Caches.track(posts.join(dfreq, "tok")
       .withColumn("rn", row_number().over(w.orderBy(col("df"), col("tok"))))
       .withColumn("s", count(lit(1)).over(w)))
     // probe side: A's containment prefix only (rarest tokens); build
@@ -713,7 +706,7 @@ object Dedup {
   def winnowPairs(df: DataFrame, id: Column, text: Column,
                   minShared: Int = 2, window: Int = 4,
                   shingleWidth: Int = 3, maxDf: Int = 64): DataFrame = {
-    val sel = persistTracked(
+    val sel = Caches.track(
       winnowSelected(df, id, text, window, shingleWidth)
         .select(col("doc_id"), col("h")))
     val capped = sel.groupBy(col("h"))
@@ -808,7 +801,7 @@ object Dedup {
     // per round (the min-agg on x) instead of three. At lake scale the
     // per-round edge re-shuffle is the dominant cost. Tracked for
     // releaseCaches().
-    val edges = persistTracked(
+    val edges = Caches.track(
       pairs.select(a.cast("long").as("x"), b.cast("long").as("y"))
         .select(explode(array(
           struct(col("x"), col("y")),
@@ -834,7 +827,7 @@ object Dedup {
       // neighbor join and the left side), so an unpersisted recurrence
       // doubles its own subtree per round — 2^iters plan blowup. With
       // the cache, round i computes once and both references read it.
-      labels = persistTracked(
+      labels = Caches.track(
         labels.join(nbr.hint("shuffle_hash"), col("node") === col("node2"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("nl"), col("label"))).as("label")))
@@ -931,7 +924,7 @@ object Dedup {
     // Tracked persist: the exploded line table feeds the doc-frequency
     // aggregate AND the decision join-back — uncached, the scan+split
     // re-runs per consumer (released by the harness via releaseCaches).
-    val lines = persistTracked(explodeLines(df, id, text))
+    val lines = Caches.track(explodeLines(df, id, text))
     applyLineVerdicts(lines,
       lineFrequencies(lines).filter(col("n_docs") > maxDocs).select(col("h")))
   }
@@ -1022,7 +1015,7 @@ object Dedup {
     // persisted: the ranked table feeds both self-join sides and the
     // final verdict join — untracked, Spark would re-run the argmax scan
     // three times (released by the harness via releaseCaches)
-    val ranked = persistTracked(assigned.withColumn("rnk",
+    val ranked = Caches.track(assigned.withColumn("rnk",
       row_number().over(Window.partitionBy(col("cid"))
         .orderBy(col("ccos").desc, col("vec_id")))))
     val dropped = ranked.as("x").join(ranked.as("y"),
@@ -1060,7 +1053,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // persisted: the dedup verdict (whose self-join is the expensive
     // subtree) feeds both the proto re-rank and the final join
-    val sem = persistTracked(semDedup(df, id, vec, centroids, eps))
+    val sem = Caches.track(semDedup(df, id, vec, centroids, eps))
     val proto = sem.filter(col("kept"))
       .withColumn("pr",
         row_number().over(Window.partitionBy(col("cid")).orderBy(col("rnk"))))
@@ -1117,7 +1110,7 @@ object Dedup {
     // broadcast-small survivor join against a fresh corpus scan. The
     // light table is persisted so the 26-translate histogram pass runs
     // once, not once per join side
-    val hLight = persistTracked(df.select(id.as("id"), lang.as("lng"),
+    val hLight = Caches.track(df.select(id.as("id"), lang.as("lng"),
         TextAnalysis.foldLower(text).as("p"),
         call_function("div", nChars.cast("long"), lit(bucketWidth.toLong))
           .as("b"))
@@ -1255,7 +1248,7 @@ object Dedup {
     * boilerplate hash set, one doc-keyed count agg. */
   def templateDocs(df: DataFrame, id: Column, text: Column,
                    maxDocs: Long, num: Int = 1, den: Int = 2): DataFrame = {
-    val lines = persistTracked(explodeLines(df, id, text))
+    val lines = Caches.track(explodeLines(df, id, text))
     val bp = lineFrequencies(lines).filter(col("n_docs") > maxDocs)
       .select(col("h"), lit(true).as("bp"))
     lines.join(bp, Seq("h"), "left")
@@ -1293,7 +1286,7 @@ object Dedup {
     * cost is linear in token count. */
   def maskFrequentNgrams(df: DataFrame, id: Column, text: Column,
                          w: Int = 8, maxDf: Long = 2L): DataFrame = {
-    val base = persistTracked(graft.core.Xform.spreadToCores(df)
+    val base = Caches.track(graft.core.Xform.spreadToCores(df)
       .select(id.as("doc_id"),
         size(tokens(text)).cast("long").as("n_tokens"),
         graft.functions.ShingleHashes(tokensFolded(text), w).as("shs")))
@@ -1361,9 +1354,9 @@ object Dedup {
     * Shape: two distincts + one equi-join on the pair key + three
     * 1-row aggs — candidate-sized work only. */
   def pairSetRecall(cand: DataFrame, truth: DataFrame): DataFrame = {
-    val c = graft.core.Caches.track(
+    val c = Caches.track(
       cand.select(col("id1"), col("id2")).distinct())
-    val t = graft.core.Caches.track(
+    val t = Caches.track(
       truth.select(col("id1"), col("id2")).distinct())
     val shared = c.join(t, Seq("id1", "id2"))
       .agg(count(lit(1)).as("n_shared"))
@@ -1404,7 +1397,7 @@ object Dedup {
                window: Int = 2, keyPrefix: Int = 40, distPrefix: Int = 64,
                maxDist: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ranked = persistTracked(df
+    val ranked = Caches.track(df
       .filter(id.isNotNull && lang.isNotNull && text.isNotNull)
       .select(id.as("id"), lang.as("lng"),
         substring(TextAnalysis.foldLower(text), 1, distPrefix).as("p"))

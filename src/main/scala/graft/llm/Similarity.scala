@@ -545,18 +545,6 @@ object Similarity {
       corpusId, corpusVec, query, k)
   }
 
-  /** Exact k-NN join for a small query set: broadcast the queries, rank
-    * per query — one scan of the corpus regardless of |queries|. */
-  def knnJoin(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-              queries: DataFrame, queryId: Column, queryVec: Column, k: Int): DataFrame = {
-    val c = corpus.select(corpusId.as("vec_id"), corpusVec.as("cv"))
-    val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("vec_id"), CosineSimilarity(col("cv"), col("qv")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k).drop("__rn")
-  }
-
   /** Shared SQL text of a quantized-sum mean: (Σ floor(x·10⁹)) / n,
     * un-quantized once — both engines evaluate it verbatim. */
   def meanQSql(sum: String, n: String): String =

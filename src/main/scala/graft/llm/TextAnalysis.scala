@@ -1574,21 +1574,6 @@ object TextAnalysis {
       .withColumnRenamed("doc", "doc_id")
   }
 
-  /** Full per-document stats frame. */
-  def docStats(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(
-      id.as("doc_id"),
-      length(text).as("n_chars"),
-      wordCount(text).as("n_words"),
-      tokenCount(text).as("n_tokens"),
-      bpeTokenEstimate(text).as("n_bpe_tokens"),
-      punctRatio(text).as("punct_ratio"),
-      stopwordRatio(text).as("stopword_ratio"),
-      meanWordLen(text).as("mean_word_len"),
-      qualityScore(text).as("quality"),
-      langId(text).as("lang_guess"),
-      tokenSetFingerprint(text).as("fingerprint"))
-
   /** Vocabulary coverage curve: for each cutoff k, the token-mass
     * fraction the top-k most frequent (folded) types cover — the
     * tokenizer/vocab budget question ("does 10k types cover 95% of the

@@ -81,9 +81,6 @@ object FileSources {
       () => { parsed.unpersist(blocking = false); () })
   }
 
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode("overwrite").option("header", header.toString).csv(path)
 
@@ -95,14 +92,6 @@ object FileSources {
     * and predicate pushdown work as for parquet. */
   def orc(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).orc(path)
-
-  /** Streaming twin of [[orc]]: directory watch with exactly-once file
-    * tracking via the checkpoint, like [[jsonlStream]]. */
-  def orcStream(spark: SparkSession, path: String, schema: StructType,
-                maxFilesPerTrigger: Int = 1000): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .orc(path)
 
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
@@ -123,19 +112,6 @@ object FileSources {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .xml(path)
-
-  /** Streaming twin of [[xml]]: directory watch with exactly-once file
-    * tracking via the checkpoint, like [[jsonlStream]]. */
-  def xmlStream(spark: SparkSession, path: String, rowTag: String,
-                schema: StructType, maxFilesPerTrigger: Int = 1000): DataFrame =
-    spark.readStream
-      .schema(withCorruptCol(schema))
-      .option("rowTag", rowTag)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .format("xml")
-      .load(path)
 
   def writeXml(df: DataFrame, path: String, rowTag: String): Unit =
     df.write.mode("overwrite").option("rowTag", rowTag).xml(path)

@@ -17,7 +17,10 @@ import org.apache.spark.sql.Row
   * applies unchanged to a streaming DataFrame — this module adds only the
   * genuinely streaming-specific pieces: sources/sinks, watermarking,
   * output-mode plumbing, and streaming-native state (dedup within
-  * watermark, KTable-style upserts).
+  * watermark, keyed state with timers). Windows and the KTable view are
+  * the batch operators themselves: [[graft.agg.Aggregates.tumbling]]
+  * over a watermarked stream, and [[graft.agg.Aggregates.latestByKey]]
+  * run in `OutputMode.Update` (or `Complete`) into a key-upsert sink.
   *
   * Delivery semantics: micro-batch checkpoint + idempotent/transactional
   * sink = exactly-once — strictly stronger than the reference's per-record
@@ -54,40 +57,19 @@ object Streaming {
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
 
-  /** Streaming tumbling-window aggregation (reference roadmap "windowed
-    * aggregates", README.md:30-31). */
-  def tumbling(df: DataFrame, tsCol: String, watermark: String, size: String,
-               keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    tumblingChained(df.withWatermark(tsCol, watermark), tsCol, size, keys, aggs)
-
   /** Tumbling aggregation over an ALREADY-watermarked stream — the form
     * for chaining stateful operators (dedup → window, join → window):
     * Spark disallows redefining a watermark mid-stream, so the upstream
     * op owns it and this one only windows. */
   def tumblingChained(df: DataFrame, tsCol: String, size: String,
                       keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    df.groupBy(window(col(tsCol), size) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
+    graft.agg.Aggregates.tumbling(df, col(tsCol), size, keys, aggs)
 
   /** Streaming `distinct` — the transducer's task-local seen-set
     * (SURVEY.md §2.2) made fault-tolerant + bounded by watermark. */
   def distinctWithinWatermark(df: DataFrame, tsCol: String, watermark: String,
                               cols: Seq[String]): DataFrame =
     df.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark(cols)
-
-  /** KTable changelog view (reference roadmap README.md:33-34, 69):
-    * latest value per key, emitted as upserts. Run with
-    * `OutputMode.Update` + a key-upsert sink: max_by keeps the row with
-    * the greatest (event-time, tie-break) — one blind shuffle per
-    * micro-batch, no window sort. */
-  def latestByKey(df: DataFrame, keys: Seq[Column], ts: Column,
-                  valueCols: Seq[Column]): DataFrame =
-    df.groupBy(keys: _*)
-      .agg(max_by(struct(valueCols: _*), struct(ts)).as("__latest"))
-      .select(keys ++ Seq(col("__latest.*")): _*)
 
   /** Stream-stream windowed equi-join — the reference's TODO-listed join
     * family (api.clj:53-55) in its streaming form: both sides watermarked,

@@ -26,18 +26,14 @@ class BenchSpec extends SparkSpec {
 
   test("once counts the sample's jobs and stages as a listener does, off-thread and eager ones too") {
     // (label, jobs at least, query): the broadcast job runs on another
-    // thread; conformalInterval's cluster branch (threshold 0) collects
-    // its fit and runs its DriverFold probe while the frame is built,
-    // before the timed action
+    // thread; lorenz runs its DriverFold probe while the frame is built,
+    // before the timed action over the folded rows
     val cases: Seq[(String, Int, Bench.Query)] = Seq(
       ("aggregate", 1, (sp, _) => sp.range(5000).groupBy(col("id") % 7).count()),
       ("broadcast join", 2, (sp, _) => sp.range(5000).withColumn("k", col("id") % 10)
         .join(broadcast(sp.range(10).withColumnRenamed("id", "k")), "k")),
-      ("driver fold", 3, (sp, _) => graft.agg.Inference.conformalInterval(
-        sp.range(300).select(col("id").as("k"), (col("id") * 10 + col("id") % 4).as("y"),
-          col("id").as("a"), (col("id") % 4).as("b")),
-        col("y"), col("a"), col("b"), col("k") % 5 >= 2, col("k") % 5 === 0,
-        smallInputThreshold = 0L)))
+      ("driver fold", 2, (sp, _) => graft.agg.RobustStats.lorenz(
+        sp.range(300).select((col("id") % 17).as("x")), col("x"))))
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val stages = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {

@@ -740,18 +740,21 @@ class PlanSpec extends SparkSpec {
       col("doc_id"), llm.Multimodal.syntheticPayload(col("doc_id"), col("text"))),
       smallInputThreshold = threshold)
 
+  /** `body`'s result and the ids of the jobs it ran, read from the
+    * status tracker under a job group of its own. */
+  private def jobsOf[T](body: => T): (T, Array[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"plan-spec-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    val out = try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group))
+  }
+
   /** The jobs `build` runs, then the jobs, stages and tasks of one
-    * action over the frame it built, read from the status tracker
-    * under a job group each. */
+    * action over the frame it built. */
   private def buildThenRun(build: => DataFrame): (DataFrame, Int, Int, Int, Int) = {
     val sc = spark.sparkContext
-    def jobsOf[T](body: => T): (T, Array[Int]) = {
-      val group = s"plan-spec-${System.nanoTime()}"
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
-      (out, sc.statusTracker.getJobIdsForGroup(group))
-    }
     val (df, built) = jobsOf(build)
     val (_, ran) = jobsOf(df.queryExecution.toRdd.count())
     val stages = ran.toSeq.flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds.toSeq)
@@ -793,6 +796,21 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("MapPartitions") && !p.contains("Exchange") && !p.contains("Join"),
       s"the small regime must fit and score in one task:\n$p")
     assert((built, jobs, stages, tasks) == ((0, 1, 1, 1)), s"$built $jobs $stages $tasks")
+  }
+
+  test("conformal above the size threshold: the fit is the only construction-time action") {
+    val li = Tables.lineitem(spark, sf)
+    val (y, a, b) = (floor(col("l_extendedprice") * 100 + lit(0.5)),
+      floor(col("l_quantity") + lit(0.5)), floor(col("l_discount") * 100 + lit(0.5)))
+    val (train, calib) = (col("l_orderkey") % 5 >= 2, col("l_orderkey") % 5 === 0)
+    // the ols2 fit's collect, alone (AQE runs its shuffle-map stage as a job of its own)
+    val (_, fit) = jobsOf(agg.Inference.ols2(li.filter(train), y, a, b).collect())
+    val (df, built, _, _, _) = buildThenRun(
+      agg.Inference.conformalInterval(li, y, a, b, train, calib, smallInputThreshold = 0L))
+    assert(built == fit.length, s"$built construction jobs, the fit alone runs ${fit.length}")
+    val p = plan(df)
+    assert(p.contains("windowspecdefinition("),
+      s"q̂ must come from the calibration cumulate window:\n$p")
   }
 
   test("cluster quality: literal-centroid projection — no join, one cid reduce") {

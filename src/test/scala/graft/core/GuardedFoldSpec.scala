@@ -89,20 +89,6 @@ class GuardedFoldSpec extends SparkSpec {
     assert(fold == dist && fold.size == 10)
   }
 
-  test("conformalInterval: fold and distributed arms are bit-identical") {
-    // the InferenceSpec fixture: exact fit, planted residual offsets
-    val train = (1L to 30L).map(i => (i * 5 + 2, 10 * i + (i % 4), i, i % 4))
-    val calib = (0L until 9L).map(j => (j * 5, 10 * 7 + 2 + j, 7L, 2L))
-    val test0 = Seq((1L, 10L * 3 + 1 + 5, 3L, 1L),
-      (6L, 10L * 3 + 1 + 50, 3L, 1L))
-    val df = (train ++ calib ++ test0).toDF("k", "y", "a", "b")
-    // threshold 0: the folds live in the cluster branch
-    val (fold, dist) = bothArms(
-      graft.agg.Inference.conformalInterval(df, col("y"), col("a"),
-        col("b"), col("k") % 5 >= 2, col("k") % 5 === 0, smallInputThreshold = 0L))
-    assert(fold == dist && fold.size == 1)
-  }
-
   test("the boundary is exact: n rows fold at cap=n, distribute at cap=n-1") {
     val df = Seq(1L, 1L, 2L, 3L).toDF("v") // 3 distinct values
     val g = df.groupBy(col("v")).agg(count(lit(1)).as("cnt"))

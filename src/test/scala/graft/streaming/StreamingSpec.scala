@@ -1,14 +1,16 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.agg.Funnel
+import graft.agg.{Aggregates, Funnel}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
 
 /** Streaming-specific semantics: windowed aggregation with watermark,
-  * dedup within watermark, KTable-style latest-by-key upserts.
+  * dedup within watermark, KTable-style latest-by-key upserts (the
+  * windows and the KTable view are the batch [[Aggregates]] operators
+  * over a stream).
   */
 class StreamingSpec extends SparkSpec {
 
@@ -19,8 +21,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Timestamp, String, Double)]
     ms.addData((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(11), "a", 4.0), (ts(12), "b", 8.0))
-    val agg = Streaming.tumbling(ms.toDF().toDF("ts", "k", "v"),
-      "ts", "1 minute", "10 minutes", Seq(col("k")), Seq(sum(col("v")).as("s")))
+    val agg = Aggregates.tumbling(ms.toDF().toDF("ts", "k", "v").withWatermark("ts", "1 minute"),
+      col("ts"), "10 minutes", Seq(col("k")), Seq(sum(col("v")).as("s")))
     val q = agg.writeStream.format("memory").queryName("win_out").outputMode("complete").start()
     q.processAllAvailable(); q.stop()
     val out = spark.table("win_out").select("k", "s").as[(String, Double)].collect().toSet
@@ -43,8 +45,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Timestamp, Double)]
-    val agg = Streaming.tumbling(ms.toDF().toDF("ts", "v"),
-      "ts", "5 minutes", "10 minutes", Nil, Seq(sum(col("v")).as("s")))
+    val agg = Aggregates.tumbling(ms.toDF().toDF("ts", "v").withWatermark("ts", "5 minutes"),
+      col("ts"), "10 minutes", Nil, Seq(sum(col("v")).as("s")))
     val q = agg.writeStream.format("memory").queryName("late_out").outputMode("append").start()
     // batch 1: window [0,10) gets 1.0; max event time 00:25 → watermark 00:20
     ms.addData((ts(1), 1.0), (ts(25), 100.0))
@@ -162,8 +164,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Timestamp, String, Int)]
     ms.addData((ts(1), "k1", 10), (ts(5), "k1", 50), (ts(2), "k2", 20))
-    val latest = Streaming.latestByKey(ms.toDF().toDF("ts", "k", "v"),
-      Seq(col("k")), col("ts"), Seq(col("v")))
+    val latest = Aggregates.latestByKey(ms.toDF().toDF("ts", "k", "v"),
+      Seq(col("k")), col("ts"), Nil)
     val q = latest.writeStream.format("memory").queryName("kt_out").outputMode("complete").start()
     q.processAllAvailable(); q.stop()
     val out = spark.table("kt_out").select("k", "v").as[(String, Int)].collect().toMap
