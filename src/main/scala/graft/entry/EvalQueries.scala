@@ -34,13 +34,11 @@ object EvalQueries {
     // NDCG@10 / MRR / hits@10 of the SQ8 quantized retriever against
     // exact-cosine graded relevance, per 1-in-8 panel query — the
     // ORDER-quality eval beside q_ann_sq8_recall's set-quality floor;
-    // a small corpus scores in one task, a large one spreads to the cores;
-    // the SQ8 [min,max] calibration is one eager stats job per build
+    // a small corpus trains the SQ8 [min,max] calibration and scores in
+    // one lazy task; a large one trains eagerly and spreads to the cores
     "q_rank_eval" -> ((s, d) =>
       Similarity.rankingMetrics(Tables.embeddings(s, d),
-        col("vec_id"), col("embedding"),
-        Similarity.sqTrain(Tables.embeddings(s, d), col("embedding")),
-        RankK, RankMod)),
+        col("vec_id"), col("embedding"), RankK, RankMod)),
 
     // diagonal-Mahalanobis embedding outliers from the dimStats
     // calibration — zero-shuffle projection against literal μ/σ state

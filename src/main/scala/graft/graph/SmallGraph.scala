@@ -2,6 +2,11 @@ package graft.graph
 
 import graft.core.LongIndex
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, Join, JoinHint,
+  LeafNode, LogicalPlan, Project, Repartition, SHUFFLE_HASH, SubqueryAlias}
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import scala.reflect.runtime.universe.TypeTag
 
@@ -10,12 +15,11 @@ import scala.reflect.runtime.universe.TypeTag
   * [[graft.llm.Dedup.nearDupComponents]], and through [[pairTopK]]
   * [[Graph.cooccurrenceTopK]] and [[Graph.adamicAdar]]): when the input
   * is small, the whole recurrence runs imperatively inside ONE
-  * `mapPartitions` task
-  * over the raw (src, dst) pair stream — one lazy plan, one shuffle
-  * (the `repartition(1)` of ~16-byte pairs), one action, and plan depth
-  * constant in the round count (a kernel's `checkpointEvery` is moot
-  * here). Each kernel keeps only its recurrence body; this object holds
-  * the regime test, the runner, the edge loader and the pair kernel.
+  * `mapPartitions` task over the raw (src, dst) pair stream — one lazy
+  * plan, one action, and plan depth constant in the round count (a
+  * kernel's `checkpointEvery` is moot here). Each kernel keeps only its
+  * recurrence body; this object holds the regime test, the runner, the
+  * edge loader and the pair kernel.
   *
   * Why one task: per-job scheduling, not data, dominates a small graph.
   * The declarative per-layer pageRank paid ~0.25 s of driver overhead
@@ -26,34 +30,47 @@ import scala.reflect.runtime.universe.TypeTag
   * ~0.5 s of compute. A `collect_set` prep stage feeding the task was
   * no better: its boxed ObjectHashAggregate set-building was the largest
   * stage (378 ms of a 1.09 s pageRank); the loader's primitive dedup
-  * replaces it. `repartition(1)` — not `coalesce(1)` — keeps the
-  * upstream scan/join parallel and moves only the pairs. This is the
-  * last-resort `mapPartitions` case: per-partition imperative logic
-  * that Catalyst operators cannot schedule efficiently at this size.
+  * replaces it. This is the last-resort `mapPartitions` case:
+  * per-partition imperative logic that Catalyst operators cannot
+  * schedule efficiently at this size.
+  *
+  * Where the pairs come from ([[inOneTask]]): an edge plan of scans,
+  * filters, projections and equi-joins runs whole inside the task —
+  * every leaf read as one partition, every join a shuffle-hash join of
+  * those single-partition sides — so the query is one job of one stage
+  * with no exchange. Against the earlier `repartition(1)` over the
+  * planned join (a broadcast job, then the pair shuffle), the
+  * `orders ⋈ lineitem` edges of [[Graph.cooccurrenceTopK]] loaded in
+  * `Bipartite` mode measured 206-244 → 154-192 ms at sf0.01 and
+  * 749-882 → 592-678 ms at sf0.1 (`local[4]`, same edge count). Any
+  * other edge plan (no join, or an aggregate, a window, a generator:
+  * work the cores should share) still runs as planned, and
+  * `repartition(1)` moves only its pairs.
   *
   * The regime test reads the summed INPUT LEAF sizes of the edge
-  * expression at plan time — zero jobs: file sources report exact
-  * on-disk bytes, LocalRelations exact row bytes. Leaf sums are used
-  * instead of the edge plan's own estimate, which a join inflates to
-  * size(L)·size(R). A small input can in principle join-explode into a
-  * large edge set (then the single task is slow but correct); a large
-  * input never misclassifies as small. The default bound,
-  * [[MaxInputBytes]], keeps the task's in-memory adjacency to a few
-  * hundred MB; each kernel takes it as `smallGraphThreshold` so tests
-  * pin both branches (0 forces the cluster branch). Each body mirrors
-  * its cluster branch's dedup and arithmetic, so both regimes and the
-  * SQL oracles agree bit-for-bit.
+  * expression from its analyzed plan — zero jobs and no optimizer pass:
+  * file sources report exact on-disk bytes, LocalRelations exact row
+  * bytes. Leaf sums are used instead of the edge plan's own estimate,
+  * which a join inflates to size(L)·size(R). A small input can in
+  * principle join-explode into a large edge set (then the single task
+  * is slow but correct); a large input never misclassifies as small.
+  * The default bound, [[MaxInputBytes]], keeps the task's in-memory
+  * adjacency to a few hundred MB; each kernel takes it as
+  * `smallGraphThreshold` so tests pin both branches (0 forces the
+  * cluster branch). Each body mirrors its cluster branch's dedup and
+  * arithmetic, so both regimes and the SQL oracles agree bit-for-bit.
   *
   * Four non-graph kernels reuse [[isSmall]] for their own one-task
   * bodies over a `coalesce(1)` scan, each under a default bound
   * (`smallInputThreshold`, 0 forcing the cluster branch):
   *  - [[graft.llm.Dedup.jaccardJoinPrefix]]: in-task PPJoin, bounded by
   *    `Dedup.SmallJoinMaxBytes`, integral ids only;
-  *  - [[graft.llm.Similarity.rankingMetrics]]: in-task scoring and
-  *    ranking, bounded by `Similarity.SmallRankMaxBytes`, integral ids
-  *    only. Its work is quadratic: every panel query scores every
-  *    candidate, queries × candidates × dim in one task, so a byte
-  *    bound fixes that work only for a given dim and query rate;
+  *  - [[graft.llm.Similarity.rankingMetrics]]: in-task SQ8 training,
+  *    scoring and ranking, bounded by `Similarity.SmallRankMaxBytes`,
+  *    integral ids only. Its work is quadratic: every panel query
+  *    scores every candidate, queries × candidates × dim in one task,
+  *    so a byte bound fixes that work only for a given dim and query
+  *    rate;
   *  - [[graft.llm.Multimodal.cdcChunkStats]]: in-task chunk interning
   *    and per-media sums over the native chunk projection, bounded by
   *    `Multimodal.SmallCdcMaxBytes` (16 MiB, below a measured
@@ -71,12 +88,15 @@ object SmallGraph {
   val MaxInputBytes = 67108864L
 
   /** Whether `input`'s summed input-leaf size is within `threshold`
-    * bytes (plan statistics only, no job). A threshold of 0 is never
-    * met, so it forces the cluster branch even for an empty local
-    * relation, whose leaf reports 0 bytes. */
+    * bytes (analyzed-plan statistics only: no job, no optimizer pass).
+    * A threshold of 0 is never met, so it forces the cluster branch
+    * even for an empty local relation, whose leaf reports 0 bytes. */
   def isSmall(input: DataFrame, threshold: Long): Boolean =
-    threshold > 0 && input.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum <= BigInt(threshold)
+    threshold > 0 && leafBytes(input.queryExecution.analyzed) <= BigInt(threshold)
+
+  /** The summed size statistics of `plan`'s leaves. */
+  private[graft] def leafBytes(plan: LogicalPlan): BigInt =
+    plan.collectLeaves().map(_.stats.sizeInBytes).sum
 
   /** Whether every column of `keys` is integral, the key types the
     * pair kernel's long ids carry exactly. */
@@ -144,13 +164,37 @@ object SmallGraph {
                                  (body: Edges => Iterator[T]): DataFrame = {
     val session = pairs.sparkSession
     import session.implicits._
-    pairs.as[(Long, Long)]
-      .repartition(1)
+    inOneTask(pairs).as[(Long, Long)]
       .mapPartitions { it =>
         val g = load(it, mode)
         if (g.n == 0) Iterator.empty else body(g)
       }
       .toDF(names: _*)
+  }
+
+  /** `df` in one partition. A plan of leaves, filters, projections and
+    * at least one equi-join (no subquery) is rewritten to run whole in
+    * that one task: each leaf reads as one partition (`Repartition(1,
+    * shuffle = false)`) and each join carries a shuffle-hash hint, which
+    * over two single-partition sides plans no exchange. Any other plan
+    * keeps its own parallelism up to its output, which `repartition(1)`
+    * moves: a join-free edge list is one scan stage feeding the task,
+    * and an aggregate, window or generator is work the cores share. */
+  private def inOneTask(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val scanJoin = plan.exists(_.isInstanceOf[Join]) && !plan.exists { p =>
+      p.expressions.exists(SubqueryExpression.hasSubquery) || (p match {
+        case _: LeafNode | _: Filter | _: Project | _: SubqueryAlias => false
+        case j: Join => ExtractEquiJoinKeys.unapply(j).isEmpty
+        case _ => true
+      })
+    }
+    if (!scanJoin) return df.repartition(1)
+    val shj = Some(HintInfo(Some(SHUFFLE_HASH)))
+    bridge.ofRows(df, plan.transformUp {
+      case leaf: LeafNode => Repartition(1, shuffle = false, leaf)
+      case j: Join => j.copy(hint = JoinHint(shj, shj))
+    })
   }
 
   /** A rank key of [[pairTopK]], larger first, from a pair's count of

@@ -63,39 +63,12 @@ object Multimodal {
     * utf-8 content — so header parsing runs against genuine PNG/JPEG/GIF
     * byte layouts (variable JPEG segment lengths included, forcing a
     * real segment scan) without shipping binary fixtures. id % 4 == 3
-    * gets NO header: the unknown-format path. The residue formula is
-    * mirrored in the SQL oracles (entry/LlmQueries). */
-  def syntheticPayload(id: Column, content: Column): Column = {
-    val m = id
-    val w = (m % 1920 + 1).cast("int")
-    val h = ((m * 7) % 1080 + 1).cast("int")
-    val w32 = lpad(hex(w), 8, "0"); val h32 = lpad(hex(h), 8, "0")
-    val w16 = lpad(hex(w), 4, "0"); val h16 = lpad(hex(h), 4, "0")
-    // PNG: sig, IHDR len 13, "IHDR", w/h u32 BE, depth 8|16, colour-type
-    // 6 + compression/filter/interlace 0, fake CRC
-    val png = concat(lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
-      w32, h32, when(m % 2 === 0, lit("08")).otherwise(lit("10")),
-      lit("06000000" + "DEADBEEF"))
-    // JPEG: SOI, APP0 of VARIABLE length L, COM of variable length LC,
-    // then SOF0 (len 11, precision 8, h/w u16 BE, 1 component)
-    val L = (m % 8 + 16).cast("int"); val LC = (m % 5 + 4).cast("int")
-    val zeros = lit("0" * 64)
-    val app0 = concat(lit("FFE0"), lpad(hex(L), 4, "0"),
-      zeros.substr(lit(1), (L - 2) * 2))
-    val com = concat(lit("FFFE"), lpad(hex(LC), 4, "0"),
-      zeros.substr(lit(1), (LC - 2) * 2))
-    val sof = concat(lit("FFC0" + "000B" + "08"), h16, w16, lit("01" + "011100"))
-    val jpeg = concat(lit("FFD8"), app0, com, sof)
-    // GIF89a: w/h u16 LITTLE-endian, packed byte carrying colour
-    // resolution in bits 4-6, background + aspect
-    val wLe = concat(substring(w16, 3, 2), substring(w16, 1, 2))
-    val hLe = concat(substring(h16, 3, 2), substring(h16, 1, 2))
-    val gif = concat(lit("474946383961"), wLe, hLe,
-      lpad(hex((m % 8) * 16), 2, "0"), lit("0000"))
-    val hdr = when(m % 4 === 0, png).when(m % 4 === 1, jpeg)
-      .when(m % 4 === 2, gif).otherwise(lit(""))
-    concat(unhex(hdr), encode(content, "UTF-8"))
-  }
+    * (and a NULL id) gets NO header: the unknown-format path. One
+    * native expression ([[graft.functions.SyntheticPayload]], which
+    * states the layout) over a `bigint` id and a `string` content; the
+    * residue formula is mirrored in the SQL oracles (entry/LlmQueries). */
+  def syntheticPayload(id: Column, content: Column): Column =
+    graft.functions.SyntheticPayload(id, content)
 
   /** STUB pixel decode: deterministic pseudo-features from the payload's
     * LOWERCASE HEX rendering (both engines hex-render bytes identically

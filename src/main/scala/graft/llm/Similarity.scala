@@ -4,6 +4,7 @@ import graft.functions.CosineSimilarity
 import graft.functions.GraftFunctions._
 import graft.graph.SmallGraph
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1019,11 +1020,26 @@ object Similarity {
     * the two integer sums once. MRR = 1/first-relevant-system-rank
     * (over the full ranking, so it always exists).
     *
+    * Training: the SQ8 [min, max] per dimension is trained on `df`
+    * itself, the corpus being scored — [[sqTrain]]'s rule: every row
+    * counts, a NULL-id row included (it is never a query nor a
+    * candidate, but its vector is corpus), NULL elements and NULL
+    * vectors are skipped, the dimension count is the longest vector's
+    * length, and min/max order doubles as Spark's `min`/`max` do (NaN
+    * above every number, -0.0 equal to 0.0, the first of equals kept).
+    * A dimension with no non-NULL element fails the query, as
+    * [[sqTrain]] does. A candidate's reconstruction reads the trained
+    * range of its first min(length, dims) dimensions (all of them for a
+    * NULL vector under ANSI, as if its elements were NULL); a NULL
+    * element codes to bin 0 and a constant dimension (max = min) to its
+    * one value; an empty vector fails, as `element_at` does.
+    *
     * Shape: a small input with an integral id (the [[SmallGraph]]
     * regime test against `smallInputThreshold`, default
-    * [[SmallRankMaxBytes]]; 0 forces the cluster branch) scores every
-    * (query, candidate) pair in ONE task: one job, no exchange (see
-    * [[smallRanking]]). Above the bound the
+    * [[SmallRankMaxBytes]]; 0 forces the cluster branch) trains, scores
+    * every (query, candidate) pair and ranks in ONE task: one lazy job,
+    * no exchange, nothing run at construction (see [[smallRanking]]).
+    * Above the bound [[sqTrain]] runs at construction, then the
     * corpus spreads to the cores and crossJoins a BROADCAST
     * 1-in-`queryMod` panel (the hubness audit shape — run it on the
     * probe sample at lake scale), two window sorts on the same query
@@ -1037,10 +1053,15 @@ object Similarity {
     * tied on both score and vec_id (possible only with duplicated ids)
     * have no defined order: the cluster branch's window may order them
     * either way, the one task keeps input order. */
-  def rankingMetrics(df: DataFrame, id: Column, vec: Column,
-                     stats: Seq[(Int, Double, Double)], k: Int,
+  def rankingMetrics(df: DataFrame, id: Column, vec: Column, k: Int,
                      queryMod: Long,
                      smallInputThreshold: Long = SmallRankMaxBytes): DataFrame = {
+    val ids = df.select(id)
+    if (SmallGraph.isSmall(df, smallInputThreshold) && SmallGraph.integral(ids))
+      return smallRanking(df.select(id.cast("long").as("vec_id"), vec.as("v")),
+          k, queryMod)
+        .withColumn("query_id", col("query_id").cast(ids.schema.head.dataType))
+    val stats = sqTrain(df, vec)
     val mn = lit(stats.map(_._2).toArray)
     val mx = lit(stats.map(_._3).toArray)
     val disc = lit(ndcgDiscounts(k))
@@ -1059,12 +1080,6 @@ object Similarity {
             floor((x - mnd) / (mxd - mnd) * lit(256.0)).cast("long"))))
         mnd + (c.cast("double") + lit(0.5)) * (mxd - mnd) / lit(256.0)
       })
-    val ids = df.select(id)
-    if (SmallGraph.isSmall(df, smallInputThreshold) && SmallGraph.integral(ids))
-      return smallRanking(df.select(id.cast("long").as("vec_id"), vec.as("v"))
-          .filter(col("vec_id").isNotNull).withColumn("recon", recon),
-          k, queryMod)
-        .withColumn("query_id", col("query_id").cast(ids.schema.head.dataType))
     // spread: embeddings scan as one split, and the per-pair double
     // scoring would otherwise run single-task (no-op at lake scale)
     val v = graft.core.Xform.spreadToCores(df).select(id.as("vec_id"), vec.as("v"))
@@ -1112,16 +1127,89 @@ object Similarity {
         col("hits").as("hits_at_k"))
   }
 
+  /** [[sqTrain]]'s per-dimension [min, max] folded one vector at a
+    * time, in the order of Spark's `min`/`max` over doubles: NULL
+    * elements skip, NaN ranks above every number, -0.0 equals 0.0 and
+    * the first of equal values stays. The dimension count is the
+    * longest vector's length. */
+  private final class SqRange {
+    private var dims = 0
+    private var mn = new Array[Double](64)
+    private var mx = new Array[Double](64)
+    private var seen = new Array[Boolean](64)
+
+    def add(v: Array[Float], nulls: java.util.BitSet): Unit = if (v != null) {
+      if (v.length > mn.length) {
+        val len = math.max(v.length, 2 * mn.length)
+        mn = java.util.Arrays.copyOf(mn, len); mx = java.util.Arrays.copyOf(mx, len)
+        seen = java.util.Arrays.copyOf(seen, len)
+      }
+      dims = math.max(dims, v.length)
+      var d = 0
+      while (d < v.length) {
+        if (nulls == null || !nulls.get(d)) {
+          val x = v(d).toDouble
+          if (!seen(d)) { mn(d) = x; mx(d) = x; seen(d) = true }
+          else {
+            if (SQLOrderingUtil.compareDoubles(x, mn(d)) < 0) mn(d) = x
+            if (SQLOrderingUtil.compareDoubles(x, mx(d)) > 0) mx(d) = x
+          }
+        }
+        d += 1
+      }
+    }
+
+    /** Fails as [[sqTrain]] does on a dimension with no non-NULL element. */
+    def check(): Unit = {
+      val d = seen.indexWhere(!_)
+      if (d >= 0 && d < dims)
+        throw new IllegalStateException(s"SQ8 training: dimension $d has no non-NULL element")
+    }
+
+    /** `v`'s bin-center reconstruction over its first min(length, dims)
+      * dimensions, as [[rankingMetrics]]' `recon` expression evaluates
+      * it: a NULL element codes to bin 0, a constant dimension to its
+      * one value. Under ANSI a NULL vector has a NULL `size`, which
+      * `least` skips, so it reconstructs as `dims` NULL elements; an
+      * empty vector, a NULL one outside ANSI (`size` -1) and a NULL
+      * one with no trained dimension fail, their index sequence
+      * reaching past the arrays as `element_at` does. */
+    def recon(v: Array[Float], nulls: java.util.BitSet, ansi: Boolean): Array[Double] = {
+      if (if (v == null) !ansi || dims == 0 else v.isEmpty)
+        throw new ArrayIndexOutOfBoundsException(
+          s"element_at: the SQ8 reconstruction of a ${if (v == null) "NULL" else "empty"} " +
+            s"vector over $dims dimensions reads past its arrays")
+      val len = if (v == null) dims else math.min(v.length, dims)
+      val out = new Array[Double](len)
+      var d = 0
+      while (d < len) {
+        val lo = mn(d); val hi = mx(d)
+        val c =
+          if (v == null || SQLOrderingUtil.compareDoubles(hi, lo) == 0 ||
+              (nulls != null && nulls.get(d))) 0L
+          else math.min(255L, math.max(0L,
+            math.floor((v(d).toDouble - lo) / (hi - lo) * 256.0).toLong))
+        out(d) = lo + (c.toDouble + 0.5) * (hi - lo) / 256.0
+        d += 1
+      }
+      out
+    }
+  }
+
   /** One row of [[rankingMetrics]]' output. */
   final case class RankRow(query_id: Long, n_cands: Long, dcg: Double,
                            idcg: Double, ndcg: Option[Double],
                            mrr: Option[Double], hits_at_k: Long)
 
-  /** The small-input regime of [[rankingMetrics]]: every (query,
-    * candidate) pair of the (vec_id, v, recon) rows scored and ranked in
-    * ONE task. The rows stream once into primitive arrays. `cos` is the
-    * [[CosineSimilarity]] loop and `sqq` the fixed-point ADC sum over
-    * the candidate's plan-computed `recon`, term for term as the cluster
+  /** The small-input regime of [[rankingMetrics]]: the SQ8 stats
+    * trained, and every (query, candidate) pair of the (vec_id, v) rows
+    * scored and ranked, in ONE task. The rows stream once into
+    * primitive arrays while [[SqRange]] folds every row's vector into
+    * the per-dimension [min, max] (NULL-id rows count toward it, then
+    * drop); each candidate's `recon` is then built from those stats,
+    * bit for bit as the cluster branch's `transform` expression. `cos`
+    * is the [[CosineSimilarity]] loop and `sqq` the fixed-point ADC
+    * sum over the candidate's `recon`, term for term as the cluster
     * branch evaluates them (a query NULL element makes `sqq` NULL; a
     * query shorter than a candidate's recon fails as `element_at` does
     * under ANSI). The copies of a duplicated query id rank their
@@ -1139,27 +1227,30 @@ object Similarity {
     val disc = ndcgDiscounts(k)
     rows.coalesce(1).mapPartitions { it =>
       // v as primitive floats (a NULL element reads 0, as the unsafe
-      // getFloat of CosineSimilarity does) and its first NULL position
+      // getFloat of CosineSimilarity does) and its NULL positions
       val idB = Array.newBuilder[Long]; val vB = Array.newBuilder[Array[Float]]
-      val holeB = Array.newBuilder[Int]; val rcB = Array.newBuilder[Array[Double]]
+      val nullB = Array.newBuilder[java.util.BitSet]
+      val range = new SqRange
       it.foreach { r =>
-        idB += r.getLong(0)
-        var hole = Int.MaxValue
-        vB += (if (r.isNullAt(1)) null else {
+        var nulls: java.util.BitSet = null
+        val v = if (r.isNullAt(1)) null else {
           val s = r.getSeq[Any](1)
           val a = new Array[Float](s.length)
           var d = 0
           s.foreach { x =>
-            if (x == null) hole = math.min(hole, d) else a(d) = x.asInstanceOf[Float]
+            if (x != null) a(d) = x.asInstanceOf[Float]
+            else { if (nulls == null) nulls = new java.util.BitSet; nulls.set(d) }
             d += 1
           }
           a
-        })
-        holeB += hole
-        rcB += (if (r.isNullAt(2)) null else r.getSeq[Double](2).toArray)
+        }
+        range.add(v, nulls)
+        if (!r.isNullAt(0)) { idB += r.getLong(0); vB += v; nullB += nulls }
       }
-      val ids = idB.result(); val vs = vB.result()
-      val hole = holeB.result(); val recons = rcB.result()
+      val ids = idB.result(); val vs = vB.result(); val nulls = nullB.result()
+      range.check()
+      val hole = nulls.map(b => if (b == null) Int.MaxValue else b.nextSetBit(0))
+      val recons = Array.tabulate(ids.length)(i => range.recon(vs(i), nulls(i), ansi))
       val n = ids.length
       // query rows grouped by id; entry e scores copy e / n of the
       // query against candidate e % n

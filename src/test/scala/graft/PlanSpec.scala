@@ -996,31 +996,27 @@ class PlanSpec extends SparkSpec {
     graft.core.Caches.release()
   }
 
-  /** q_rank_eval's kernel over the test corpus, with its SQ8 stats
-    * trained ahead (that eager job is not the kernel's). */
-  private def rankEval(threshold: Long): (org.apache.spark.sql.SparkSession, String) => DataFrame = {
-    val emb = Tables.embeddings(spark, sf)
-    val stats = llm.Similarity.sqTrain(emb, col("embedding"))
-    (s, d) => llm.Similarity.rankingMetrics(Tables.embeddings(s, d), col("vec_id"),
-      col("embedding"), stats, 10, 20L, threshold)
-  }
+  /** q_rank_eval's kernel over the test corpus. */
+  private def rankEval(threshold: Long): DataFrame =
+    llm.Similarity.rankingMetrics(Tables.embeddings(spark, sf), col("vec_id"),
+      col("embedding"), 10, 20L, threshold)
 
   test("rank eval: corpus streams past the broadcast query panel (hubness shape)") {
     // threshold 0 forces the cluster branch so its plan stays pinned
-    val p = plan(rankEval(0L)(spark, sf))
+    val p = plan(rankEval(0L))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"the panel must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"pairing must ride the broadcast, never a cartesian:\n$p")
   }
 
-  test("rank eval below the size threshold: one job, one task, no exchange past the stats job") {
-    val p = plan(SparkEntry.queries("q_rank_eval")(spark, sf))
+  test("rank eval below the size threshold: built lazily, one job, one task, no exchange") {
+    val (df, built, jobs, stages, tasks) =
+      buildThenRun(rankEval(llm.Similarity.SmallRankMaxBytes))
+    val p = plan(df)
     assert(p.contains("MapPartitions") && !p.contains("Exchange") && !p.contains("Join"),
-      s"the small regime must score every pair in one task:\n$p")
-    val run = Bench.once(spark, sf, "q_rank_eval",
-      rankEval(llm.Similarity.SmallRankMaxBytes))
-    assert(run.error.isEmpty && run.jobs == 1 && run.stages == 1, s"$run")
+      s"the small regime must train, score and rank in one task:\n$p")
+    assert((built, jobs, stages, tasks) == ((0, 1, 1, 1)), s"$built $jobs $stages $tasks")
   }
 
   test("mask ngrams: frequent-slice equi-join, no pair joins anywhere") {
@@ -1178,18 +1174,62 @@ class PlanSpec extends SparkSpec {
   }
 
   test("item CF and adamic-adar below the size threshold score pairs in one task") {
-    // the small regime: the edge join, then the repartition(1) of the
-    // edges into one sparse-accumulator task that ranks in place — no
-    // pair unroll, no pair aggregate, no unpartitioned rank window
-    val joinExchanges = "Exchange".r.findAllIn(plan(custPart)).size
+    // the small regime: the edge join runs inside the one task — both
+    // scans read as one partition each, shuffle-hash joined with no
+    // exchange — feeding a sparse-accumulator task that ranks in place:
+    // no pair unroll, no pair aggregate, no unpartitioned rank window
     for (q <- Seq("q_item_cf", "q_adamic_adar")) {
       val p = plan(SparkEntry.queries(q)(spark, sf))
       assert(p.contains("MapPartitions"), s"$q must score in one task:\n$p")
-      assert("Exchange".r.findAllIn(p).size == joinExchanges + 1,
-        s"$q must add exactly one exchange to the edge join's:\n$p")
+      assert(p.contains("ShuffledHashJoin") && "Coalesce 1".r.findAllIn(p).size == 2 &&
+        !p.contains("Exchange"), s"$q must join its edges in the task, exchange-free:\n$p")
       assert(!p.contains("Generate") && !p.contains("ObjectHashAggregate") &&
         !p.contains("Window"), s"$q must not unroll, set-aggregate or window:\n$p")
     }
+  }
+
+  test("heavy set below the size thresholds: no construction job, one job, one stage, one task") {
+    for (q <- Seq("q_cdc_chunks", "q_item_cf", "q_adamic_adar", "q_jaccard_join",
+        "q_rank_eval", "q_conformal")) {
+      val (df, built, jobs, stages, tasks) = buildThenRun(SparkEntry.queries(q)(spark, sf))
+      val p = plan(df)
+      assert(!p.contains("Exchange"), s"$q must plan no exchange or broadcast:\n$p")
+      assert((built, jobs, stages, tasks) == ((0, 1, 1, 1)), s"$q: $built $jobs $stages $tasks")
+      graft.core.Caches.release()
+    }
+  }
+
+  test("the size test reads the analyzed plan: its leaf sum equals the optimized one") {
+    import graph.SmallGraph
+    val inputs = Seq(
+      "media" -> llm.Multimodal.asMediaTable(Tables.documents(spark, sf), col("doc_id"),
+        llm.Multimodal.syntheticPayload(col("doc_id"), col("text"))),
+      "cust-part edges" -> custPart,
+      "documents" -> Tables.documents(spark, sf),
+      "embeddings" -> Tables.embeddings(spark, sf),
+      "lineitem" -> Tables.lineitem(spark, sf))
+    for ((name, df) <- inputs) {
+      val bytes = SmallGraph.leafBytes(df.queryExecution.analyzed)
+      assert(bytes > 0 && bytes == SmallGraph.leafBytes(df.queryExecution.optimizedPlan), name)
+      assert(SmallGraph.isSmall(df, bytes.toLong) && !SmallGraph.isSmall(df, bytes.toLong - 1), name)
+      assert(!SmallGraph.isSmall(df, 0L), s"$name: threshold 0 forces the cluster branch")
+    }
+    import spark.implicits._
+    val local = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(SmallGraph.leafBytes(local.queryExecution.analyzed) == 0)
+    assert(SmallGraph.isSmall(local, 1L) && !SmallGraph.isSmall(local, 0L))
+  }
+
+  test("PlanDump renders two builds of a mapPartitions query byte-identically") {
+    val (a, b) = (SparkEntry.queries("q_conformal")(spark, sf),
+      SparkEntry.queries("q_conformal")(spark, sf))
+    val raw = (df: DataFrame) => df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(raw(a).contains("$$Lambda") && raw(a) != raw(b),
+      "the raw explains differ in lambda identity and expression ids")
+    val dump = PlanDump.render(a)
+    assert(dump == PlanDump.render(b), dump)
+    assert(dump.contains("$$Lambda,") && !dump.contains("$$Lambda$"), dump)
   }
 
   test("calibration: score and label fuse into the scan — no join anywhere") {

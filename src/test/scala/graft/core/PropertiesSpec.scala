@@ -439,6 +439,36 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("small-regime cooccurrenceTopK and adamicAdar over a joined edge frame match the cluster branch") {
+    import graft.graph.{Graph, SmallGraph}
+    import org.apache.spark.sql.DataFrame
+    // q_item_cf's edge shape: orders ⋈ lines on the order key, the
+    // (customer, part) pair projected; NULL keys on both sides, orders
+    // without lines and lines without an order
+    val orderGen = Gen.listOfN(300, Gen.zip(Gen.choose(0L, 299L),
+      Gen.option(Gen.choose(-20L, 40L))))
+    val lineGen = Gen.listOfN(900, Gen.zip(Gen.option(Gen.choose(0L, 330L)),
+      Gen.option(Gen.choose(-50L, 80L))))
+    val orders = sample(orderGen, 71).toDF("okey", "cust")
+    val lines = sample(lineGen, 72).toDF("lkey", "part")
+    val e = orders.join(lines, col("okey") === col("lkey")).select(col("cust"), col("part"))
+    val kernels: Seq[(String, Long => DataFrame)] = Seq(
+      "cf" -> (t => Graph.cooccurrenceTopK(e, col("cust"), col("part"), 40, 12L,
+        smallGraphThreshold = t)),
+      "aa" -> (t => Graph.adamicAdar(e, col("cust"), col("part"), 40, 12L,
+        smallGraphThreshold = t)))
+    for ((name, kernel) <- kernels) {
+      val small = kernel(SmallGraph.MaxInputBytes)
+      val p = small.queryExecution.executedPlan.toString
+      assert(p.contains("MapPartitions") && p.contains("ShuffledHashJoin") &&
+        !p.contains("Exchange"), s"$name must join and score in one task:\n$p")
+      val got = small.collect().toSeq.sortBy(_.getAs[Long]("rank"))
+      assert(got.size == 40, name)
+      assert(got == kernel(0L).collect().toSeq.sortBy(_.getAs[Long]("rank")), name)
+      Caches.release()
+    }
+  }
+
   test("sq8 codes stay in [0,255] and scores are finite for arbitrary vectors") {
     val vecGen = Gen.listOfN(12, Gen.listOfN(4,
       Gen.oneOf(Gen.choose(-100.0, 100.0), Gen.const(0.0), Gen.const(7.5))))

@@ -43,6 +43,7 @@ object NativeExprs {
     Native("simhash32", Seq(Toks), c => SimHash32(c(0))),
     Native("simhash16", Seq(Toks), c => SimHashN(c(0), 16)),
     Native("sum_squares", Seq(Floats), c => SumSquares(c(0))),
+    Native("synthetic_payload", Seq(LongType, StringType), c => SyntheticPayload(c(0), c(1))),
     Native("term_counts", Seq(Toks), c => TermCounts(c(0))),
     Native("text_counts", Seq(StringType), c => TextCounts(c(0))),
     Native("token_hash_buckets", Seq(StringType), c => TokenHashBuckets(c(0), 7, 13L)),
@@ -89,13 +90,15 @@ object NativeExprs {
   }
 
   /** `n` over `args`, one rendered row per `id` (or per `k` group for
-    * an aggregate), sorted by that key. No native expression returns
-    * binary, so the rendering tells every value apart, NaN and -0.0
-    * included. */
+    * an aggregate), sorted by that key. A binary value renders as hex,
+    * so the rendering tells every value apart, NaN and -0.0 included. */
   def evaluate(df: DataFrame, n: Native, args: Seq[Column]): Seq[String] = {
     val out =
       if (n.aggregate) df.groupBy("k").agg(n.build(args).as("v"))
       else df.select(df("id"), n.build(args).as("v"))
-    out.collect().toSeq.sortBy(_.getInt(0)).map(_.toString)
+    out.collect().toSeq.sortBy(_.getInt(0)).map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case x => x
+    }.mkString("[", ",", "]"))
   }
 }

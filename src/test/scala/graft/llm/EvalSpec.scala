@@ -90,13 +90,12 @@ class EvalSpec extends SparkSpec {
       (i, Array(math.cos(th).toFloat, math.sin(th).toFloat))
     }
     val df = vecs.toDF("id", "v")
-    val stats = Similarity.sqTrain(df, col("v"))
     // query 0 only: a mid-corpus query would have two EQUIDISTANT
     // neighbors (±0.12 rad) whose exact-cosine tie breaks by id while
     // ADC may order them oppositely — a legitimate ndcg < 1
     // both regimes: the single-task default and the cluster branch
     for (threshold <- Seq(Similarity.SmallRankMaxBytes, 0L)) {
-      val out = Similarity.rankingMetrics(df, col("id"), col("v"), stats,
+      val out = Similarity.rankingMetrics(df, col("id"), col("v"),
         k = 5, queryMod = 100L, threshold).collect().map(r => r.getLong(0) -> r).toMap
       assert(out.keySet == Set(0L))
       val r = out(0L)
@@ -119,9 +118,8 @@ class EvalSpec extends SparkSpec {
       (8L, vec(6).take(8)), (9L, null), (10L, vec(7)), (11L, vec(7).map(_ * 2)),
       (12L, vec(8)), (13L, vec(9)), (14L, vec(10)), (15L, vec(1)))
     val df = rows.toDF("id", "v")
-    val stats = Similarity.sqTrain(df, col("v"))
     def run(frame: org.apache.spark.sql.DataFrame, k: Int, mod: Long, threshold: Long) =
-      Similarity.rankingMetrics(frame, col("id"), col("v"), stats, k, mod, threshold)
+      Similarity.rankingMetrics(frame, col("id"), col("v"), k, mod, threshold)
         .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
     for ((k, mod) <- Seq((3, 3L), (5, 5L), (20, 7L), (0, 3L))) {
       val small = run(df, k, mod, Similarity.SmallRankMaxBytes)
@@ -144,9 +142,8 @@ class EvalSpec extends SparkSpec {
     val rows: Seq[(Long, Array[Float])] =
       (Seq(0L, 0L, 7L, 7L) ++ (1L to 14L)).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f)))
     val df = rows.toDF("id", "v")
-    val stats = Similarity.sqTrain(df, col("v"))
     def run(k: Int, threshold: Long) =
-      Similarity.rankingMetrics(df, col("id"), col("v"), stats, k, 5L, threshold)
+      Similarity.rankingMetrics(df, col("id"), col("v"), k, 5L, threshold)
         .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
     for (k <- Seq(3, 10)) {
       val small = run(k, Similarity.SmallRankMaxBytes)
@@ -154,6 +151,46 @@ class EvalSpec extends SparkSpec {
       assert(small.head(1) == 32L) // n_cands: 2 copies × 16 other rows
       assert(small == run(k, 0L), s"k=$k")
     }
+  }
+
+  test("rankingMetrics: the single task trains the SQ8 stats as the cluster branch's sqTrain does") {
+    // each frame pins one training rule: a NULL-id row whose vector is
+    // the longest and holds each dim's extreme, a constant dim
+    // (max = min), NULL elements beside values, mixed ±0.0, ±0.0 as
+    // the min, and NaN (the max of its dim)
+    def vec(seed: Int, dim: Int): Seq[Option[Float]] =
+      Seq.tabulate(dim)(d => Some(((seed * 5 + d * 3) % 13 - 6) / 4f))
+    val base: Seq[(Option[Long], Seq[Option[Float]])] =
+      (0L until 12L).map(i => (Some(i), vec(i.toInt, 6)))
+    def withDim(d: Int)(f: (Long, Option[Float]) => Option[Float]) =
+      base.map { case (i, v) => (i, v.updated(d, f(i.get, v(d)))) }
+    val frames: Seq[(String, Seq[(Option[Long], Seq[Option[Float]])])] = Seq(
+      "null id, longer vector" -> (base :+
+        ((None: Option[Long]) -> Seq.tabulate(9)(d => Some(if (d % 2 == 0) 9f else -9f)))),
+      "constant dim" -> withDim(2)((_, _) => Some(0.75f)),
+      "null elements" -> withDim(1)((i, x) => if (i % 3 == 0) None else x),
+      "signed zeros" -> withDim(3)((i, _) => Some(if (i % 2 == 0) -0.0f else 0.0f)),
+      "zero is the min" -> withDim(4)((i, x) =>
+        if (i % 4 == 1) Some(-0.0f) else if (i % 4 == 3) Some(0.0f) else x.map(math.abs(_) + 1f)),
+      "NaN" -> withDim(5)((i, x) => if (i == 7L) Some(Float.NaN) else x))
+    for ((name, rows) <- frames) {
+      val df = rows.toDF("id", "v")
+      def run(threshold: Long) = {
+        val out = Similarity.rankingMetrics(df, col("id"), col("v"), 4, 3L, threshold)
+        assert(out.queryExecution.executedPlan.toString.contains("MapPartitions") ==
+          (threshold > 0), s"$name: threshold $threshold picks its branch")
+        out.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      }
+      val small = run(Similarity.SmallRankMaxBytes)
+      assert(small.size == 4 && small == run(0L), s"$name\n$small")
+    }
+    // an empty vector, and a dim with no non-NULL element, fail both
+    val failing = Seq(
+      "empty vector" -> (base :+ (Some(20L) -> Seq.empty[Option[Float]])),
+      "all-NULL dim" -> withDim(0)((_, _) => None))
+    for ((name, rows) <- failing; threshold <- Seq(Similarity.SmallRankMaxBytes, 0L))
+      withClue(s"$name, threshold $threshold: ")(intercept[Exception](Similarity.rankingMetrics(
+        rows.toDF("id", "v"), col("id"), col("v"), 4, 3L, threshold).collect()))
   }
 
   test("pcaPower recovers a planted dominant direction with ~all variance explained") {
